@@ -180,12 +180,15 @@ class LakeDataSource extends RelationProvider with CreatableRelationProvider
   }
 
   /** Align an incoming batch-writer frame to the table's declared
-    * schema by NAME (reordering tolerated, casts applied) — a renamed
-    * or missing column fails loudly here instead of writing parquet
+    * schema by NAME (reordering tolerated, lossless up-casts applied) — a
+    * renamed or missing column, or one whose type does not up-cast to
+    * the column's (`Cast.canUpCast`: a string into a long would write
+    * nulls with ANSI off), fails loudly here instead of writing parquet
     * inconsistent with the snapshot schema that only surfaces later as
     * nulls or read-time cast errors. Mirrors GraftInsertCommand's
     * BY NAME logic. */
   private def alignToSnapshot(table: LakeTable, df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.Cast
     val fields = table.currentSnapshot.get.schema.fields
     val missing = fields.map(_.name)
       .filterNot(n => df.columns.exists(_.equalsIgnoreCase(n)))
@@ -196,6 +199,13 @@ class LakeDataSource extends RelationProvider with CreatableRelationProvider
       .filterNot(c => fields.exists(_.name.equalsIgnoreCase(c)))
     require(extra.isEmpty, s"graft-lake write: dataframe has columns not in " +
       s"the table: ${extra.mkString(", ")} (evolve the table first)")
+    val lossy = fields.flatMap { f =>
+      val from = df.schema.find(_.name.equalsIgnoreCase(f.name)).get.dataType
+      if (Cast.canUpCast(from, f.dataType)) None
+      else Some(s"${f.name} (${from.simpleString} -> ${f.dataType.simpleString})")
+    }
+    require(lossy.isEmpty, s"graft-lake write: columns do not up-cast to the " +
+      s"table's types: ${lossy.mkString(", ")} (cast them explicitly first)")
     df.select(fields.map(f =>
       org.apache.spark.sql.functions.col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
   }
@@ -276,9 +286,10 @@ class LakeCdcSink(val pipeline: CdcPipeline) extends Sink {
   * `startingVersion` is given, in which case the feed starts from that
   * committed version (0 = everything since table creation). Each
   * subsequent micro-batch is `changes(lastVersion, headVersion)` —
-  * bucket-bounded by the manifest file-diff, O(touched data) not
-  * O(table). Schema is pinned at stream start (evolved columns appear
-  * to new streams; running streams keep their declared projection). */
+  * bucket-bounded by the manifest file-diff and read in one scan,
+  * O(touched data) not O(table). Schema is pinned at stream start
+  * (evolved columns appear to new streams; running streams keep their
+  * declared projection). */
 class LakeChangeSource(ctx: SQLContext, table: LakeTable,
     startingVersion: Option[Int],
     maxVersionsPerBatch: Option[Int] = None) extends Source {
@@ -465,11 +476,12 @@ class LakeFilesRelation(ctx: SQLContext, table: LakeTable,
   *     path '<root>', readChangeFeed 'true',
   *     startingVersion '3', endingVersion '7')   -- ending optional
   * }}}
-  * The scan IS [[LakeTable.changes]] — manifest-bounded (delta-key fast
-  * path / touched-bucket diff), one row per changed key with
-  * `_change_type`; schema follows the `to` snapshot. Versions are
-  * immutable, so the relation is deterministic and safely re-plannable
-  * (an omitted endingVersion pins the head AT RELATION CREATION). */
+  * The scan IS [[LakeTable.changes]] — one scan and one two-sided fold
+  * over the manifest-bounded files (delta-key / touched-bucket tiers),
+  * one row per changed key with `_change_type`; schema follows the `to`
+  * snapshot. Versions are immutable, so the relation is deterministic
+  * and safely re-plannable (an omitted endingVersion pins the head AT
+  * RELATION CREATION). */
 class LakeChangesRelation(ctx: SQLContext, table: LakeTable,
     fromVersion: Int, toVersion: Option[Int]) extends BaseRelation with TableScan {
 

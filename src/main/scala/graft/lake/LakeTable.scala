@@ -629,7 +629,9 @@ class LakeTable(val spark: SparkSession, val root: String) {
   def read(version: Option[Int] = None): DataFrame = {
     val snap = version.map(snapshot).orElse(currentSnapshot)
       .getOrElse(sys.error(s"no table at $root"))
-    snapBucketsRead(snap, None)
+    val (morFiles, pureBase) = splitMor(snap.files)
+    if (morFiles.isEmpty) readFiles(snap, pureBase)
+    else readFiles(snap, pureBase).unionByName(reconstructRows(snap, morFiles))
   }
 
   /** Column-pruned read: only `columns` (plus, internally, the key
@@ -644,10 +646,9 @@ class LakeTable(val spark: SparkSession, val root: String) {
       .getOrElse(sys.error(s"no table at $root"))
     val bad = columns.filterNot(snap.schema.fieldNames.contains)
     require(bad.isEmpty, s"unknown columns: ${bad.mkString(", ")}")
-    val deltaBuckets = snap.files.filter(_.delta).map(_.bucket).toSet
-    if (deltaBuckets.isEmpty)
-      return readFiles(snap, snap.files).select(columns.map(col): _*)
-    val (morFiles, pureBase) = snap.files.partition(f => deltaBuckets.contains(f.bucket))
+    val (morFiles, pureBase) = splitMor(snap.files)
+    if (morFiles.isEmpty)
+      return readFiles(snap, pureBase).select(columns.map(col): _*)
     val payload = columns.filterNot(snap.keyColumns.contains)
     readFiles(snap, pureBase).select(columns.map(col): _*)
       .unionByName(reconstructRows(snap, morFiles, Some(payload))
@@ -711,31 +712,34 @@ class LakeTable(val spark: SparkSession, val root: String) {
     * image, delete rows the `from`-side image (so a consumer can key
     * its own downstream merge off either direction).
     *
-    * Scale shape, three tiers (cheapest applicable wins):
-    *  1. DELTA-KEY fast path — when every commit in the interval is a
-    *     mergeDeltas/append (its changed keys live in its own new
-    *     files) or a key-preserving maintenance op (compact/cluster/
-    *     evolve/stats), the changed-key set is bounded by the keys IN
-    *     the interval's new files. Both diff sides are then restricted
-    *     to those keys (a semi join pushed BELOW the merge-on-read
-    *     reconstruction aggregate), so the scan and the fold are
+    * One two-sided fold: the distinct files of both snapshots in scope
+    * are read in ONE scan, and a single group-by-key computes each
+    * key's `from` image (over the rows of `from`'s files) and `to` image
+    * (over `to`'s files) with the merge-on-read fold; a key whose images
+    * differ is a change. The scope, cheapest applicable wins:
+    *  1. DELTA-KEY tier — when every commit in the interval is a
+    *     mergeDeltas/append (its changed keys live in its own new files)
+    *     or a key-preserving maintenance op (compact/cluster/evolve/
+    *     stats), the changed keys are among the keys IN the interval's
+    *     new files. The scan covers those files' buckets and is
+    *     semi-joined to those keys below the fold, so the fold is
     *     O(interval batch), not O(touched buckets) — the hot streaming
-    *     case where a commit writes a few thousand keys into buckets
-    *     holding millions. A layout/meta-only interval short-circuits
-    *     to an empty feed with no scan at all.
-    *  2. TOUCHED-BUCKET diff — the manifest file-diff bounds the scan
-    *     to buckets whose file set changed (COW merge rewrites whole
+    *     case of a commit writing a few thousand keys into buckets
+    *     holding millions. A layout/meta-only interval short-circuits to
+    *     an empty feed with no scan at all.
+    *  2. TOUCHED-BUCKET tier — the manifest file-diff bounds the scan to
+    *     buckets whose file set changed (COW merge rewrites whole
     *     buckets, so its keys are not attributable to new files); an
     *     untouched bucket is byte-identical in both snapshots and is
-    *     never read. The diff reads those buckets in both versions and
-    *     full-outer-joins them on the key.
-    *  3. FULL diff — bucket routing changed in between (`rebucket`),
+    *     never read.
+    *  3. FULL tier — bucket routing changed in between (`rebucket`),
     *     where the file-diff is vacuously "everything".
     *
-    * Schema evolution between the snapshots is aligned to the `to`
-    * schema: columns missing on the `from` side read as null, so a row
-    * differing only in a new column's non-null value reports as an
-    * update. */
+    * Both sides read through the `to` schema: columns added since
+    * `from` read as null on the `from` side, widened columns up-cast, so
+    * a row differing only in a new column's non-null value reports as an
+    * update. An un-reduced `append` holding one key twice reports one
+    * row for it, the image its reconstruction folds to. */
   def changes(fromVersion: Int, toVersion: Option[Int] = None): DataFrame = {
     val from =
       try snapshot(fromVersion)
@@ -753,68 +757,39 @@ class LakeTable(val spark: SparkSession, val root: String) {
       s"changes: key columns differ (${from.keyColumns} vs ${to.keyColumns})")
     val keyCols = to.keyColumns
     val payloadCols = to.schema.fieldNames.filterNot(keyCols.contains).toSeq
-    val fastFiles =
-      if (from.nBuckets != to.nBuckets) None else intervalChangeFiles(from, to)
+    val sameLayout = from.nBuckets == to.nBuckets
+    val fastFiles = if (sameLayout) intervalChangeFiles(from, to) else None
     if (fastFiles.exists(_.isEmpty)) {
       // layout/meta-only interval (compaction, clustering, evolution,
       // stats changes): no key can differ — empty feed, zero data read
-      System.err.println(s"[lake-cdf] v${from.version}->v${to.version} " +
-        "layout/meta-only; empty feed")
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(
-          keyCols.map(n => to.schema(to.schema.fieldIndex(n))) ++
-            payloadCols.map(n => to.schema(to.schema.fieldIndex(n))) :+
-            StructField("_change_type", StringType, nullable = true)))
+        StructType((keyCols ++ payloadCols).map(n => to.schema(to.schema.fieldIndex(n))) :+
+          StructField("_change_type", StringType, nullable = true)))
     }
-    val (oldDf, newDf) =
-      if (from.nBuckets != to.nBuckets) (snapBucketsRead(from, None), snapBucketsRead(to, None))
-      else fastFiles match {
-        case Some(candFiles) =>
-          // delta-key fast path: only keys present in the interval's own
-          // new files can have changed; restrict BOTH sides to them
-          // (semi join pushed below MoR reconstruction), and only their
-          // buckets. Keys are read from just the key columns of the new
-          // files — O(interval batch) bytes.
-          val buckets = candFiles.map(_.bucket).toSet
-          val keySchema = StructType(
-            keyCols.map(n => to.schema(to.schema.fieldIndex(n))))
-          val keyDf = manifestParquetDf(keySchema, candFiles.map(_.path))
-          System.err.println(s"[lake-cdf] delta-key fast path " +
-            s"v${from.version}->v${to.version}: files=${candFiles.size} " +
-            s"buckets=${buckets.size}/${to.nBuckets}")
-          (snapBucketsRead(from, Some(buckets), Some(keyDf)),
-            snapBucketsRead(to, Some(buckets), Some(keyDf)))
-        case None =>
-          val fromPaths = from.files.map(_.path).toSet
-          val toPaths = to.files.map(_.path).toSet
-          val touched = (to.files.filterNot(f => fromPaths(f.path)) ++
-            from.files.filterNot(f => toPaths(f.path))).map(_.bucket).toSet
-          System.err.println(s"[lake-cdf] buckets=${touched.size}/${to.nBuckets} " +
-            s"v${from.version}->v${to.version}")
-          (snapBucketsRead(from, Some(touched)), snapBucketsRead(to, Some(touched)))
-      }
-    // old side aligned to the to-schema (evolution: absent columns read
-    // null; widened columns up-cast — lossless by evolveSchema's rule)
-    val oldAligned = payloadCols.foldLeft(oldDf) { (d, c) =>
-      val toType = to.schema(c).dataType
-      if (!d.columns.contains(c)) d.withColumn(c, lit(null).cast(toType))
-      else if (d.schema(c).dataType != toType) d.withColumn(c, col(c).cast(toType))
-      else d
+    val buckets: Option[Set[Int]] =
+      if (!sameLayout) None
+      else Some(fastFiles.getOrElse {
+        val fromPaths = from.files.map(_.path).toSet
+        val toPaths = to.files.map(_.path).toSet
+        to.files.filterNot(f => fromPaths(f.path)) ++ from.files.filterNot(f => toPaths(f.path))
+      }.map(_.bucket).toSet)
+    def inScope(s: Snapshot) = s.files.filter(f => buckets.forall(_.contains(f.bucket)))
+    val (fromFiles, toFiles) = (inScope(from), inScope(to))
+    val in = foldInput(to.schema, Seq("_o" -> fromFiles, "_n" -> toFiles))
+    // delta-key tier: only keys in the interval's own new files can have
+    // changed — their key columns are O(interval batch) bytes
+    val keyed = fastFiles.fold(in) { cand =>
+      val keySchema = StructType(keyCols.map(n => to.schema(to.schema.fieldIndex(n))))
+      in.join(manifestParquetDf(keySchema, cand.map(_.path)), keyCols, "left_semi")
     }
-    def sided(df: DataFrame, side: String) = df.select(
-      struct(keyCols.map(col): _*).as("_k"),
-      struct(payloadCols.map(col): _*).as(side))
-    val j = sided(oldAligned, "_o").join(sided(newDf, "_n"), Seq("_k"), "full_outer")
-    val img = when(col("_n").isNull, col("_o")).otherwise(col("_n"))
-    j.withColumn("_change_type",
-        when(col("_o").isNull, lit("insert"))
-          .when(col("_n").isNull, lit("delete"))
-          .when(!(col("_o") <=> col("_n")), lit("update")))
+    val (o, n) = (col("_o"), col("_n"))
+    foldImages(keyed, keyCols, payloadCols, (fromFiles ++ toFiles).exists(_.patch), Seq("_o", "_n"))
+      .withColumn("_change_type", when(o <=> n, lit(null))
+        .when(o.isNull, lit("insert")).when(n.isNull, lit("delete")).otherwise(lit("update")))
       .filter(col("_change_type").isNotNull)
-      .withColumn("_img", img)
-      .select(keyCols.map(c => col(s"_k.$c").as(c)) ++
-        payloadCols.map(c => col(s"_img.$c").as(c)) :+ col("_change_type"): _*)
+      .select(keyCols.map(col) ++ payloadCols.map(c => coalesce(n, o).getField(c).as(c)) :+
+        col("_change_type"): _*)
   }
 
   /** Durable change-feed consumer position: the newest table version
@@ -981,26 +956,6 @@ class LakeTable(val spark: SparkSession, val root: String) {
     Some(buf.result())
   }
 
-  /** read() restricted to a bucket subset of a given snapshot (None =
-    * all buckets); MoR buckets reconstruct, pure-base buckets scan.
-    * `keyFilter` (key-column frame) semi-join-restricts the rows — the
-    * restriction is applied BELOW the MoR reconstruction aggregate
-    * (sound: the fold groups by key, so dropping other keys' input
-    * rows drops exactly their groups), which keeps the fold O(filter)
-    * instead of O(bucket). */
-  private def snapBucketsRead(snap: Snapshot, buckets: Option[Set[Int]],
-      keyFilter: Option[DataFrame] = None): DataFrame = {
-    val fs = buckets.map(b => snap.files.filter(f => b.contains(f.bucket)))
-      .getOrElse(snap.files)
-    def restrict(df: DataFrame): DataFrame =
-      keyFilter.map(k => df.join(k, snap.keyColumns, "left_semi")).getOrElse(df)
-    val deltaBuckets = fs.filter(_.delta).map(_.bucket).toSet
-    if (deltaBuckets.isEmpty) return restrict(readFiles(snap, fs))
-    val (morFiles, pureBase) = fs.partition(f => deltaBuckets.contains(f.bucket))
-    restrict(readFiles(snap, pureBase))
-      .unionByName(reconstructRows(snap, morFiles, keyFilter = keyFilter))
-  }
-
   /** Bucket-pruned point lookup: read only the buckets that can hold
     * the given key tuples (the key hash is computed driver-side with
     * the SAME murmur3 expression the writers bucket by), then filter to
@@ -1029,8 +984,7 @@ class LakeTable(val spark: SparkSession, val root: String) {
       keys.map(Row.fromSeq).asJava, keySchema)
     val files = snap.files.filter(f => buckets.contains(f.bucket))
     System.err.println(s"[lake-lookup] buckets=${buckets.size}/${snap.nBuckets} files=${files.size}/${snap.files.size}")
-    val deltaBuckets = files.filter(_.delta).map(_.bucket).toSet
-    val (morFiles, pureBase) = files.partition(f => deltaBuckets.contains(f.bucket))
+    val (morFiles, pureBase) = splitMor(files)
     val rows =
       if (morFiles.isEmpty) readFiles(snap, pureBase)
       else readFiles(snap, pureBase)
@@ -1072,8 +1026,7 @@ class LakeTable(val spark: SparkSession, val root: String) {
   private[graft] def pruneForPredicate(snap: Snapshot,
       e: org.apache.spark.sql.catalyst.expressions.Expression)
       : (Seq[DataFile], Seq[DataFile], Int) = {
-    val deltaBuckets = snap.files.filter(_.delta).map(_.bucket).toSet
-    val (morFiles, pureBase) = snap.files.partition(f => deltaBuckets.contains(f.bucket))
+    val (morFiles, pureBase) = splitMor(snap.files)
     val keptBase = pureBase.filter { f =>
       StatsPruner.mayMatch(e, StatsPruner.FileStats(
         f.stats.get, f.nulls.get,
@@ -1121,12 +1074,19 @@ class LakeTable(val spark: SparkSession, val root: String) {
     * on the commit/reconstruction paths (guide §6: manifest metadata
     * exists precisely to avoid listing). Same scan machinery after
     * resolution (vectorized parquet reader, pushdown, codegen). */
-  private[lake] def manifestParquetDf(schema: StructType, relPaths: Seq[String]): DataFrame = {
+  private[lake] def manifestParquetDf(schema: StructType, relPaths: Seq[String]): DataFrame =
+    statusScan(schema, fileStatuses(relPaths))
+
+  private def fileStatuses(relPaths: Seq[String]): Array[org.apache.hadoop.fs.FileStatus] = {
+    val fsys = fs
+    relPaths.map(p => fsys.getFileStatus(new Path(root, p))).toArray
+  }
+
+  private def statusScan(schema: StructType,
+      statuses: Array[org.apache.hadoop.fs.FileStatus]): DataFrame = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    val fsys = fs
-    val statuses = relPaths.map(p => fsys.getFileStatus(new Path(root, p))).toArray
     val index = new FileIndex {
       override def rootPaths: Seq[Path] = Seq(new Path(root))
       override def listFiles(
@@ -1154,61 +1114,83 @@ class LakeTable(val spark: SparkSession, val root: String) {
     else
       manifestParquetDf(snap.schema, files.map(_.path))
 
-  /** Merge-on-read reconstruction: base rows overlaid with delta rows.
-    * When every delta row is a FULL row, the last writer (greatest
-    * commit seq) wins per key and deletes drop out — one LastByOffset
-    * ObjectHashAggregate. When any contributing file carries PARTIAL
-    * (patch-masked) rows, reconstruction folds each key's contributions
-    * in seq order instead (PatchFoldBySeq — LWW would drop the unmasked
-    * fields of the last patch). One scan per contributing commit (files
-    * of a commit share `seq`); partial aggregation keeps hot keys
-    * combine-side; the per-key buffer is bounded by the compaction
-    * threshold. */
+  /** Buckets with deltas must be reconstructed; the rest hold final
+    * rows: (files of delta-carrying buckets, files of the others). */
+  private def splitMor(files: Seq[DataFile]): (Seq[DataFile], Seq[DataFile]) = {
+    val deltaBuckets = files.filter(_.delta).map(_.bucket).toSet
+    files.partition(f => deltaBuckets.contains(f.bucket))
+  }
+
+  /** Input of the merge-on-read fold: every file of `sides` — base,
+    * delta and patch alike — in ONE scan through the patch-delta schema.
+    * Base rows read `operation` as 'r'; files without a mask read
+    * `_patch_mask` as null. Each side adds a column holding the commit
+    * seq of the row's file on that side, null where the file is not on
+    * it, looked up by `_metadata.file_path` through
+    * [[graft.functions.FileSeq]]: O(1) per row, and neither the plan nor
+    * its generated classes depend on how many commits the files span or
+    * on their seqs, so the codegen cache hits from commit to commit. The
+    * seq cannot live in the data, as an OCC rebase re-stamps it after the
+    * write. Each side's map holds every scanned path, keyed as the scan
+    * prints it; a row of a file no map holds fails the query rather than
+    * fold as absent. */
+  private def foldInput(schema: StructType, sides: Seq[(String, Seq[DataFile])]): DataFrame = {
+    val maskType = ArrayType(StringType, containsNull = false)
+    val scanSchema = StructType(schema.fields ++ Seq(
+      StructField("operation", StringType, nullable = true),
+      StructField("_patch_mask", maskType, nullable = true)))
+    val paths = sides.flatMap(_._2.map(_.path)).distinct
+    val statuses = fileStatuses(paths)
+    // `_metadata.file_path` re-parses the status path's string form
+    val scanPath = paths.zip(statuses.map(s => new Path(s.getPath.toString).toUri.toString))
+    // bound once above the scan: `_metadata` referenced from stacked
+    // projections is not pruned, and the scan then reads every metadata
+    // field, row_index included
+    sides.foldLeft(statusScan(scanSchema, statuses)
+        .withColumn("_file", col("_metadata.file_path"))
+        .withColumn("operation", coalesce(col("operation"), lit("r")))) {
+      case (d, (name, fs0)) =>
+        val onSide = fs0.map(f => f.path -> f.seq.toLong).toMap
+        d.withColumn(name, graft.functions.FileSeq.seqOf(col("_file"),
+          scanPath.map { case (p, key) => key -> onSide.getOrElse(p, -1L) }.toMap, root))
+    }.drop("_file")
+  }
+
+  /** Merge-on-read fold of [[foldInput]] rows: per key, one image column
+    * per seq column (same name) — the payload struct the rows with a
+    * non-null seq there reconstruct, null where the key is deleted or
+    * absent. When every delta row is a FULL row the last writer
+    * (greatest seq) wins — one LastByOffset ObjectHashAggregate. When any
+    * file carries PARTIAL (patch-masked) rows the key's rows fold in seq
+    * order instead (PatchFoldBySeq — LWW would drop the unmasked fields
+    * of the last patch). Partial aggregation keeps hot keys combine-side;
+    * the per-key buffer is bounded by the compaction threshold. */
+  private def foldImages(in: DataFrame, keyCols: Seq[String], payloadCols: Seq[String],
+      anyPatch: Boolean, seqCols: Seq[String]): DataFrame = {
+    import graft.functions.{LastByOffset, PatchFoldBySeq}
+    val keys = keyCols.map(col)
+    val fold: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
+      if (anyPatch) PatchFoldBySeq.patchFoldBySeq(
+        struct((payloadCols ++ Seq("operation", "_patch_mask")).map(col): _*), _)
+      else LastByOffset.lastByOffset(struct((payloadCols :+ "operation").map(col): _*), _)
+    val folds = seqCols.map(s => fold(col(s)).as(s))
+    val folded = in.groupBy(keys: _*).agg(folds.head, folds.tail: _*)
+    if (anyPatch) folded // the patch fold is already null for a deleted key
+    else folded.select(keys ++ seqCols.map(s => when(col(s"$s.operation") =!= "d",
+      struct(payloadCols.map(c => col(s"$s.$c")): _*)).as(s)): _*)
+  }
+
+  /** Current rows of the given (delta-carrying) buckets' files: the
+    * [[foldImages]] reconstruction over one scan. */
   private def reconstructRows(snap: Snapshot, files: Seq[DataFile],
-      payloadSubset: Option[Seq[String]] = None,
-      keyFilter: Option[DataFrame] = None): DataFrame = {
+      payloadSubset: Option[Seq[String]] = None): DataFrame = {
     val keyCols = snap.keyColumns
     val payloadCols = payloadSubset.getOrElse(
       snap.schema.fieldNames.filterNot(keyCols.contains).toSeq)
-    val anyPatch = files.exists(_.patch)
-    val maskType = ArrayType(StringType, containsNull = false)
-    val deltaSchema = StructType(
-      snap.schema.fields :+ StructField("operation", StringType, nullable = true))
-    val patchSchema = StructType(
-      deltaSchema.fields :+ StructField("_patch_mask", maskType, nullable = true))
-    val parts = files.groupBy(f => (f.seq, f.delta, f.patch)).toSeq.map {
-      case ((seq, isDelta, isPatch), fs0) =>
-        val paths = fs0.map(_.path)
-        val base =
-          if (isPatch)
-            manifestParquetDf(patchSchema, paths)
-          else if (isDelta)
-            manifestParquetDf(deltaSchema, paths)
-              .withColumn("_patch_mask", lit(null).cast(maskType))
-          else
-            manifestParquetDf(snap.schema, paths)
-              .withColumn("operation", lit("r"))
-              .withColumn("_patch_mask", lit(null).cast(maskType))
-        base.withColumn("_seq", lit(seq.toLong))
-    }
-    val all0 = parts.reduce(_ unionByName _)
-    // key restriction below the fold: sound because the fold groups by
-    // key — dropping other keys' input rows drops exactly their groups
-    val all = keyFilter.map(k => all0.join(k, keyCols, "left_semi")).getOrElse(all0)
-    if (!anyPatch) {
-      all.groupBy(keyCols.map(col): _*)
-        .agg(graft.functions.LastByOffset.lastByOffset(
-          struct((payloadCols :+ "operation").map(col): _*), col("_seq")).as("_w"))
-        .filter(col("_w.operation") =!= "d")
-        .select(keyCols.map(col) ++ payloadCols.map(c => col(s"_w.$c").as(c)): _*)
-    } else {
-      all.groupBy(keyCols.map(col): _*)
-        .agg(graft.functions.PatchFoldBySeq.patchFoldBySeq(
-          struct((payloadCols ++ Seq("operation", "_patch_mask")).map(col): _*),
-          col("_seq")).as("_w"))
-        .filter(col("_w").isNotNull)
-        .select(keyCols.map(col) ++ payloadCols.map(c => col(s"_w.$c").as(c)): _*)
-    }
+    foldImages(foldInput(snap.schema, Seq("_seq" -> files)), keyCols, payloadCols,
+        files.exists(_.patch), Seq("_seq"))
+      .filter(col("_seq").isNotNull)
+      .select(keyCols.map(col) ++ payloadCols.map(c => col(s"_seq.$c").as(c)): _*)
   }
 
   // ------------------------------------------------------------ write
@@ -1394,7 +1376,7 @@ class LakeTable(val spark: SparkSession, val root: String) {
     * readers keep snapshot isolation and time travel still reaches the
     * pre-refresh versions. `changes()` across an overwrite interval
     * falls back to the full-state diff (an overwrite can delete any
-    * key, so the delta-key fast path correctly refuses it).
+    * key, so the delta-key tier correctly refuses it).
     *
     * Publish is SINGLE-WRITER (no OCC rebase): an overwrite that lost a
     * version race cannot silently rebase — it would discard the racing

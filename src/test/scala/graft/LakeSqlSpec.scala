@@ -264,6 +264,24 @@ class LakeSqlSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(t.read().count() == 20) // nothing from the failed writes landed
   }
 
+  test("batch writer up-casts losslessly; a lossy cast fails instead of writing nulls") {
+    val root = Scratch.dir("lake-sql-write-cast")
+    rows(0, 10).write.format("graft-lake")
+      .option("keys", "id").option("nBuckets", "2").save(root)
+    val t = new LakeTable(spark, root)
+    // int → long up-casts
+    spark.range(10, 20).select(col("id"), (col("id") * 10).cast("int").as("v"))
+      .write.format("graft-lake").mode("append").save(root)
+    assert(t.read().filter(col("id") === 15L).head.getLong(1) == 150L)
+    // string → long would read "x" as null with ANSI off: rejected
+    val lossy = intercept[Exception] {
+      spark.range(20, 30).select(col("id"), lit("x").as("v"))
+        .write.format("graft-lake").mode("append").save(root)
+    }
+    assert(lossy.getMessage.contains("v (string -> bigint)"))
+    assert(t.read().count() == 20)
+  }
+
   test("history view: the commit audit log as a SQL relation") {
     val t = newTable(statsCols = Nil)
     t.append(rows(0, 50), "c0", 0L)
