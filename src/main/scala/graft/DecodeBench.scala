@@ -67,14 +67,9 @@ object DecodeBench {
       "decode_reduce" -> (() => sink(EnvelopeDecoder.toDeltas(
         EnvelopeDecoder.decodeRelational(raw, schema,
           DecodeOptions(strict = false, validate = false)), schema))),
-      // strict apply stage, declarative (window lag + assert_true +
-      // LastByOffset) vs the pre-round-4 object-mode baseline
-      // (groupByKey.flatMapGroups + per-key sort) — same strict decode in
-      // front of both, so the delta isolates the apply-stage shape
+      // strict apply stage (window lag + assert_true + LastByOffset); its
+      // A/B against the object-mode flatMapGroups walker is in BENCH.md
       "strict_deltas_window" -> (() => sink(graft.apply.CdcApply.strictDeltas(
-        EnvelopeDecoder.decodeRelational(raw, schema,
-          DecodeOptions(strict = true, validate = false)), schema))),
-      "strict_deltas_flatmap" -> (() => sink(graft.apply.CdcApply.strictDeltasFlatMapGroups(
         EnvelopeDecoder.decodeRelational(raw, schema,
           DecodeOptions(strict = true, validate = false)), schema))))
 

@@ -147,46 +147,6 @@ object CdcApply {
         col("_first.before").as("_first_before")): _*)
   }
 
-  /** BENCH-ONLY baseline: the pre-round-4 object-mode strictDeltas
-    * (groupByKey.flatMapGroups + per-key array sort — the optimizer-
-    * opaque boundary the declarative [[strictDeltas]] replaced). Kept so
-    * graft.DecodeBench can A/B the two shapes in one JVM; never called
-    * from the pipeline. */
-  def strictDeltasFlatMapGroups(events: DataFrame, schema: CdcSchema): DataFrame = {
-    import org.apache.spark.sql.types._
-    val payloadType = schema.structType
-    val keyNames = schema.keyNames
-    val payloadNames = payloadType.fieldNames.filterNot(keyNames.contains).toSeq
-    val outSchema = StructType(
-      schema.keyColumns.map(c => StructField(c.name, c.dataType, c.nullable)) ++
-      payloadNames.map(n => payloadType(payloadType.fieldIndex(n)).copy(nullable = true)) ++
-      Seq(StructField("operation", StringType, nullable = false),
-        StructField("offset", LongType, nullable = false),
-        StructField("n_events", LongType, nullable = false),
-        StructField("_first_op", StringType, nullable = false),
-        StructField("_first_before", payloadType, nullable = true)))
-    implicit val enc = Encoders.row(outSchema)
-    val payloadIdx = payloadNames.map(payloadType.fieldIndex)
-
-    events.groupByKey(_.getString(IKey))(Encoders.STRING)
-      .flatMapGroups { (key: String, it: Iterator[Row]) =>
-        val evs = it.toArray.sortBy(_.getLong(IOffset))
-        validateTransitions(key, evs)
-        val first = evs.head
-        val last = evs.last
-        val pk = last.getStruct(IPk)
-        val payload: Seq[Any] =
-          if (last.isNullAt(IAfter)) Seq.fill(payloadIdx.length)(null)
-          else { val a = last.getStruct(IAfter); payloadIdx.map(a.get) }
-        val firstBefore =
-          if (first.isNullAt(IBefore)) null else first.getStruct(IBefore)
-        Iterator.single(Row.fromSeq(
-          (0 until pk.length).map(pk.get) ++ payload ++
-          Seq(last.getString(IOperation), last.getLong(IOffset), evs.length.toLong,
-            first.getString(IOperation), firstBefore)))
-      }
-  }
-
   /** Mongo strict MERGE-ready deltas: compose each key's in-batch patch
     * chain (reference applyMongoPatch semantics, :500-524) into ONE net
     * delta, so the lake MERGE can finish the job against only the
@@ -288,31 +248,6 @@ object CdcApply {
           Seq(outOp, last.getLong(IOffset), evs.length.toLong,
             first.getString(IOperation), outMask)))
       }
-  }
-
-  /** Adjacent-pair chain checks only (the first event's precondition is
-    * validated downstream against the snapshot). */
-  private def validateTransitions(key: String, evs: Array[Row]): Unit = {
-    def img(r: Row, idx: Int): Seq[Any] =
-      if (r.isNullAt(idx)) null else r.getStruct(idx).toSeq.dropRight(1)
-    var i = 1
-    while (i < evs.length) {
-      val prev = evs(i - 1); val next = evs(i)
-      next.getString(IOperation) match {
-        case OpCreate | OpRead =>
-          if (!prev.isNullAt(IAfter))
-            throw new IllegalStateException(
-              s"key '$key': expected previous value to be null for operation 'c'/'r' at offset ${next.getLong(IOffset)}")
-        case OpUpdate | OpDelete =>
-          if (prev.isNullAt(IAfter) || next.isNullAt(IBefore) ||
-              img(prev, IAfter) != img(next, IBefore))
-            throw new IllegalStateException(
-              s"key '$key': expected previous value to equal next before value at offset ${next.getLong(IOffset)}")
-        case other =>
-          throw new IllegalStateException(s"key '$key': unknown operation '$other'")
-      }
-      i += 1
-    }
   }
 
   /** Strict apply: offset-ordered chain validation per key.

@@ -68,6 +68,7 @@ import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DateType,
   *    bounding the read tax.
   */
 class LakeTable(val spark: SparkSession, val root: String) {
+  import LakeTable.{AppendOnly, Exclusive, Fold, Rebase, Rewrites}
 
   private val mapper = new ObjectMapper()
   private def fs: FileSystem = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -249,7 +250,7 @@ class LakeTable(val spark: SparkSession, val root: String) {
   }
 
   private def writeSnapshot(s: Snapshot): Unit = {
-    val hook = preCommitHook; preCommitHook = () => (); hook()
+    firePreCommitHook()
     require(s.manifests.forall(_.path.nonEmpty),
       "BUG: committing a snapshot with an unmaterialized legacy manifest")
     val lineage: JsonNode = s.lineage.orNull
@@ -318,24 +319,25 @@ class LakeTable(val spark: SparkSession, val root: String) {
   }
 
   /** Test seam for commit-race injection: fires ONCE immediately before
-    * the next snapshot publish on this instance, then resets (so a
-    * rebase retry doesn't re-fire it). Specs use it to interleave a
+    * the next snapshot or tag publish on this instance, then resets (so
+    * a rebase retry doesn't re-fire it). Specs use it to interleave a
     * competing writer's commit inside this writer's race window. */
   private[graft] var preCommitHook: () => Unit = () => ()
 
+  private def firePreCommitHook(): Unit = {
+    val hook = preCommitHook; preCommitHook = () => (); hook()
+  }
+
   /** Validate that a commit built against `base` may be REBASED onto the
-    * new head `cur` without changing its meaning; throws
-    * [[ConcurrentCommitException]] otherwise. `ourBuckets = Some(b)`
-    * marks a copy-on-write commit that REWRITES those buckets — it
-    * conflicts with any interim commit touching them (the interim
-    * writer's files would be silently dropped from the snapshot: the
-    * lost-update anomaly). `None` marks an append-only commit (delta or
-    * base file additions), which serializes AFTER any interim commit by
-    * construction — merge-on-read reconstruction orders by commit seq,
-    * and the rebase re-stamps the new files with the final version. */
-  private def rebaseCheck(base: Snapshot, cur: Snapshot,
-      ourBuckets: Option[Set[Int]],
-      allowedOps: Option[Set[String]] = None): Unit = {
+    * new head `cur` under `policy` without changing its meaning; throws
+    * [[ConcurrentCommitException]] otherwise. Schema, key and layout
+    * changes, rollbacks and commits of unknown provenance always
+    * conflict. A [[LakeTable.Rewrites]] commit also conflicts with any
+    * interim commit touching its buckets (the interim writer's files
+    * would be silently dropped from the snapshot: the lost-update
+    * anomaly); a [[LakeTable.Fold]] composes only with
+    * [[maintenanceComposableOps]]. */
+  private def rebaseCheck(base: Snapshot, cur: Snapshot, policy: Rebase): Unit = {
     def conflict(msg: String): Nothing = throw new ConcurrentCommitException(
       s"concurrent commit conflict (base v${base.version} -> head v${cur.version}): $msg")
     if (cur.schema != base.schema) conflict("schema changed concurrently")
@@ -351,57 +353,22 @@ class LakeTable(val spark: SparkSession, val root: String) {
         .getOrElse("")
       if (op == "rebucket" || op == "rollback" || op.isEmpty)
         conflict(s"interim commit v$v is ${if (op.isEmpty) "of unknown provenance" else op}")
-      allowedOps.foreach { ok =>
-        if (!ok(op)) conflict(s"interim commit v$v ($op) is not composable " +
-          "with this maintenance rewrite")
-      }
-      ourBuckets.foreach { mine =>
-        val prevPaths = prev.files.map(_.path).toSet
-        val curPaths = s.files.map(_.path).toSet
-        val touched = (s.files.filterNot(f => prevPaths(f.path)) ++
-          prev.files.filterNot(f => curPaths(f.path))).map(_.bucket).toSet
-        val overlap = touched.intersect(mine)
-        if (overlap.nonEmpty) conflict(s"interim commit v$v ($op) touched bucket(s) " +
-          s"${overlap.toSeq.sorted.take(8).mkString(",")} this commit also rewrites")
+      policy match {
+        case Fold if !maintenanceComposableOps(op) =>
+          conflict(s"interim commit v$v ($op) is not composable with this maintenance rewrite")
+        case Rewrites(mine) =>
+          val prevPaths = prev.files.map(_.path).toSet
+          val curPaths = s.files.map(_.path).toSet
+          val touched = (s.files.filterNot(f => prevPaths(f.path)) ++
+            prev.files.filterNot(f => curPaths(f.path))).map(_.bucket).toSet
+          val overlap = touched.intersect(mine)
+          if (overlap.nonEmpty) conflict(s"interim commit v$v ($op) touched bucket(s) " +
+            s"${overlap.toSeq.sorted.take(8).mkString(",")} this commit also rewrites")
+        case _ =>
       }
       prev = s
       v += 1
     }
-  }
-
-  /** Publish `build(base)` with optimistic-concurrency retry: losing the
-    * version race triggers [[rebaseCheck]] against the new head and, if
-    * sound, an O(metadata) rebase — the already-written data files are
-    * re-stamped with the final commit seq and the snapshot is rebuilt;
-    * no data is rewritten. `replayKey` re-applies the idempotence check
-    * against the head (a racing writer may have committed the SAME
-    * batch — dual drivers — in which case the rebase degenerates to the
-    * no-op replay and this writer's staged files become vacuum-able
-    * orphans). */
-  private def publishOptimistic(base0: Snapshot, build: Snapshot => Snapshot,
-      ourBuckets: Option[Set[Int]], replayKey: Option[(String, Long)],
-      allowedOps: Option[Set[String]] = None): Snapshot = {
-    var base = base0
-    var attempt = build(base)
-    var tries = 0
-    while (tries <= 10) {
-      try { writeSnapshot(attempt); return attempt }
-      catch {
-        case e: ConcurrentCommitException =>
-          tries += 1
-          if (tries > 10) throw e
-          val head =
-            try currentSnapshot.getOrElse(throw e)
-            catch { case scala.util.control.NonFatal(_) => throw e }
-          for ((cp, b) <- replayKey)
-            if (head.commits.get(cp).exists(_ >= b)) return head.copy(lineage = None)
-          rebaseCheck(base, head, ourBuckets, allowedOps)
-          System.err.println(s"[lake-occ] rebasing onto v${head.version} (attempt $tries)")
-          base = head
-          attempt = build(base)
-      }
-    }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Interim ops a FOLDED maintenance rewrite (compact/cluster/zorder)
@@ -414,26 +381,6 @@ class LakeTable(val spark: SparkSession, val root: String) {
     * rewrites or re-keys state the fold didn't read, and must win. */
   private val maintenanceComposableOps = Set(
     "mergeDeltas", "append", "setStatsColumns", "setBloomColumns")
-
-  /** Publish a key-preserving folded rewrite with OCC rebase: racing
-    * ingest (merge-on-read deltas / appends) does NOT abort maintenance
-    * — compaction can run beside live writers. */
-  private def publishMaintenance(cur: Snapshot, removedPaths: Set[String],
-      newFiles: Seq[DataFile], lineage: ObjectNode,
-      propsUpdate: Map[String, String] = Map.empty): Snapshot =
-    publishOptimistic(cur, base => base.copy(version = base.version + 1,
-      manifests = nextManifests(base, f => removedPaths.contains(f.path), newFiles),
-      lineage = Some(lineage),
-      properties = base.properties ++ propsUpdate),
-      ourBuckets = None, replayKey = None,
-      allowedOps = Some(maintenanceComposableOps))
-
-  /** Data directory for a commit's files — version-tagged for humans,
-    * uniquified so two RACING writers staging the same next version
-    * never interleave files in one directory (the loser's staged files
-    * are invisible to snapshots and vacuumable if its rebase aborts). */
-  private def newCommitDir(prefix: String, v: Int): Path =
-    new Path(root, s"data/$prefix-$v-${java.util.UUID.randomUUID().toString.take(8)}")
 
   // ------------------------------------------------------------ lifecycle
 
@@ -479,31 +426,19 @@ class LakeTable(val spark: SparkSession, val root: String) {
   /** Change the harvested stats columns (metadata-only commit): files
     * written AFTER this carry the new stats; existing files keep theirs
     * (absent stats never prune, so reads stay correct). */
-  def setStatsColumns(cols: Seq[String]): Snapshot = {
-    val cur = currentSnapshot.getOrElse(sys.error(s"no table at $root"))
+  def setStatsColumns(cols: Seq[String]): Snapshot = commit("setStatsColumns") { cur =>
     validateStatsColumns(cur.schema, cols)
-    val next = cur.copy(version = cur.version + 1,
-      manifests = nextManifests(cur, _ => false, Nil),
-      statsColumns = cols,
-      lineage = Some(lineageNode("setStatsColumns",
-        Map("columns" -> cols.mkString(",")))))
-    writeSnapshot(next)
-    next
+    Right(Change(Exclusive, lineage = Seq("columns" -> cols.mkString(",")),
+      edit = _.copy(statsColumns = cols)))
   }
 
   /** Change the bloom-filtered columns (metadata-only commit): files
     * written AFTER this carry blooms; files without one are simply not
     * row-group-skippable (reads stay correct). */
-  def setBloomColumns(cols: Seq[String]): Snapshot = {
-    val cur = currentSnapshot.getOrElse(sys.error(s"no table at $root"))
+  def setBloomColumns(cols: Seq[String]): Snapshot = commit("setBloomColumns") { cur =>
     validateStatsColumns(cur.schema, cols)
-    val next = cur.copy(version = cur.version + 1,
-      manifests = nextManifests(cur, _ => false, Nil),
-      bloomColumns = cols,
-      lineage = Some(lineageNode("setBloomColumns",
-        Map("columns" -> cols.mkString(",")))))
-    writeSnapshot(next)
-    next
+    Right(Change(Exclusive, lineage = Seq("columns" -> cols.mkString(",")),
+      edit = _.copy(bloomColumns = cols)))
   }
 
   /** Schema evolution: new nullable columns appended, and existing
@@ -514,9 +449,8 @@ class LakeTable(val spark: SparkSession, val root: String) {
     * the integral/float/decimal families; metadata-only commit either
     * way). Narrowing or incompatible type changes are rejected —
     * as is tightening nullability (old files may hold nulls). */
-  def evolveSchema(newSchema: StructType): Snapshot = {
+  def evolveSchema(newSchema: StructType): Snapshot = commit("evolveSchema") { cur =>
     import org.apache.spark.sql.catalyst.expressions.Cast
-    val cur = currentSnapshot.getOrElse(sys.error(s"no table at $root"))
     val existing = cur.schema.fieldNames.toSet
     val added = newSchema.fields.filterNot(f => existing.contains(f.name))
     require(added.forall(_.nullable), "evolved columns must be nullable")
@@ -540,19 +474,16 @@ class LakeTable(val spark: SparkSession, val root: String) {
         Some(s"${old.name}:${old.dataType.simpleString}->${neu.dataType.simpleString}")
       else None
     }
-    val next = cur.copy(version = cur.version + 1, schema = newSchema,
-      manifests = nextManifests(cur, _ => false, Nil),
-      lineage = Some(lineageNode("evolveSchema",
-        Map("addedColumns" -> added.map(_.name).mkString(","),
-          "widenedColumns" -> widened.mkString(",")))))
-    writeSnapshot(next)
-    next
+    Right(Change(Exclusive, lineage = Seq(
+      "addedColumns" -> added.map(_.name).mkString(","),
+      "widenedColumns" -> widened.mkString(",")), edit = _.copy(schema = newSchema)))
   }
 
-  private def lineageNode(opType: String, kv: Map[String, String]): ObjectNode = {
+  /** Commit lineage: `operation` plus `kv`, numbers as JSON numbers. */
+  private def lineageNode(op: String, kv: Seq[(String, Any)]): ObjectNode = {
     val o = mapper.createObjectNode()
-    o.put("operation", opType)
-    kv.foreach { case (k, v) => o.put(k, v) }
+    o.put("operation", op)
+    kv.foreach { case (k, v) => o.set[JsonNode](k, mapper.valueToTree[JsonNode](v)) }
     o
   }
 
@@ -883,15 +814,25 @@ class LakeTable(val spark: SparkSession, val root: String) {
     node.put("createdAtMs", System.currentTimeMillis())
     val out = fs.create(tmp, false)
     try out.write(mapper.writeValueAsBytes(node)) finally out.close()
-    if (fs.exists(p)) fs.delete(p, false)
+    // a retag that must be retracted restores the ref it replaced
+    val prior = if (fs.exists(p)) Some(readFully(p)) else None
+    firePreCommitHook()
+    if (prior.isDefined) fs.delete(p, false)
     if (!fs.rename(tmp, p)) { fs.delete(tmp, false); sys.error(s"tag publish failed: $p") }
-    // close the check-then-publish window against a concurrent
+    // narrow the check-then-publish window against a concurrent
     // expireSnapshots/vacuum: once the tag is visible it protects the
     // version, so if the version survived to THIS point the tag is
     // durable; if maintenance expired it in the window, retract the tag
     // rather than leave a ref pinning an already-collected snapshot.
+    // (An expiry that listed the tags before this publish can still
+    // delete the version after this check.)
     if (!listVersions.contains(v)) {
-      fs.delete(p, false)
+      prior match {
+        case Some(old) =>
+          val o = fs.create(p, true)
+          try o.write(old.getBytes("UTF-8")) finally o.close()
+        case None => fs.delete(p, false)
+      }
       sys.error(s"tag '$name': version $v was expired by concurrent " +
         "maintenance during tagging; re-run against a retained version")
     }
@@ -1196,10 +1137,11 @@ class LakeTable(val spark: SparkSession, val root: String) {
   // ------------------------------------------------------------ write
 
   /** List parquet files written under a commit dir, keyed by bucket;
-    * harvests min/max footer stats for the table's statsColumns (one
-    * footer read per NEW file — O(changed files), like the manifests). */
-  private def listCommitFiles(commitDir: Path, seq: Int, delta: Boolean): Seq[DataFile] = {
-    val statCols = currentSnapshot.map(_.statsColumns).getOrElse(Nil)
+    * harvests min/max footer stats for `statCols` (one footer read per
+    * NEW file — O(changed files), like the manifests). Seqs are left at
+    * 0 for [[commit]] to stamp. */
+  private def listCommitFiles(commitDir: Path, delta: Boolean,
+      statCols: Seq[String]): Seq[DataFile] = {
     // NOT fs.listFiles(dir, true): that fetches per-file block locations
     // and cost a measured ~150 ms of pure driver wall per 32-file commit
     // on a local FS. A listStatus walk (bucket dirs fanned out on a
@@ -1209,21 +1151,8 @@ class LakeTable(val spark: SparkSession, val root: String) {
     val (dirs, files0) = top.partition(_.isDirectory)
     def parquetsOf(sts: Array[org.apache.hadoop.fs.FileStatus]): Seq[Path] =
       sts.collect { case s if s.getPath.getName.endsWith(".parquet") => s.getPath }.toSeq
-    val nested: Seq[Path] =
-      if (dirs.isEmpty) Nil
-      else if (dirs.length == 1) parquetsOf(fsys.listStatus(dirs.head.getPath))
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(8, dirs.length))
-        try {
-          val tasks: Seq[java.util.concurrent.Callable[Seq[Path]]] =
-            dirs.toSeq.map(d => new java.util.concurrent.Callable[Seq[Path]] {
-              override def call(): Seq[Path] = parquetsOf(fsys.listStatus(d.getPath))
-            })
-          pool.invokeAll(tasks.asJava).asScala.flatMap(_.get()).toSeq
-        } finally pool.shutdown()
-      }
-    val found = parquetsOf(files0) ++ nested
+    val found = parquetsOf(files0) ++
+      onPool(dirs.toSeq)(d => parquetsOf(fsys.listStatus(d.getPath))).flatten
     def toDataFile(fp: Path): DataFile = {
       val p = fp.toString
       val rel = p.substring(p.indexOf(root) + root.length + 1)
@@ -1232,26 +1161,27 @@ class LakeTable(val spark: SparkSession, val root: String) {
       val (ranges, nulls, rows) =
         if (statCols.isEmpty) (Map.empty[String, (Any, Any)], Map.empty[String, Long], -1L)
         else footerStats(fp, statCols)
-      DataFile(rel, bucket, seq, delta, stats = ranges, nulls = nulls, rows = rows)
+      DataFile(rel, bucket, delta = delta, stats = ranges, nulls = nulls, rows = rows)
     }
     // footer-stat harvest is one parquet-footer read per NEW file on the
     // DRIVER; serialized it adds ~5-10 ms × files to every commit of a
     // stats table (guide §5: driver-side single-threaded work shows up as
     // "nothing running"). Read footers on a bounded pool instead.
-    if (statCols.isEmpty || found.size <= 1) found.map(toDataFile)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(8, found.size))
-      try {
-        import scala.collection.JavaConverters._
-        val tasks: Seq[java.util.concurrent.Callable[DataFile]] =
-          found.map(fp => new java.util.concurrent.Callable[DataFile] {
-            override def call(): DataFile = toDataFile(fp)
-          })
-        pool.invokeAll(tasks.asJava).asScala.map(_.get()).toSeq
-      } finally pool.shutdown()
-    }
+    if (statCols.isEmpty) found.map(toDataFile) else onPool(found)(toDataFile)
   }
+
+  /** `f` over `items` on a bounded pool (≤ 8 threads), for independent
+    * driver-side FS calls that would otherwise run serially; zero or one
+    * item runs inline. */
+  private def onPool[A, B](items: Seq[A])(f: A => B): Seq[B] =
+    if (items.size <= 1) items.map(f)
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(8, items.size))
+      try pool.invokeAll(items.map(a => new java.util.concurrent.Callable[B] {
+          override def call(): B = f(a)
+        }).asJava).asScala.map(_.get()).toSeq
+      finally pool.shutdown()
+    }
 
   /** Per-column (min, max) + null counts + row count from a parquet
     * footer, canonical form (Long / Double / String). A column's range is
@@ -1347,26 +1277,121 @@ class LakeTable(val spark: SparkSession, val root: String) {
     finally spark.conf.set(key, prev)
   }
 
-  /** Bulk append (initial seed): bucket + write + commit. */
-  def append(df: DataFrame, commitId: String = "append", batchId: Long = 0L): Snapshot = {
+  /** Files one commit's write left in its commit dir (seq unset:
+    * [[commit]] stamps it), and how long the write and the listing took. */
+  private case class Staged(files: Seq[DataFile], writeMs: Long = 0L, listMs: Long = 0L)
+
+  /** What a commit does to the head it was planned on: the files it
+    * `staged` and `removed`, how it may rebase if it loses the version
+    * race, its own lineage fields and any metadata `edit` of the next
+    * snapshot (schema, bucket count, stats columns, properties). */
+  private case class Change(policy: Rebase, staged: Staged = Staged(Nil),
+      removed: DataFile => Boolean = _ => false,
+      lineage: Seq[(String, Any)] = Nil,
+      edit: Snapshot => Snapshot = identity)
+
+  /** The one commit path of every table write. Reads the head; returns
+    * it as a no-op when it already records `replayKey` (lineage
+    * stripped, since it belongs to the PRIOR commit, so callers can tell
+    * a replay from a fresh commit); lets `plan` stage its files against
+    * it (Left = nothing to commit, returned as is); then publishes the
+    * next snapshot — the head's manifests less the `removed` files plus
+    * the staged ones, stamped with the commit seq — with optimistic
+    * concurrency. A lost version race re-applies the replay check to the
+    * new head (a racing driver may have committed the SAME batch, which
+    * degenerates to the no-op and leaves this writer's staged files as
+    * vacuum-able orphans), then, where the change's [[Rebase]] policy
+    * and [[rebaseCheck]] allow, rebuilds the snapshot on the new head in
+    * O(metadata): no data is rewritten. Lineage gets the commit's own
+    * fields plus `checkpointId`/`batchId` (with a replay key) and
+    * `durationMs`, `writeMs`, `listMs`, `newFiles`, `removedFiles`,
+    * `reusedManifests`, `newManifests`. */
+  private def commit(op: String, replayKey: Option[(String, Long)] = None)(
+      plan: Snapshot => Either[Snapshot, Change]): Snapshot = {
+    val t0 = System.nanoTime()
     val cur = currentSnapshot.getOrElse(sys.error(s"no table at $root"))
-    // no-op replay: strip the PRIOR commit's lineage so callers (metrics)
-    // can tell a replay from a fresh commit
-    if (cur.commits.get(commitId).exists(_ >= batchId)) return cur.copy(lineage = None)
-    val commitDir = newCommitDir("commit", cur.version + 1)
-    val fpb = filesPerBucket(cur.nBuckets)
-    writeBucketed(
-      packedByBucket(df.withColumn("_bucket", bucketCol(cur.keyColumns, cur.nBuckets)),
-        0 until cur.nBuckets, fpb, cur.keyColumns),
-      commitDir, cur.bloomColumns)
-    val newFiles = listCommitFiles(commitDir, cur.version + 1, delta = false)
-    publishOptimistic(cur, base => base.copy(version = base.version + 1,
-      manifests = nextManifests(base, _ => false, newFiles.map(_.copy(seq = base.version + 1))),
-      commits = base.commits + (commitId -> batchId),
-      lineage = Some(lineageNode("append",
-        Map("newFiles" -> newFiles.size.toString, "batchId" -> batchId.toString)))),
-      None, Some((commitId, batchId)))
+    def replayed(s: Snapshot) = replayKey.exists { case (id, b) => s.commits.get(id).exists(_ >= b) }
+    if (replayed(cur)) return cur.copy(lineage = None)
+    val c = plan(cur) match {
+      case Left(done) => return done
+      case Right(change) => change
+    }
+    val lineage = lineageNode(op, c.lineage ++
+      replayKey.toSeq.flatMap { case (id, b) => Seq("checkpointId" -> id, "batchId" -> b) } ++
+      Seq("writeMs" -> c.staged.writeMs, "listMs" -> c.staged.listMs,
+        "newFiles" -> c.staged.files.size, "durationMs" -> (System.nanoTime() - t0) / 1000000))
+    def build(base: Snapshot): Snapshot = {
+      // a fold's rows are the state as of `cur`: anchored at its version,
+      // any interim commit surviving the rebase overlays them on read;
+      // every other commit serializes after the commits it rebased over
+      val seq = if (c.policy == Fold) cur.version else base.version + 1
+      val manifests = nextManifests(base, c.removed, c.staged.files.map(_.copy(seq = seq)))
+      val basePaths = base.manifests.map(_.path).toSet
+      val reused = manifests.count(m => basePaths(m.path))
+      lineage.put("removedFiles", base.files.count(c.removed))
+      lineage.put("reusedManifests", reused).put("newManifests", manifests.size - reused)
+      c.edit(base.copy(version = base.version + 1, manifests = manifests,
+        commits = base.commits ++ replayKey, lineage = Some(lineage)))
+    }
+    var base = cur
+    var tries = 0
+    while (true) {
+      val attempt = build(base)
+      try { writeSnapshot(attempt); return attempt }
+      catch {
+        case e: ConcurrentCommitException =>
+          tries += 1
+          if (c.policy == Exclusive || tries > 10) throw e
+          val head =
+            try currentSnapshot.getOrElse(throw e)
+            catch { case scala.util.control.NonFatal(_) => throw e }
+          if (replayed(head)) return head.copy(lineage = None)
+          rebaseCheck(base, head, c.policy)
+          System.err.println(s"[lake-occ] rebasing onto v${head.version} (attempt $tries)")
+          base = head
+      }
+    }
+    throw new IllegalStateException("unreachable")
   }
+
+  /** Stage `rows` for a commit on `cur`: hash-bucket them, route each
+    * (bucket, salt) slot of `buckets` to its own write task
+    * ([[packedByBucket]]; otherwise every task splits into every bucket →
+    * tasks × buckets small files), write and list them. */
+  private def stage(cur: Snapshot, prefix: String, rows: DataFrame, buckets: Seq[Int],
+      delta: Boolean = false): Staged =
+    stageLaidOut(cur, prefix, packedByBucket(
+      rows.withColumn("_bucket", bucketCol(cur.keyColumns, cur.nBuckets)),
+      buckets, filesPerBucket(buckets.size), cur.keyColumns), delta)
+
+  /** Write a frame already carrying `_bucket` into a fresh commit dir and
+    * list the files it left. The dir is version-tagged for humans and
+    * uniquified, so two RACING writers staging the same next version
+    * never interleave files in one directory (the loser's staged files
+    * are invisible to snapshots and vacuum-able if its rebase aborts). */
+  private def stageLaidOut(cur: Snapshot, prefix: String, laidOut: DataFrame,
+      delta: Boolean = false): Staged = {
+    val dir = new Path(root,
+      s"data/$prefix-${cur.version + 1}-${java.util.UUID.randomUUID().toString.take(8)}")
+    val t0 = System.nanoTime()
+    writeBucketed(laidOut, dir, cur.bloomColumns)
+    val t1 = System.nanoTime()
+    val files = listCommitFiles(dir, delta, cur.statsColumns)
+    Staged(files, (t1 - t0) / 1000000, (System.nanoTime() - t1) / 1000000)
+  }
+
+  /** Removal by PATH of the files a fold read: files an interim commit
+    * adds to the same buckets survive its rebase. */
+  private def pathsOf(files: Seq[DataFile]): DataFile => Boolean = {
+    val paths = files.map(_.path).toSet
+    f => paths(f.path)
+  }
+
+  /** Bulk append (initial seed): bucket + write + commit. */
+  def append(df: DataFrame, commitId: String = "append", batchId: Long = 0L): Snapshot =
+    commit("append", Some((commitId, batchId))) { cur =>
+      Right(Change(AppendOnly, stage(cur, "commit", df, 0 until cur.nBuckets)))
+    }
 
   /** OVERWRITE: replace the table's ENTIRE contents with `df` in one
     * atomic commit — the full-refresh / backfill shape (Delta's
@@ -1386,26 +1411,11 @@ class LakeTable(val spark: SparkSession, val root: String) {
     * rows land on the refreshed base, the same outcome as committing
     * after the refresh. Idempotent on (commitId, batchId). */
   def overwrite(df: DataFrame, commitId: String = "overwrite",
-      batchId: Long = 0L): Snapshot = {
-    val cur = currentSnapshot.getOrElse(sys.error(s"no table at $root"))
-    if (cur.commits.get(commitId).exists(_ >= batchId)) return cur.copy(lineage = None)
-    val commitDir = newCommitDir("overwrite", cur.version + 1)
-    val fpb = filesPerBucket(cur.nBuckets)
-    writeBucketed(
-      packedByBucket(df.withColumn("_bucket", bucketCol(cur.keyColumns, cur.nBuckets)),
-        0 until cur.nBuckets, fpb, cur.keyColumns),
-      commitDir, cur.bloomColumns)
-    val newFiles = listCommitFiles(commitDir, cur.version + 1, delta = false)
-    val next = cur.copy(version = cur.version + 1,
-      manifests = nextManifests(cur, _ => true, newFiles),
-      commits = cur.commits + (commitId -> batchId),
-      lineage = Some(lineageNode("overwrite",
-        Map("newFiles" -> newFiles.size.toString,
-          "removed" -> cur.files.size.toString,
-          "batchId" -> batchId.toString))))
-    writeSnapshot(next)
-    next
-  }
+      batchId: Long = 0L): Snapshot =
+    commit("overwrite", Some((commitId, batchId))) { cur =>
+      Right(Change(Exclusive, stage(cur, "overwrite", df, 0 until cur.nBuckets),
+        removed = _ => true))
+    }
 
   /** MERGE a reduced delta batch (output of EnvelopeDecoder.toDeltas:
     * key cols + payload cols + `operation` + `offset`, ≤1 row per key)
@@ -1413,154 +1423,121 @@ class LakeTable(val spark: SparkSession, val root: String) {
     *
     * Idempotent on (checkpointId, batchId): replaying a batch that a
     * committed snapshot already records is a no-op — the exactly-once
-    * contract used by the streaming `foreachBatch` sink.
+    * contract used by the streaming `foreachBatch` sink. A lost version
+    * race rebases (O(metadata)) when every interim commit touched
+    * buckets disjoint from the batch's; an overlap is a genuine
+    * lost-update conflict and aborts to the caller.
     */
   def merge(deltas: DataFrame, checkpointId: String, batchId: Long,
-      strictValidate: Boolean = false): Snapshot = {
-    val t0 = System.nanoTime()
-    val cur = currentSnapshot.getOrElse(sys.error(s"no table at $root"))
-    // no-op replay: lineage stripped (it belongs to the PRIOR commit)
-    if (cur.commits.get(checkpointId).exists(_ >= batchId)) return cur.copy(lineage = None)
-
-    val keyCols = cur.keyColumns
-    val nb = cur.nBuckets
-    val payloadCols = cur.schema.fieldNames.filterNot(keyCols.contains).toSeq
-
-    // deltas are consumed twice (stats pass + merge join): persist the
-    // reduced batch rather than re-running decode+reduce upstream
-    val withBucket = deltas.withColumn("_bucket", bucketCol(keyCols, nb))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    // lineage aggregates + affected buckets in ONE pass over the deltas
-    val eventsCol: org.apache.spark.sql.Column =
-      if (deltas.columns.contains("n_events")) sum(col("n_events")).cast("long")
-      else count(lit(1))
-    val tStats0 = System.nanoTime()
-    val stats = withBucket.groupBy(col("_bucket"))
-      .agg(eventsCol.as("n"),
-        sum(when(col("operation") === "d", 1).otherwise(0)).as("n_del"),
-        sum(when(col("operation").isin("c", "r"), 1).otherwise(0)).as("n_ins"),
-        sum(when(col("operation") === "u", 1).otherwise(0)).as("n_upd"),
-        min(col("offset")).as("min_off"), max(col("offset")).as("max_off"),
-        count(lit(1)).as("n_keys"))
-      .collect()
-    if (stats.isEmpty) { // empty batch: just record the commit
-      withBucket.unpersist()
-      val next = cur.copy(version = cur.version + 1,
-        manifests = nextManifests(cur, _ => false, Nil),
-        commits = cur.commits + (checkpointId -> batchId),
-        lineage = Some(lineageNode("merge", Map(
-          "batchId" -> batchId.toString, "checkpointId" -> checkpointId,
-          "events" -> "0"))))
-      writeSnapshot(next)
-      return next
-    }
-    val statsMs = (System.nanoTime() - tStats0) / 1000000
-    val affected = stats.map(_.getInt(0)).toSet
-    val (affectedFiles, keptFiles) = cur.files.partition(f => affected.contains(f.bucket))
-
-    val snapDf = snapshotRows(cur, affectedFiles)
-    // pack both sides; delta wins, op='d' drops the key
-    val s = snapDf.select(keyCols.map(col) :+ struct(payloadCols.map(col): _*).as("_snap"): _*)
-    val deltaExtraCols = withBucket.columns
-      .filter(c => c == "operation" || c == "_patch_mask" || c.startsWith("_first_")).toSeq
-    val hasBefore = withBucket.columns.contains("_first_before")
-    val hasMask = withBucket.columns.contains("_patch_mask")
-    val d = withBucket.select(keyCols.map(col) :+
-      struct((payloadCols ++ deltaExtraCols).map(col): _*).as("_delta"): _*)
-    val joined = s.join(d, keyCols, "full_outer")
-
-    // strict cross-batch validation: the batch's first-op precondition
-    // against the snapshot row (reference validateEvents semantics,
-    // distributed through the merge join — no state re-read). Deltas
-    // without a before-image (Mongo: events carry none) check presence
-    // only, which IS the reference's whole Mongo precondition (:500-524).
-    val validated = if (strictValidate) {
-      val cmp = payloadCols.filterNot(_ == "_offset")
-      val sameBefore =
-        if (hasBefore) {
-          val beforeImg = struct(cmp.map(c => col(s"_delta._first_before.$c")): _*)
-          val snapImg = struct(cmp.map(c => col(s"_snap.$c")): _*)
-          // a PER-ROW null before-image means a Mongo delta in a mixed
-          // commit: presence-only. Sound because relational strict decode
-          // raises on u/d with a null before (EnvelopeDecoder) — only
-          // Mongo rows can reach here imageless.
-          when(col("_delta._first_before").isNull, lit(true))
-            .otherwise(beforeImg <=> snapImg)
-        } else lit(true)
-      val ok = col("_delta").isNull ||
-        when(col("_delta._first_op").isin("c", "r"), col("_snap").isNull)
-          .otherwise(col("_snap").isNotNull && sameBefore)
-      joined.filter(
-        when(assert_true(ok, concat(lit("strict merge violation: key="),
-          concat_ws("|", keyCols.map(c => col(c).cast("string")): _*),
-          lit(" first_op="), col("_delta._first_op"))).isNull, lit(true)))
-    } else joined
-
-    // per-field merge: full delta rows replace the snapshot row; PATCH
-    // deltas (non-null _patch_mask) take only masked fields from the
-    // delta and the rest from the snapshot row
-    val merged = validated
-      .filter(col("_delta").isNull || col("_delta.operation") =!= "d")
-      .select(keyCols.map(col) ++ payloadCols.map { c =>
-        val fromDelta =
-          if (hasMask)
-            when(col("_delta._patch_mask").isNotNull &&
-                 !array_contains(col("_delta._patch_mask"), c), col(s"_snap.$c"))
-              .otherwise(col(s"_delta.$c"))
-          else col(s"_delta.$c")
-        when(col("_delta").isNotNull, fromDelta).otherwise(col(s"_snap.$c")).as(c)
-      }: _*)
-
-    val commitDir = newCommitDir("commit", cur.version + 1)
-    // route rows to their bucket's writer task before the partitioned
-    // write (otherwise every task splits into every bucket →
-    // tasks×buckets small files); in-bucket salt lifts parallelism above
-    // the affected-bucket count when the cluster has idle slots
-    val fpb = filesPerBucket(affected.size)
-    val tWrite0 = System.nanoTime()
-    writeBucketed(
-      packedByBucket(merged.withColumn("_bucket", bucketCol(keyCols, nb)),
-        affected.toSeq, fpb, keyCols),
-      commitDir, cur.bloomColumns)
-    val writeMs = (System.nanoTime() - tWrite0) / 1000000
-    val tList0 = System.nanoTime()
-    val newFiles = listCommitFiles(commitDir, cur.version + 1, delta = false)
-    val listMs = (System.nanoTime() - tList0) / 1000000
-    withBucket.unpersist()
-    System.err.println(s"[lake-merge] batch=$batchId statsMs=$statsMs writeMs=$writeMs listMs=$listMs affected=${affected.size}")
-
-    val durMs = (System.nanoTime() - t0) / 1000000
-    val events = stats.map(_.getLong(1)).sum
-    val lineage = mapper.createObjectNode()
-    lineage.put("operation", "merge")
-    lineage.put("checkpointId", checkpointId)
-    lineage.put("batchId", batchId)
-    lineage.put("events", events)
-    lineage.put("keys", stats.map(_.getLong(7)).sum)
-    lineage.put("inserts", stats.map(_.getLong(3)).sum)
-    lineage.put("updates", stats.map(_.getLong(4)).sum)
-    lineage.put("deletes", stats.map(_.getLong(2)).sum)
-    lineage.put("offsetMin", stats.map(_.getLong(5)).min)
-    lineage.put("offsetMax", stats.map(_.getLong(6)).max)
-    lineage.put("affectedBuckets", affected.size)
-    lineage.put("rewrittenFiles", affectedFiles.size)
-    lineage.put("keptFiles", keptFiles.size)
-    lineage.put("durationMs", durMs)
-    val perBucket = lineage.putArray("bucketLineage")
-    stats.sortBy(_.getInt(0)).foreach { r =>
-      val o = perBucket.addObject()
-      o.put("bucket", r.getInt(0)); o.put("events", r.getLong(1))
-      o.put("offsetMin", r.getLong(5)); o.put("offsetMax", r.getLong(6))
+      strictValidate: Boolean = false): Snapshot =
+    commit("merge", Some((checkpointId, batchId))) { cur =>
+      val keyCols = cur.keyColumns
+      val payloadCols = cur.schema.fieldNames.filterNot(keyCols.contains).toSeq
+      // deltas are consumed twice (stats pass + merge join): persist the
+      // reduced batch rather than re-running decode+reduce upstream
+      val withBucket = deltas.withColumn("_bucket", bucketCol(keyCols, cur.nBuckets))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      try {
+        // lineage aggregates + affected buckets in ONE pass over the deltas
+        val eventsCol: org.apache.spark.sql.Column =
+          if (deltas.columns.contains("n_events")) sum(col("n_events")).cast("long")
+          else count(lit(1))
+        val tStats0 = System.nanoTime()
+        val stats = withBucket.groupBy(col("_bucket"))
+          .agg(eventsCol.as("n"),
+            sum(when(col("operation") === "d", 1).otherwise(0)).as("n_del"),
+            sum(when(col("operation").isin("c", "r"), 1).otherwise(0)).as("n_ins"),
+            sum(when(col("operation") === "u", 1).otherwise(0)).as("n_upd"),
+            min(col("offset")).as("min_off"), max(col("offset")).as("max_off"),
+            count(lit(1)).as("n_keys"))
+          .collect()
+        val statsMs = (System.nanoTime() - tStats0) / 1000000
+        // an empty batch just records the commit
+        if (stats.isEmpty) Right(Change(Rewrites(Set.empty), lineage = Seq("events" -> 0L)))
+        else {
+          val affected = stats.map(_.getInt(0)).toSet
+          val (affectedFiles, keptFiles) = cur.files.partition(f => affected.contains(f.bucket))
+          // pack both sides; delta wins, op='d' drops the key
+          val s = snapshotRows(cur, affectedFiles)
+            .select(keyCols.map(col) :+ struct(payloadCols.map(col): _*).as("_snap"): _*)
+          val deltaExtraCols = withBucket.columns
+            .filter(c => c == "operation" || c == "_patch_mask" || c.startsWith("_first_")).toSeq
+          val hasMask = withBucket.columns.contains("_patch_mask")
+          val d = withBucket.select(keyCols.map(col) :+
+            struct((payloadCols ++ deltaExtraCols).map(col): _*).as("_delta"): _*)
+          val joined = s.join(d, keyCols, "full_outer")
+          val validated =
+            if (strictValidate) strictChecked(joined, keyCols, payloadCols, "_delta.",
+              withBucket.columns.contains("_first_before"))
+            else joined
+          // per-field merge: full delta rows replace the snapshot row; PATCH
+          // deltas (non-null _patch_mask) take only masked fields from the
+          // delta and the rest from the snapshot row
+          val merged = validated
+            .filter(col("_delta").isNull || col("_delta.operation") =!= "d")
+            .select(keyCols.map(col) ++ payloadCols.map { c =>
+              val fromDelta =
+                if (hasMask)
+                  when(col("_delta._patch_mask").isNotNull &&
+                       !array_contains(col("_delta._patch_mask"), c), col(s"_snap.$c"))
+                    .otherwise(col(s"_delta.$c"))
+                else col(s"_delta.$c")
+              when(col("_delta").isNotNull, fromDelta).otherwise(col(s"_snap.$c")).as(c)
+            }: _*)
+          // in-bucket salt lifts write parallelism above the affected-bucket
+          // count when the cluster has idle slots
+          val staged = stage(cur, "commit", merged, affected.toSeq)
+          val perBucket = mapper.createArrayNode()
+          stats.sortBy(_.getInt(0)).foreach { r =>
+            val o = perBucket.addObject()
+            o.put("bucket", r.getInt(0)); o.put("events", r.getLong(1))
+            o.put("offsetMin", r.getLong(5)); o.put("offsetMax", r.getLong(6))
+          }
+          Right(Change(Rewrites(affected), staged, f => affected.contains(f.bucket), Seq(
+            "events" -> stats.map(_.getLong(1)).sum,
+            "keys" -> stats.map(_.getLong(7)).sum,
+            "inserts" -> stats.map(_.getLong(3)).sum,
+            "updates" -> stats.map(_.getLong(4)).sum,
+            "deletes" -> stats.map(_.getLong(2)).sum,
+            "offsetMin" -> stats.map(_.getLong(5)).min,
+            "offsetMax" -> stats.map(_.getLong(6)).max,
+            "affectedBuckets" -> affected.size,
+            "rewrittenFiles" -> affectedFiles.size,
+            "keptFiles" -> keptFiles.size,
+            "statsMs" -> statsMs,
+            "bucketLineage" -> perBucket)))
+        }
+      } finally withBucket.unpersist()
     }
 
-    // OCC: a lost version race rebases (O(metadata)) when every interim
-    // commit touched buckets disjoint from `affected`; an overlap is a
-    // genuine lost-update conflict and aborts to the caller
-    publishOptimistic(cur, base => base.copy(version = base.version + 1,
-      manifests = nextManifests(base, f => affected.contains(f.bucket),
-        newFiles.map(_.copy(seq = base.version + 1))),
-      commits = base.commits + (checkpointId -> batchId),
-      lineage = Some(lineage)), Some(affected), Some((checkpointId, batchId)))
+  /** Rows of `joined` — delta rows beside each key's current row `_snap`
+    * — that pass the batch's strict first-op precondition (reference
+    * validateEvents semantics, distributed through the merge join: no
+    * state re-read), raising `strict merge violation` on the first that
+    * fails: a create/read needs no current row, an update/delete needs
+    * one equal to its first before-image. Deltas without a before-image
+    * check presence only, which IS the reference's whole Mongo
+    * precondition (:500-524); a PER-ROW null before-image means a Mongo
+    * delta in a mixed commit, sound because relational strict decode
+    * raises on u/d with a null before (EnvelopeDecoder). `delta` prefixes
+    * the delta fields: "_delta." in the copy-on-write full outer join,
+    * whose snapshot-only rows pass (their null `_first_op` takes the
+    * presence branch), "" in mergeDeltas' left join. */
+  private def strictChecked(joined: DataFrame, keyCols: Seq[String],
+      payloadCols: Seq[String], delta: String, hasBefore: Boolean): DataFrame = {
+    val cmp = payloadCols.filterNot(_ == "_offset")
+    val sameBefore =
+      if (hasBefore)
+        when(col(s"${delta}_first_before").isNull, lit(true))
+          .otherwise(struct(cmp.map(c => col(s"${delta}_first_before.$c")): _*) <=>
+            struct(cmp.map(c => col(s"_snap.$c")): _*))
+      else lit(true)
+    val ok = when(col(s"${delta}_first_op").isin("c", "r"), col("_snap").isNull)
+      .otherwise(col("_snap").isNotNull && sameBefore)
+    joined.filter(
+      when(assert_true(ok, concat(lit("strict merge violation: key="),
+        concat_ws("|", keyCols.map(c => col(c).cast("string")): _*),
+        lit(" first_op="), col(s"${delta}_first_op"))).isNull, lit(true)))
   }
 
   /** Current rows of a file subset: plain scan if no delta files are
@@ -1580,174 +1557,95 @@ class LakeTable(val spark: SparkSession, val root: String) {
     * Same idempotence contract as `merge`. With `strictValidate`, the
     * batch's first-op preconditions are checked against the CURRENT state
     * of the affected buckets through a left join (read amplification but
-    * still no rewrite).
+    * still no rewrite). A lost version race ALWAYS rebases (except over
+    * layout changes): the staged delta files are re-stamped with the
+    * final commit seq, which serializes this batch after the interim
+    * commits in the reconstruction order.
     *
     * `autoCompact` > 0 folds a bucket's deltas into a base file once it
     * accumulates that many delta commits, bounding the read tax. */
   def mergeDeltas(deltas: DataFrame, checkpointId: String, batchId: Long,
       strictValidate: Boolean = false, autoCompact: Int = 0): Snapshot = {
-    val t0 = System.nanoTime()
-    val cur = currentSnapshot.getOrElse(sys.error(s"no table at $root"))
-    // no-op replay: lineage stripped (it belongs to the PRIOR commit)
-    if (cur.commits.get(checkpointId).exists(_ >= batchId)) return cur.copy(lineage = None)
+    val next = commit("mergeDeltas", Some((checkpointId, batchId))) { cur =>
+      val hasPatch = deltas.columns.contains("_patch_mask")
+      val keyCols = cur.keyColumns
+      val payloadCols = cur.schema.fieldNames.filterNot(keyCols.contains).toSeq
+      val eventsCol: org.apache.spark.sql.Column =
+        if (deltas.columns.contains("n_events")) sum(col("n_events")).cast("long")
+        else count(lit(1)).cast("long")
+      val withBucket = deltas.withColumn("_bucket", bucketCol(keyCols, cur.nBuckets))
+      try {
+        val validated = if (strictValidate) {
+          // affected buckets are needed up front to read only their state
+          val persisted = withBucket.persist(
+            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+          val affected = persisted.select(col("_bucket")).distinct()
+            .collect().map(_.getInt(0)).toSet
+          val snapDf = snapshotRows(cur, cur.files.filter(f => affected.contains(f.bucket)))
+          val s = snapDf.select(keyCols.map(col) :+
+            struct(payloadCols.map(col): _*).as("_snap"): _*)
+          strictChecked(persisted.join(s, keyCols, "left_outer"), keyCols, payloadCols, "",
+            deltas.columns.contains("_first_before"))
+        } else deltas
 
-    val hasPatch = deltas.columns.contains("_patch_mask")
-    val keyCols = cur.keyColumns
-    val nb = cur.nBuckets
-    val payloadCols = cur.schema.fieldNames.filterNot(keyCols.contains).toSeq
-    val eventsCol: org.apache.spark.sql.Column =
-      if (deltas.columns.contains("n_events")) sum(col("n_events")).cast("long")
-      else count(lit(1)).cast("long")
-
-    val withBucket = deltas.withColumn("_bucket", bucketCol(keyCols, nb))
-
-    val validated = if (strictValidate) {
-      // affected buckets are needed up front to read only their state
-      val persisted = withBucket.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      val affected = persisted.select(col("_bucket")).distinct()
-        .collect().map(_.getInt(0)).toSet
-      val snapDf = snapshotRows(cur, cur.files.filter(f => affected.contains(f.bucket)))
-      val s = snapDf.select(keyCols.map(col) :+
-        struct(payloadCols.map(col): _*).as("_snap"): _*)
-      val joined = persisted.join(s, keyCols, "left_outer")
-      val cmp = payloadCols.filterNot(_ == "_offset")
-      // deltas without a before-image (Mongo) check presence only —
-      // that IS the reference's whole Mongo precondition (:500-524)
-      val sameBefore =
-        if (deltas.columns.contains("_first_before")) {
-          val beforeImg = struct(cmp.map(c => col(s"_first_before.$c")): _*)
-          val snapImg = struct(cmp.map(c => col(s"_snap.$c")): _*)
-          // per-row null before-image = Mongo delta in a mixed commit:
-          // presence-only (see `merge`; relational u/d can't arrive null)
-          when(col("_first_before").isNull, lit(true))
-            .otherwise(beforeImg <=> snapImg)
-        } else lit(true)
-      val ok = when(col("_first_op").isin("c", "r"), col("_snap").isNull)
-        .otherwise(col("_snap").isNotNull && sameBefore)
-      joined.filter(
-        when(assert_true(ok, concat(lit("strict merge violation: key="),
-          concat_ws("|", keyCols.map(c => col(c).cast("string")): _*),
-          lit(" first_op="), col("_first_op"))).isNull, lit(true)))
-    } else withBucket
-
-    val obs = Observation()
-    val aggs = Seq(
-      eventsCol.as("events"), count(lit(1)).cast("long").as("keys"),
-      sum(when(col("operation").isin("c", "r"), 1L).otherwise(0L)).as("inserts"),
-      sum(when(col("operation") === "u", 1L).otherwise(0L)).as("updates"),
-      sum(when(col("operation") === "d", 1L).otherwise(0L)).as("deletes"),
-      min(col("offset")).as("offsetMin"), max(col("offset")).as("offsetMax")) ++
-      // a _patch_mask COLUMN with no actual patch rows (mixed-topic
-      // batches are mostly full rows) must not condemn every read of
-      // this commit to the patch fold — count real masks in-flight
-      (if (hasPatch)
-        Seq(sum(when(col("_patch_mask").isNotNull, 1L).otherwise(0L)).as("patchRows"))
-      else Nil)
-    val observed = validated.observe(obs, aggs.head, aggs.tail: _*)
-
-    val commitDir = newCommitDir("commit", cur.version + 1)
-    val tWrite0 = System.nanoTime()
-    val outCols = keyCols ++ payloadCols ++ Seq("operation") ++
-      (if (hasPatch) Seq("_patch_mask") else Nil) ++ Seq("_bucket")
-    val fpb = filesPerBucket(nb)
-    writeBucketed(
-      packedByBucket(observed.select(outCols.map(col): _*),
-        0 until nb, fpb, keyCols),
-      commitDir, cur.bloomColumns)
-    val writeMs = (System.nanoTime() - tWrite0) / 1000000
-    val m = obs.get
-    val anyPatchRow = hasPatch &&
-      Option(m.getOrElse("patchRows", null))
-        .exists(_.asInstanceOf[Number].longValue > 0)
-    val tList0 = System.nanoTime()
-    val newFiles = listCommitFiles(commitDir, cur.version + 1, delta = true)
-      .map(_.copy(patch = anyPatchRow))
-    val listMs = (System.nanoTime() - tList0) / 1000000
-    if (strictValidate) withBucket.unpersist()
-
-    val durMs = (System.nanoTime() - t0) / 1000000
-    // sums/min/max observe as null on an empty batch
-    def longOf(k: String, default: Long = 0L): Long =
-      Option(m.getOrElse(k, null)).map(_.asInstanceOf[Number].longValue).getOrElse(default)
-    val lineage = mapper.createObjectNode()
-    lineage.put("operation", "mergeDeltas")
-    lineage.put("checkpointId", checkpointId)
-    lineage.put("batchId", batchId)
-    lineage.put("events", longOf("events"))
-    lineage.put("keys", longOf("keys"))
-    lineage.put("inserts", longOf("inserts"))
-    lineage.put("updates", longOf("updates"))
-    lineage.put("deletes", longOf("deletes"))
-    lineage.put("offsetMin", longOf("offsetMin", -1L))
-    lineage.put("offsetMax", longOf("offsetMax", -1L))
-    lineage.put("affectedBuckets", newFiles.map(_.bucket).distinct.size)
-    lineage.put("newDeltaFiles", newFiles.size)
-    lineage.put("durationMs", durMs)
-    val manifests = nextManifests(cur, _ => false, newFiles)
-    // O(changed-files) metadata evidence: every prior manifest is reused
-    lineage.put("reusedManifests", cur.manifests.count(_.path.nonEmpty))
-    lineage.put("newManifests", manifests.size - cur.manifests.count(_.path.nonEmpty))
-    System.err.println(s"[lake-mor] batch=$batchId writeMs=$writeMs listMs=$listMs newFiles=${newFiles.size}")
-
-    // OCC: merge-on-read commits are append-only, so a lost version race
-    // ALWAYS rebases (except layout changes) — the staged delta files are
-    // re-stamped with the final commit seq, which serializes this batch
-    // after the interim commits in the reconstruction order
-    val next = publishOptimistic(cur, base => base.copy(version = base.version + 1,
-      manifests =
-        if (base eq cur) manifests
-        else nextManifests(base, _ => false, newFiles.map(_.copy(seq = base.version + 1))),
-      commits = base.commits + (checkpointId -> batchId),
-      lineage = Some(lineage)), None, Some((checkpointId, batchId)))
-
-    if (autoCompact > 0) {
-      val hot = next.files.filter(_.delta).groupBy(_.bucket)
-        .collect { case (b, fs0) if fs0.map(_.seq).distinct.size >= autoCompact => b }
-        .toSet
-      if (hot.nonEmpty) {
-        val compacted = compact(Some(hot))
-        // the RETURNED snapshot carries the MERGE lineage (the caller's
-        // per-batch metrics need events/op counts — the compact commit's
-        // on-disk lineage stays "compact"), annotated with the compaction
-        lineage.put("autoCompactedBuckets", hot.size)
-        return compacted.copy(lineage = Some(lineage))
-      }
+        val obs = Observation()
+        val aggs = Seq(
+          eventsCol.as("events"), count(lit(1)).cast("long").as("keys"),
+          sum(when(col("operation").isin("c", "r"), 1L).otherwise(0L)).as("inserts"),
+          sum(when(col("operation") === "u", 1L).otherwise(0L)).as("updates"),
+          sum(when(col("operation") === "d", 1L).otherwise(0L)).as("deletes"),
+          min(col("offset")).as("offsetMin"), max(col("offset")).as("offsetMax")) ++
+          // a _patch_mask COLUMN with no actual patch rows (mixed-topic
+          // batches are mostly full rows) must not condemn every read of
+          // this commit to the patch fold — count real masks in-flight
+          (if (hasPatch)
+            Seq(sum(when(col("_patch_mask").isNotNull, 1L).otherwise(0L)).as("patchRows"))
+          else Nil)
+        val outCols = keyCols ++ payloadCols ++ Seq("operation") ++
+          (if (hasPatch) Seq("_patch_mask") else Nil)
+        val staged = stage(cur, "commit",
+          validated.observe(obs, aggs.head, aggs.tail: _*).select(outCols.map(col): _*),
+          0 until cur.nBuckets, delta = true)
+        val m = obs.get
+        // sums/min/max observe as null on an empty batch
+        def longOf(k: String, default: Long = 0L): Long =
+          Option(m.getOrElse(k, null)).map(_.asInstanceOf[Number].longValue).getOrElse(default)
+        Right(Change(AppendOnly,
+          staged.copy(files = staged.files.map(_.copy(patch = hasPatch && longOf("patchRows") > 0))),
+          lineage = Seq("events", "keys", "inserts", "updates", "deletes").map(k => k -> longOf(k)) ++
+            Seq("offsetMin" -> longOf("offsetMin", -1L), "offsetMax" -> longOf("offsetMax", -1L),
+              "affectedBuckets" -> staged.files.map(_.bucket).distinct.size)))
+      } finally if (strictValidate) withBucket.unpersist()
     }
-    next
+    val hot =
+      if (autoCompact <= 0 || next.lineage.isEmpty) Set.empty[Int]
+      else next.files.filter(_.delta).groupBy(_.bucket)
+        .collect { case (b, fs0) if fs0.map(_.seq).distinct.size >= autoCompact => b }.toSet
+    if (hot.isEmpty) next
+    // the RETURNED snapshot carries the MERGE lineage (the caller's
+    // per-batch metrics need events/op counts — the compact commit's
+    // on-disk lineage stays "compact"), annotated with the compaction
+    else compact(Some(hot)).copy(lineage = next.lineage.map(
+      _.asInstanceOf[ObjectNode].put("autoCompactedBuckets", hot.size)))
   }
 
   /** Fold delta files back into base files for the given buckets (all
     * delta-carrying buckets by default). A maintenance commit: logical
     * state is unchanged; the compacted buckets' base+delta files are
-    * replaced by one reconstructed base file per bucket. */
-  def compact(buckets: Option[Set[Int]] = None): Snapshot = {
-    val t0 = System.nanoTime()
-    val cur = currentSnapshot.getOrElse(sys.error(s"no table at $root"))
+    * replaced by one reconstructed base file per bucket. Racing ingest
+    * (merge-on-read deltas / appends) does NOT abort it: it rebases, and
+    * the interim files overlay the folded ones — compaction can run
+    * beside live writers. */
+  def compact(buckets: Option[Set[Int]] = None): Snapshot = commit("compact") { cur =>
     val deltaBuckets = cur.files.filter(_.delta).map(_.bucket).toSet
     val target = buckets.map(_.intersect(deltaBuckets)).getOrElse(deltaBuckets)
-    if (target.isEmpty) return cur
-    val (targetFiles, keptFiles) = cur.files.partition(f => target.contains(f.bucket))
-
-    val rows = reconstructRows(cur, targetFiles)
-    val commitDir = newCommitDir("compact", cur.version + 1)
-    val fpb = filesPerBucket(target.size)
-    writeBucketed(
-      packedByBucket(rows.withColumn("_bucket", bucketCol(cur.keyColumns, cur.nBuckets)),
-        target.toSeq, fpb, cur.keyColumns),
-      commitDir, cur.bloomColumns)
-    // seq anchored at the BASE version: the folded rows are the state
-    // as of `cur`, so any interim delta commit (seq > cur.version)
-    // surviving an OCC rebase correctly overlays them on read
-    val newFiles = listCommitFiles(commitDir, cur.version, delta = false)
-    val durMs = (System.nanoTime() - t0) / 1000000
-    System.err.println(s"[lake-compact] buckets=${target.size} removed=${targetFiles.size} durMs=$durMs")
-    publishMaintenance(cur, targetFiles.map(_.path).toSet, newFiles,
-      lineageNode("compact", Map(
-        "buckets" -> target.size.toString,
-        "removedFiles" -> targetFiles.size.toString,
-        "newFiles" -> newFiles.size.toString,
-        "durationMs" -> durMs.toString)))
+    if (target.isEmpty) Left(cur)
+    else {
+      val targetFiles = cur.files.filter(f => target.contains(f.bucket))
+      Right(Change(Fold,
+        stage(cur, "compact", reconstructRows(cur, targetFiles), target.toSeq),
+        pathsOf(targetFiles), Seq("buckets" -> target.size)))
+    }
   }
 
   /** CLUSTER maintenance commit: rewrite the targeted buckets (default
@@ -1766,36 +1664,23 @@ class LakeTable(val spark: SparkSession, val root: String) {
     * Logical state is unchanged (a [[changes]] feed across a cluster
     * commit is empty); bucket routing is unchanged (key hash), so
     * point lookups and MERGE pruning are unaffected. */
-  def cluster(columns: Seq[String], buckets: Option[Set[Int]] = None): Snapshot = {
-    val t0 = System.nanoTime()
-    val cur = currentSnapshot.getOrElse(sys.error(s"no table at $root"))
-    require(columns.nonEmpty, "cluster: no columns")
-    validateStatsColumns(cur.schema, columns)
-    val target = buckets.getOrElse((0 until cur.nBuckets).toSet)
-    val (targetFiles, _) = cur.files.partition(f => target.contains(f.bucket))
-    if (targetFiles.isEmpty) return cur.copy(lineage = None)
-    val rows = snapshotRows(cur, targetFiles)
-    val commitDir = newCommitDir("cluster", cur.version + 1)
-    val fpb = filesPerBucket(target.size)
-    val layout = col("_bucket") +: columns.map(col)
-    writeBucketed(
-      rows.withColumn("_bucket", bucketCol(cur.keyColumns, cur.nBuckets))
-        .repartitionByRange(target.size * fpb, layout: _*)
-        .sortWithinPartitions(layout: _*),
-      commitDir, cur.bloomColumns)
-    // base-anchored seq: see compact()
-    val newFiles = listCommitFiles(commitDir, cur.version, delta = false)
-    val durMs = (System.nanoTime() - t0) / 1000000
-    System.err.println(s"[lake-cluster] buckets=${target.size} cols=${columns.mkString(",")} " +
-      s"removed=${targetFiles.size} new=${newFiles.size} durMs=$durMs")
-    publishMaintenance(cur, targetFiles.map(_.path).toSet, newFiles,
-      lineageNode("cluster", Map(
-        "columns" -> columns.mkString(","),
-        "buckets" -> target.size.toString,
-        "removedFiles" -> targetFiles.size.toString,
-        "newFiles" -> newFiles.size.toString,
-        "durationMs" -> durMs.toString)))
-  }
+  def cluster(columns: Seq[String], buckets: Option[Set[Int]] = None): Snapshot =
+    commit("cluster") { cur =>
+      require(columns.nonEmpty, "cluster: no columns")
+      validateStatsColumns(cur.schema, columns)
+      val target = buckets.getOrElse((0 until cur.nBuckets).toSet)
+      val targetFiles = cur.files.filter(f => target.contains(f.bucket))
+      if (targetFiles.isEmpty) Left(cur.copy(lineage = None))
+      else {
+        val layout = col("_bucket") +: columns.map(col)
+        val rows = snapshotRows(cur, targetFiles)
+          .withColumn("_bucket", bucketCol(cur.keyColumns, cur.nBuckets))
+          .repartitionByRange(target.size * filesPerBucket(target.size), layout: _*)
+          .sortWithinPartitions(layout: _*)
+        Right(Change(Fold, stageLaidOut(cur, "cluster", rows), pathsOf(targetFiles),
+          Seq("columns" -> columns.mkString(","), "buckets" -> target.size)))
+      }
+    }
 
   /** Z-ORDER maintenance commit: like [[cluster]], but rows are laid
     * out along a MORTON CURVE over `columns` instead of
@@ -1821,9 +1706,7 @@ class LakeTable(val spark: SparkSession, val root: String) {
     * the same columns and bits (anything else throws — silently
     * re-sketching would mix two curve geometries). */
   def zorder(columns: Seq[String], buckets: Option[Set[Int]] = None,
-      bits: Int = 8, reuseCuts: Boolean = false): Snapshot = {
-    val t0 = System.nanoTime()
-    val cur = currentSnapshot.getOrElse(sys.error(s"no table at $root"))
+      bits: Int = 8, reuseCuts: Boolean = false): Snapshot = commit("zorder") { cur =>
     require(columns.size >= 2 && columns.size <= 6,
       "zorder: 2-6 columns (one column: use cluster())")
     validateStatsColumns(cur.schema, columns)
@@ -1837,64 +1720,51 @@ class LakeTable(val spark: SparkSession, val root: String) {
       }
     }
     val target = buckets.getOrElse((0 until cur.nBuckets).toSet)
-    val (targetFiles, _) = cur.files.partition(f => target.contains(f.bucket))
-    if (targetFiles.isEmpty) return cur.copy(lineage = None)
-    // the persist pays for the quantile-sketch + write double pass; under
-    // reuseCuts there is only the write pass — persisting would only add
-    // a materialization
-    val rows0 = snapshotRows(cur, targetFiles)
-    val rows =
-      if (reuseCuts) rows0
-      else rows0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    try {
-      val cuts: Array[Array[Double]] =
-        if (reuseCuts) {
-          val stored = cur.properties.get("zorder.spec").map(parseZorderSpec)
-            .getOrElse(sys.error("zorder(reuseCuts=true): no stored zorder.spec " +
-              "on this table — run a full zorder(columns) first"))
-          require(stored._1 == columns && stored._2 == bits,
-            s"zorder(reuseCuts=true): stored spec is over (${stored._1.mkString(",")}, " +
-              s"bits=${stored._2}) but (${columns.mkString(",")}, bits=$bits) was requested")
-          stored._3
-        } else {
-          // equal-frequency cuts, ALL dimensions in one GK-sketch pass
-          val statDf = rows.select(columns.indices.map(i =>
-            asDouble(columns(i)).as(s"_z$i")): _*)
-          val nCuts = (1 << bits) - 1
-          val probs = (1 to nCuts).map(_.toDouble / (nCuts + 1)).toArray
-          statDf.stat
-            .approxQuantile(columns.indices.map(i => s"_z$i").toArray, probs, 0.005)
-            .map(_.distinct.sorted)
-        }
-      val zc = graft.functions.ZValue.z(columns.map(asDouble), cuts, bits).as("_z")
-      val commitDir = newCommitDir("zorder", cur.version + 1)
-      val fpb = filesPerBucket(target.size)
-      val withZ = rows
-        .withColumn("_bucket", bucketCol(cur.keyColumns, cur.nBuckets))
-        .withColumn("_z", zc)
-      writeBucketed(
-        withZ.repartitionByRange(target.size * fpb, col("_bucket"), col("_z"))
-          .sortWithinPartitions(col("_bucket"), col("_z"))
-          .drop("_z"),
-        commitDir, cur.bloomColumns)
-      // base-anchored seq: see compact()
-      val newFiles = listCommitFiles(commitDir, cur.version, delta = false)
-      val durMs = (System.nanoTime() - t0) / 1000000
-      System.err.println(s"[lake-zorder] buckets=${target.size} cols=${columns.mkString(",")} " +
-        s"removed=${targetFiles.size} new=${newFiles.size} durMs=$durMs")
-      publishMaintenance(cur, targetFiles.map(_.path).toSet, newFiles,
-        lineageNode("zorder", Map(
-          "columns" -> columns.mkString(","),
-          "bits" -> bits.toString,
-          "cutsReused" -> reuseCuts.toString,
-          "buckets" -> target.size.toString,
-          "removedFiles" -> targetFiles.size.toString,
-          "newFiles" -> newFiles.size.toString,
-          "durationMs" -> durMs.toString)),
-        propsUpdate =
-          if (reuseCuts) Map.empty
-          else Map("zorder.spec" -> zorderSpecJson(columns, bits, cuts)))
-    } finally rows.unpersist()
+    val targetFiles = cur.files.filter(f => target.contains(f.bucket))
+    if (targetFiles.isEmpty) Left(cur.copy(lineage = None))
+    else {
+      // the persist pays for the quantile-sketch + write double pass; under
+      // reuseCuts there is only the write pass — persisting would only add
+      // a materialization
+      val rows0 = snapshotRows(cur, targetFiles)
+      val rows =
+        if (reuseCuts) rows0
+        else rows0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      try {
+        val cuts: Array[Array[Double]] =
+          if (reuseCuts) {
+            val stored = cur.properties.get("zorder.spec").map(parseZorderSpec)
+              .getOrElse(sys.error("zorder(reuseCuts=true): no stored zorder.spec " +
+                "on this table — run a full zorder(columns) first"))
+            require(stored._1 == columns && stored._2 == bits,
+              s"zorder(reuseCuts=true): stored spec is over (${stored._1.mkString(",")}, " +
+                s"bits=${stored._2}) but (${columns.mkString(",")}, bits=$bits) was requested")
+            stored._3
+          } else {
+            // equal-frequency cuts, ALL dimensions in one GK-sketch pass
+            val statDf = rows.select(columns.indices.map(i =>
+              asDouble(columns(i)).as(s"_z$i")): _*)
+            val nCuts = (1 << bits) - 1
+            val probs = (1 to nCuts).map(_.toDouble / (nCuts + 1)).toArray
+            statDf.stat
+              .approxQuantile(columns.indices.map(i => s"_z$i").toArray, probs, 0.005)
+              .map(_.distinct.sorted)
+          }
+        val zc = graft.functions.ZValue.z(columns.map(asDouble), cuts, bits).as("_z")
+        val withZ = rows
+          .withColumn("_bucket", bucketCol(cur.keyColumns, cur.nBuckets))
+          .withColumn("_z", zc)
+        val staged = stageLaidOut(cur, "zorder",
+          withZ.repartitionByRange(target.size * filesPerBucket(target.size), col("_bucket"), col("_z"))
+            .sortWithinPartitions(col("_bucket"), col("_z"))
+            .drop("_z"))
+        val spec = if (reuseCuts) Map.empty[String, String] else Map("zorder.spec" -> zorderSpecJson(columns, bits, cuts))
+        Right(Change(Fold, staged, pathsOf(targetFiles), Seq(
+            "columns" -> columns.mkString(","), "bits" -> bits, "cutsReused" -> reuseCuts,
+            "buckets" -> target.size),
+          s => s.copy(properties = s.properties ++ spec)))
+      } finally rows.unpersist()
+    }
   }
 
   /** `zorder.spec` table property: `{"columns":[…],"bits":n,"cuts":[[…],…]}`. */
@@ -1951,92 +1821,72 @@ class LakeTable(val spark: SparkSession, val root: String) {
 
   private def rewriteWhere(pred: org.apache.spark.sql.Column,
       set: Option[Map[String, org.apache.spark.sql.Column]]): Snapshot = {
-    val t0 = System.nanoTime()
-    val cur = currentSnapshot.getOrElse(sys.error(s"no table at $root"))
-    set.foreach { assign =>
-      val unknown = assign.keys.filterNot(cur.schema.fieldNames.contains)
-      require(unknown.isEmpty, s"updateWhere: unknown columns ${unknown.mkString(", ")}")
-      val keyed = assign.keys.filter(cur.keyColumns.contains)
-      require(keyed.isEmpty, s"updateWhere: cannot assign key columns ${keyed.mkString(", ")}")
-    }
-    val e = org.apache.spark.sql.graftshim.toCatalyst(pred)
-    val unknownAttrs = predAttrs(e).filterNot(cur.schema.fieldNames.contains)
-    require(unknownAttrs.isEmpty,
-      s"predicate references unknown columns: ${unknownAttrs.mkString(", ")}")
     val opName = if (set.isEmpty) "deleteWhere" else "updateWhere"
-    val (keptBase, keptMor, total) = pruneForPredicate(cur, e)
-    if (keptBase.isEmpty && keptMor.isEmpty) {
+    commit(opName) { cur =>
+      set.foreach { assign =>
+        val unknown = assign.keys.filterNot(cur.schema.fieldNames.contains)
+        require(unknown.isEmpty, s"updateWhere: unknown columns ${unknown.mkString(", ")}")
+        val keyed = assign.keys.filter(cur.keyColumns.contains)
+        require(keyed.isEmpty, s"updateWhere: cannot assign key columns ${keyed.mkString(", ")}")
+      }
+      val e = org.apache.spark.sql.graftshim.toCatalyst(pred)
+      val unknownAttrs = predAttrs(e).filterNot(cur.schema.fieldNames.contains)
+      require(unknownAttrs.isEmpty,
+        s"predicate references unknown columns: ${unknownAttrs.mkString(", ")}")
+      val (keptBase, keptMor, total) = pruneForPredicate(cur, e)
       // stats prove no row matches: a clean no-op, nothing committed
-      System.err.println(s"[lake-$opName] stats-pruned to 0/$total files; no-op")
-      return cur.copy(lineage = None)
+      if (keptBase.isEmpty && keptMor.isEmpty) Left(cur.copy(lineage = None))
+      else {
+        // MoR candidate buckets rewrite whole (reconstruction needs the
+        // bucket); delta-free candidates rewrite at file granularity —
+        // base files within a bucket are key-disjoint, so siblings keep
+        val morBuckets = keptMor.map(_.bucket).toSet
+        val morFiles = cur.files.filter(f => morBuckets.contains(f.bucket))
+        val basePaths = keptBase.map(_.path).toSet
+        val rewriteBuckets = morBuckets ++ keptBase.map(_.bucket)
+        val parts =
+          (if (morFiles.isEmpty) Nil else Seq(reconstructRows(cur, morFiles))) ++
+            (if (keptBase.isEmpty) Nil else Seq(readFiles(cur, keptBase)))
+        val obs = Observation()
+        val observed = parts.reduce(_ unionByName _).observe(obs,
+          sum(when(pred, 1L).otherwise(0L)).as("matched"),
+          count(lit(1)).cast("long").as("scanned"))
+        val out = (set match {
+          case None =>
+            // keep rows where pred is false OR null (SQL DELETE semantics)
+            observed.filter(!coalesce(pred, lit(false)))
+          case Some(assign) =>
+            observed.select(cur.schema.fieldNames.toSeq.map { c =>
+              assign.get(c) match {
+                case Some(v) =>
+                  when(pred, v.cast(cur.schema(c).dataType)).otherwise(col(c)).as(c)
+                case None => col(c)
+              }
+            }: _*)
+        }).select(cur.schema.fieldNames.toSeq.map(col): _*)
+        val staged = stage(cur, opName, out, rewriteBuckets.toSeq)
+        val m = obs.get
+        def longOf(k: String): Long =
+          Option(m.getOrElse(k, null)).map(_.asInstanceOf[Number].longValue).getOrElse(0L)
+        val rewrittenCount = morFiles.size + keptBase.size
+        // Isolation is write-serializable, the Delta-lake default for
+        // this race: the predicate applies to the table state as of this
+        // commit's BASE version, so rows a racing writer inserted into
+        // untouched buckets survive even if they match the predicate —
+        // the delete/update serializes logically BEFORE the concurrent
+        // insert. The removal predicate stays sound on the new head
+        // because the rebase check guarantees no interim commit touched
+        // `rewriteBuckets`.
+        Right(Change(Rewrites(rewriteBuckets), staged,
+          f => morBuckets.contains(f.bucket) || basePaths.contains(f.path), Seq(
+            "predicate" -> pred.toString,
+            "matchedRows" -> longOf("matched"),
+            "scannedRows" -> longOf("scanned"),
+            "candidateBuckets" -> rewriteBuckets.size,
+            "prunedFiles" -> (total - rewrittenCount),
+            "rewrittenFiles" -> rewrittenCount)))
+      }
     }
-    // MoR candidate buckets rewrite whole (reconstruction needs the
-    // bucket); delta-free candidates rewrite at file granularity —
-    // base files within a bucket are key-disjoint, so siblings keep
-    val morBuckets = keptMor.map(_.bucket).toSet
-    val morFiles = cur.files.filter(f => morBuckets.contains(f.bucket))
-    val basePaths = keptBase.map(_.path).toSet
-    val removed: DataFile => Boolean =
-      f => morBuckets.contains(f.bucket) || basePaths.contains(f.path)
-    val rewriteBuckets = morBuckets ++ keptBase.map(_.bucket)
-    val parts =
-      (if (morFiles.isEmpty) Nil else Seq(reconstructRows(cur, morFiles))) ++
-        (if (keptBase.isEmpty) Nil else Seq(readFiles(cur, keptBase)))
-    val rows = parts.reduce(_ unionByName _)
-    val obs = Observation()
-    val observed = rows.observe(obs,
-      sum(when(pred, 1L).otherwise(0L)).as("matched"),
-      count(lit(1)).cast("long").as("scanned"))
-    val out = (set match {
-      case None =>
-        // keep rows where pred is false OR null (SQL DELETE semantics)
-        observed.filter(!coalesce(pred, lit(false)))
-      case Some(assign) =>
-        observed.select(cur.schema.fieldNames.toSeq.map { c =>
-          assign.get(c) match {
-            case Some(v) =>
-              when(pred, v.cast(cur.schema(c).dataType)).otherwise(col(c)).as(c)
-            case None => col(c)
-          }
-        }: _*)
-    }).select(cur.schema.fieldNames.toSeq.map(col): _*)
-    val commitDir = newCommitDir(opName, cur.version + 1)
-    val fpb = filesPerBucket(rewriteBuckets.size)
-    writeBucketed(
-      packedByBucket(out.withColumn("_bucket", bucketCol(cur.keyColumns, cur.nBuckets)),
-        rewriteBuckets.toSeq, fpb, cur.keyColumns),
-      commitDir, cur.bloomColumns)
-    val newFiles = listCommitFiles(commitDir, cur.version + 1, delta = false)
-    val m = obs.get
-    def longOf(k: String): Long =
-      Option(m.getOrElse(k, null)).map(_.asInstanceOf[Number].longValue).getOrElse(0L)
-    val rewrittenCount = morFiles.size + keptBase.size
-    val durMs = (System.nanoTime() - t0) / 1000000
-    System.err.println(s"[lake-$opName] buckets=${rewriteBuckets.size}/${cur.nBuckets} " +
-      s"files=$rewrittenCount/$total matched=${longOf("matched")} durMs=$durMs")
-    val lineage = lineageNode(opName, Map(
-      "predicate" -> pred.toString,
-      "matchedRows" -> longOf("matched").toString,
-      "scannedRows" -> longOf("scanned").toString,
-      "candidateBuckets" -> rewriteBuckets.size.toString,
-      "prunedFiles" -> (total - rewrittenCount).toString,
-      "rewrittenFiles" -> rewrittenCount.toString,
-      "newFiles" -> newFiles.size.toString,
-      "durationMs" -> durMs.toString))
-    // OCC: a lost version race rebases in O(metadata) when every interim
-    // commit touched buckets DISJOINT from the rewrite set (an overlap
-    // is the lost-update anomaly and aborts). Isolation is
-    // write-serializable, the Delta-lake default for exactly this race:
-    // the predicate applies to the table state as of this commit's BASE
-    // version, so rows a racing writer inserted into untouched buckets
-    // survive even if they match the predicate — the delete/update
-    // serializes logically BEFORE the concurrent insert. The removal
-    // predicate stays sound on the new head because the rebase check
-    // guarantees no interim commit touched `rewriteBuckets`.
-    publishOptimistic(cur, base => base.copy(version = base.version + 1,
-      manifests = nextManifests(base, removed, newFiles.map(_.copy(seq = base.version + 1))),
-      lineage = Some(lineage)),
-      Some(rewriteBuckets), None)
   }
 
   /** Re-bucket the table under a new bucket count as ONE maintenance
@@ -2048,31 +1898,15 @@ class LakeTable(val spark: SparkSession, val root: String) {
     * Logical state, schema and checkpoint entries are unchanged; readers
     * atomically flip to the new layout; old files become vacuum-able once
     * prior snapshots expire. */
-  def rebucket(newBuckets: Int): Snapshot = {
-    val t0 = System.nanoTime()
-    val cur = currentSnapshot.getOrElse(sys.error(s"no table at $root"))
+  def rebucket(newBuckets: Int): Snapshot = commit("rebucket") { cur =>
     require(newBuckets >= 1, s"invalid bucket count $newBuckets")
-    if (newBuckets == cur.nBuckets) return cur.copy(lineage = None)
-    val rows = read() // reconstructed current state (deltas folded in)
-    val commitDir = newCommitDir("rebucket", cur.version + 1)
-    val fpb = filesPerBucket(newBuckets)
-    writeBucketed(
-      packedByBucket(rows.withColumn("_bucket", bucketCol(cur.keyColumns, newBuckets)),
-        0 until newBuckets, fpb, cur.keyColumns),
-      commitDir, cur.bloomColumns)
-    val newFiles = listCommitFiles(commitDir, cur.version + 1, delta = false)
-    val durMs = (System.nanoTime() - t0) / 1000000
-    System.err.println(s"[lake-rebucket] ${cur.nBuckets} -> $newBuckets files=${newFiles.size} durMs=$durMs")
-    val next = cur.copy(version = cur.version + 1,
-      nBuckets = newBuckets,
-      manifests = writeManifest(newFiles).toSeq,
-      lineage = Some(lineageNode("rebucket", Map(
-        "fromBuckets" -> cur.nBuckets.toString,
-        "toBuckets" -> newBuckets.toString,
-        "newFiles" -> newFiles.size.toString,
-        "durationMs" -> durMs.toString))))
-    writeSnapshot(next)
-    next
+    if (newBuckets == cur.nBuckets) Left(cur.copy(lineage = None))
+    else Right(Change(Exclusive,
+      stage(cur.copy(nBuckets = newBuckets), "rebucket", read(Some(cur.version)),
+        0 until newBuckets),
+      removed = _ => true,
+      lineage = Seq("fromBuckets" -> cur.nBuckets, "toBuckets" -> newBuckets),
+      edit = _.copy(nBuckets = newBuckets)))
   }
 
   // ------------------------------------------------------------ maintenance
@@ -2108,7 +1942,7 @@ class LakeTable(val spark: SparkSession, val root: String) {
     val next = target.copy(version = cur.version + 1,
       manifests = nextManifests(target, _ => false, Nil),
       lineage = Some(lineageNode("rollback",
-        Map("toVersion" -> toVersion.toString, "fromVersion" -> cur.version.toString))))
+        Seq("toVersion" -> toVersion.toString, "fromVersion" -> cur.version.toString))))
     writeSnapshot(next)
     next
   }
@@ -2195,19 +2029,7 @@ class LakeTable(val spark: SparkSession, val root: String) {
       // deletes are independent driver-side FS calls — run them on a
       // bounded pool (serial deletion of a large vacuum batch is pure
       // driver wall time, guide §5)
-      val victims = toDelete.result()
-      if (victims.size <= 1) victims.foreach { p => if (fs.delete(p, false)) deleted += 1 }
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(8, victims.size))
-        try {
-          val tasks: Seq[java.util.concurrent.Callable[Boolean]] =
-            victims.map(p => new java.util.concurrent.Callable[Boolean] {
-              override def call(): Boolean = fs.delete(p, false)
-            })
-          deleted += pool.invokeAll(tasks.asJava).asScala.count(_.get())
-        } finally pool.shutdown()
-      }
+      deleted += onPool(toDelete.result())(p => fs.delete(p, false)).count(identity)
       // prune now-empty commit directories
       fs.listStatus(dataDir).foreach { d =>
         if (d.isDirectory && !fs.listFiles(d.getPath, true).hasNext)
@@ -2231,6 +2053,25 @@ class LakeTable(val spark: SparkSession, val root: String) {
 }
 
 object LakeTable {
+  /** How a data commit that lost the version race may rebase onto the
+    * new head, and which seq its staged files carry. */
+  private sealed trait Rebase
+  /** Append-only commits (append, mergeDeltas) serialize after any
+    * interim commit: merge-on-read orders by seq, and the rebase
+    * re-stamps the staged files with the final version. */
+  private case object AppendOnly extends Rebase
+  /** Copy-on-write rewrites of `buckets` (merge, deleteWhere,
+    * updateWhere) rebase only over interim commits that touched other
+    * buckets; re-stamped like AppendOnly. */
+  private case class Rewrites(buckets: Set[Int]) extends Rebase
+  /** Key-preserving folds (compact, cluster, zorder) rebase only over
+    * `maintenanceComposableOps`; their files keep the base version as
+    * seq, below any interim commit. */
+  private case object Fold extends Rebase
+  /** Overwrite, rebucket and metadata changes never rebase: a lost race
+    * throws [[ConcurrentCommitException]] for the caller to retry. */
+  private case object Exclusive extends Rebase
+
   private[lake] val manifestCache =
     scala.collection.concurrent.TrieMap.empty[String, Seq[LakeTable#DataFile]]
 

@@ -2,7 +2,7 @@ package graft.sql
 
 import org.apache.spark.sql.{Column, Row, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, EqualTo, Expression}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, Cast, EqualTo, EvalMode, Expression}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
@@ -294,13 +294,13 @@ case class GraftInsertCommand(root: String, query: LogicalPlan,
           .filterNot(n => src.columns.exists(_.equalsIgnoreCase(n)))
         require(missing.isEmpty, s"graft-lake INSERT BY NAME: query is " +
           s"missing table columns ${missing.mkString(", ")}")
-        src.select(fields.map(f => col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
+        src.select(fields.map(f => GraftDml.storeAs(GraftDml.field(src, f.name), f)).toSeq: _*)
       } else {
         require(src.columns.length == fields.length,
           s"graft-lake INSERT: query has ${src.columns.length} columns, " +
             s"table has ${fields.length} (positional alignment)")
-        src.select(src.columns.zip(fields).map { case (c, f) =>
-          col(c).cast(f.dataType).as(f.name)
+        src.select(src.schema.fields.zip(fields).map { case (c, f) =>
+          GraftDml.storeAs(c, f)
         }.toSeq: _*)
       }
     val commitId = s"sql-insert-${java.util.UUID.randomUUID().toString.take(8)}"
@@ -330,8 +330,8 @@ case class GraftMergeCommand(root: String, source: LogicalPlan, op: String)
       .agg(count(lit(1)).as("n")).filter(col("n") > 1).limit(1).collect()
     if (dup.nonEmpty) sys.error(
       s"graft-lake MERGE: source has duplicate key ${dup.head.toSeq.init.mkString("|")}")
-    val aligned = src.select(snap.schema.fieldNames
-      .map(n => col(n).cast(snap.schema(n).dataType)).toSeq: _*)
+    val aligned = src.select(snap.schema.fields
+      .map(f => GraftDml.storeAs(GraftDml.field(src, f.name), f)).toSeq: _*)
     val commitId = s"sql-merge-${java.util.UUID.randomUUID().toString.take(8)}"
     val before = t.currentSnapshot.map(_.version)
     if (op == "sync") { // full sync: the final state IS the source
@@ -348,6 +348,24 @@ case class GraftMergeCommand(root: String, source: LogicalPlan, op: String)
 }
 
 private[sql] object GraftDml {
+  /** Source column `from` stored as table column `to` under Spark's
+    * ANSI store assignment (its default `storeAssignmentPolicy`): the
+    * type pair must pass `Cast.canANSIStoreAssign`, and the cast runs in
+    * ANSI mode, so an overflowing value raises. With ANSI off a plain
+    * cast turns a string that is not a number into a null bigint, and a
+    * bigint beyond the int range into a wrapped int, without a word. */
+  def storeAs(from: StructField, to: StructField): Column = {
+    require(Cast.canANSIStoreAssign(from.dataType, to.dataType),
+      s"graft-lake: cannot store column '${from.name}' of type " +
+        s"${from.dataType.simpleString} into '${to.name}' of type ${to.dataType.simpleString}")
+    graftshim.toColumn(Cast(graftshim.toExpression(col(from.name)), to.dataType, None,
+      EvalMode.ANSI)).as(to.name)
+  }
+
+  /** The source field a table column resolves to (case-insensitive). */
+  def field(src: org.apache.spark.sql.DataFrame, name: String): StructField =
+    src.schema.find(_.name.equalsIgnoreCase(name)).get
+
   val affectedOutput: Seq[Attribute] =
     org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(
       StructType(Seq(

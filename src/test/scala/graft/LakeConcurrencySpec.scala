@@ -209,4 +209,51 @@ class LakeConcurrencySpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(t.currentSnapshot.get.nBuckets == 8)
     assert(t.read().count() == 20)
   }
+
+  /** One row per write operation whose race policy no case above pins:
+    * `loser` runs on a table seeded with ids 0..19 (v1), and `racer`
+    * commits from a second instance inside its publish window (v2). A
+    * rebasing loser lands at v3 beside the racer's rows; a throwing one
+    * leaves the racer's commit as the head. `ids` = the keys after. */
+  private case class Race(name: String, loser: LakeTable => Any,
+      racer: LakeTable => Any, rebases: Boolean, ids: Set[Long])
+
+  private val seeded = (0L until 20L).toSet
+  private val raced = (200L until 205L).toSet
+  private val races = Seq(
+    Race("append rebases over an interim mergeDeltas; both batches land",
+      _.append(rows(100, 110), "cp-a", 0L), _.mergeDeltas(deltas(200, 205, "B"), "cp-b", 0L),
+      rebases = true, seeded ++ (100L until 110L) ++ raced),
+    Race("overwrite throws on a lost race; state intact",
+      _.overwrite(rows(100, 110), "cp-a", 0L), _.mergeDeltas(deltas(200, 205, "B"), "cp-b", 0L),
+      rebases = false, seeded ++ raced),
+    Race("cluster rebases over an interim append",
+      _.cluster(Seq("ts")), _.append(rows(200, 205, "B"), "cp-b", 0L),
+      rebases = true, seeded ++ raced),
+    Race("zorder rebases over an interim append",
+      _.zorder(Seq("id", "ts")), _.append(rows(200, 205, "B"), "cp-b", 0L),
+      rebases = true, seeded ++ raced),
+    Race("an empty merge batch rebases like any merge",
+      _.merge(deltas(0, 0, "A"), "cp-a", 0L), _.mergeDeltas(deltas(200, 205, "B"), "cp-b", 0L),
+      rebases = true, seeded ++ raced),
+    Race("setStatsColumns throws on a lost race",
+      _.setStatsColumns(Seq("ts")), _.append(rows(200, 205, "B"), "cp-b", 0L),
+      rebases = false, seeded ++ raced))
+
+  races.foreach { r =>
+    test(s"race policy: ${r.name}") {
+      val t = newTable()
+      t.append(rows(0, 20), "seed", 0L)
+      val t2 = new LakeTable(spark, t.root)
+      t.preCommitHook = () => { r.racer(t2); () }
+      if (r.rebases) r.loser(t)
+      else intercept[ConcurrentCommitException](r.loser(t))
+      val head = t.currentSnapshot.get
+      assert(head.version == (if (r.rebases) 3 else 2))
+      assert(names(t).keySet == r.ids)
+      if (!r.rebases) assert(!head.commits.contains("cp-a") && head.statsColumns.isEmpty,
+        "the loser must leave no trace")
+    }
+  }
 }
+

@@ -193,6 +193,33 @@ class LakeDmlSqlSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(byName.getLong(1) == 3L && byName.getLong(2) == 49000L)
   }
 
+  test("SQL writes reject a store assignment ANSI would refuse, even with ANSI off") {
+    val (t, v) = newTable()
+    val ver = t.currentVersion.get
+    spark.range(5, 6).select(col("id"), lit(0L).as("grp"), lit("x").as("v"))
+      .createOrReplaceTempView("dml_src_str")
+    def rejected(sql: String, expect: String): Unit = {
+      val msg = intercept[Exception](spark.sql(sql)).getMessage
+      assert(msg.contains(expect), msg)
+    }
+    // with ANSI off, a plain cast would write these as null / wrapped
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try {
+      val str = "of type string into 'v' of type bigint"
+      rejected(s"INSERT INTO $v VALUES (9000, 0, 'x')", str)
+      rejected(s"INSERT INTO $v BY NAME SELECT 'x' AS v, 9000L AS id, 0L AS grp", str)
+      rejected(s"""MERGE INTO $v t USING dml_src_str s ON t.id = s.id
+        WHEN MATCHED THEN UPDATE SET *
+        WHEN NOT MATCHED THEN INSERT *""", str)
+      // a numeric narrowing passes the type check; its overflow raises
+      rejected(s"INSERT INTO $v VALUES (9000, 0, CAST(1e30 AS DECIMAL(38, 0)))", "OVERFLOW")
+      assert(t.currentVersion.get == ver, "a rejected write commits nothing")
+      // int → bigint is a lossless store and still lands
+      spark.sql(s"INSERT INTO $v VALUES (9001, 1, 5)")
+      assert(t.read().filter(col("id") === 9001L).head.getLong(2) == 5L)
+    } finally spark.conf.set("spark.sql.ansi.enabled", "true")
+  }
+
   test("DML works against the real-time (merge-on-read) view too") {
     val t = new LakeTable(spark, Scratch.dir("lake-dml-mor"))
     t.create(schema, Seq("id"), nBuckets = 4)

@@ -101,4 +101,24 @@ class LakeTagSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val withStats = f.filter(col("stats").contains("\"v\"")).count()
     assert(withStats > 0, "footer-harvested min/max must surface in the view")
   }
+
+  test("a retag retracted by a concurrent expiry restores the tag it replaced") {
+    val t = newTable()
+    t.append(rows(0, 10), "c0", 0L)   // v1
+    val v1 = t.currentVersion.get
+    t.tag("audit", Some(v1))
+    t.append(rows(10, 20), "c1", 1L)  // v2
+    val v2 = t.currentVersion.get
+    t.append(rows(20, 30), "c2", 2L)  // v3
+    // expiry runs inside the retag's publish window: v2 is not pinned
+    // yet (the old tag still pins v1), so it goes, and the retag must be
+    // retracted
+    val t2 = new LakeTable(spark, t.root)
+    t.preCommitHook = () => { t2.expireSnapshots(keepLast = 1); () }
+    val ex = intercept[Exception] { t.tag("audit", Some(v2)) }
+    assert(ex.getMessage.contains("expired by concurrent maintenance"))
+    assert(t.tags() == Map("audit" -> v1), "the prior ref must survive the retraction")
+    assert(t.read(Some(v1)).count() == 10)
+  }
 }
+
