@@ -19,9 +19,18 @@ import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DateType,
   * {{{
   *   <root>/metadata/v%05d.json          -- immutable snapshot metadata
   *   <root>/metadata/manifest-<id>.json  -- immutable data-file lists
-  *   <root>/metadata/version-hint.text
-  *   <root>/data/commit-<v>-<id>/_bucket=<k>/part-*.parquet
+  *   <root>/data/commit-<v>-<id>/_bucket=<k>/part-<task>-<attempt>-<job>*.parquet
   * }}}
+  *
+  * A commit's write tasks put their files straight into its commit dir
+  * (unique per commit, invisible until the snapshot listing its files is
+  * published) and report them, with footer stats, to the driver
+  * ([[CommitWriter]]): there is no `_temporary` tree, no rename, no
+  * `_SUCCESS` marker and no directory listing, and a failed task's files
+  * are orphans that [[vacuum]] removes. `currentVersion` lists
+  * `metadata/`, so no version-hint file is kept. On a `file:` root the
+  * driver and the write tasks use [[InProcessChmodLocalFs]], which sets
+  * file modes in process instead of forking a `chmod` per file.
   *
   * Snapshot metadata is MANIFEST-STYLE (Iceberg's shape): a snapshot
   * holds a list of immutable manifest files, each listing data files.
@@ -71,7 +80,8 @@ class LakeTable(val spark: SparkSession, val root: String) {
   import LakeTable.{AppendOnly, Exclusive, Fold, Rebase, Rewrites}
 
   private val mapper = new ObjectMapper()
-  private def fs: FileSystem = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private lazy val fs: FileSystem =
+    InProcessChmodLocalFs.forRoot(new Path(root), spark.sparkContext.hadoopConfiguration)
   private def metaDir = new Path(root, "metadata")
   private def versionFile(v: Int) = new Path(metaDir, f"v$v%05d.json")
 
@@ -284,9 +294,6 @@ class LakeTable(val spark: SparkSession, val root: String) {
     try out.write(mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))
     finally out.close()
     publishExclusive(tmp, target)
-    val hint = new Path(metaDir, "version-hint.text")
-    val h = fs.create(hint, true)
-    try h.write(s.version.toString.getBytes("UTF-8")) finally h.close()
   }
 
   /** Publish a fully-written temp file at `target`, failing if `target`
@@ -1136,150 +1143,9 @@ class LakeTable(val spark: SparkSession, val root: String) {
 
   // ------------------------------------------------------------ write
 
-  /** List parquet files written under a commit dir, keyed by bucket;
-    * harvests min/max footer stats for `statCols` (one footer read per
-    * NEW file — O(changed files), like the manifests). Seqs are left at
-    * 0 for [[commit]] to stamp. */
-  private def listCommitFiles(commitDir: Path, delta: Boolean,
-      statCols: Seq[String]): Seq[DataFile] = {
-    // NOT fs.listFiles(dir, true): that fetches per-file block locations
-    // and cost a measured ~150 ms of pure driver wall per 32-file commit
-    // on a local FS. A listStatus walk (bucket dirs fanned out on a
-    // bounded pool) lists the same files for ~an order of magnitude less.
-    val fsys = fs
-    val top = fsys.listStatus(commitDir)
-    val (dirs, files0) = top.partition(_.isDirectory)
-    def parquetsOf(sts: Array[org.apache.hadoop.fs.FileStatus]): Seq[Path] =
-      sts.collect { case s if s.getPath.getName.endsWith(".parquet") => s.getPath }.toSeq
-    val found = parquetsOf(files0) ++
-      onPool(dirs.toSeq)(d => parquetsOf(fsys.listStatus(d.getPath))).flatten
-    def toDataFile(fp: Path): DataFile = {
-      val p = fp.toString
-      val rel = p.substring(p.indexOf(root) + root.length + 1)
-      val bucket = "_bucket=(\\d+)".r.findFirstMatchIn(p)
-        .map(_.group(1).toInt).getOrElse(0)
-      val (ranges, nulls, rows) =
-        if (statCols.isEmpty) (Map.empty[String, (Any, Any)], Map.empty[String, Long], -1L)
-        else footerStats(fp, statCols)
-      DataFile(rel, bucket, delta = delta, stats = ranges, nulls = nulls, rows = rows)
-    }
-    // footer-stat harvest is one parquet-footer read per NEW file on the
-    // DRIVER; serialized it adds ~5-10 ms × files to every commit of a
-    // stats table (guide §5: driver-side single-threaded work shows up as
-    // "nothing running"). Read footers on a bounded pool instead.
-    if (statCols.isEmpty) found.map(toDataFile) else onPool(found)(toDataFile)
-  }
-
-  /** `f` over `items` on a bounded pool (≤ 8 threads), for independent
-    * driver-side FS calls that would otherwise run serially; zero or one
-    * item runs inline. */
-  private def onPool[A, B](items: Seq[A])(f: A => B): Seq[B] =
-    if (items.size <= 1) items.map(f)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(8, items.size))
-      try pool.invokeAll(items.map(a => new java.util.concurrent.Callable[B] {
-          override def call(): B = f(a)
-        }).asJava).asScala.map(_.get()).toSeq
-      finally pool.shutdown()
-    }
-
-  /** Per-column (min, max) + null counts + row count from a parquet
-    * footer, canonical form (Long / Double / String). A column's range is
-    * OMITTED (unknown → never prunes) if any row group lacks usable
-    * value statistics for it; its null count is OMITTED if any row group
-    * has numNulls unset (null counts survive all-null chunks, where the
-    * range cannot — an all-null file still prunes `IS NOT NULL`). */
-  private def footerStats(p: Path, cols: Seq[String])
-      : (Map[String, (Any, Any)], Map[String, Long], Long) = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val want = cols.toSet
-    val acc = scala.collection.mutable.Map[String, (Any, Any)]()
-    val bad = scala.collection.mutable.Set[String]()
-    val seen = scala.collection.mutable.Map[String, Int]()
-    val nullAcc = scala.collection.mutable.Map[String, Long]()
-    val nullSeen = scala.collection.mutable.Map[String, Int]()
-    var rowCount = 0L
-    def canon(v: Any): Option[Any] = v match {
-      case i: java.lang.Integer => Some(i.longValue)
-      case l: java.lang.Long => Some(l.longValue)
-      case f: java.lang.Float => Some(f.doubleValue)
-      case d: java.lang.Double => Some(d.doubleValue)
-      case b: org.apache.parquet.io.api.Binary => Some(b.toStringUsingUTF8)
-      case _ => None
-    }
-    def lt(a: Any, b: Any): Boolean = StatsPruner.cmp(a, b).exists(_ < 0)
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(p, spark.sparkContext.hadoopConfiguration))
-    val nBlocks = try {
-      val blocks = reader.getFooter.getBlocks.asScala
-      for (blk <- blocks) {
-        rowCount += blk.getRowCount
-        for (c <- blk.getColumns.asScala) {
-          val name = c.getPath.toDotString
-          if (want.contains(name)) {
-            val st = c.getStatistics
-            if (st != null && !st.isEmpty && st.isNumNullsSet) {
-              nullSeen(name) = nullSeen.getOrElse(name, 0) + 1
-              nullAcc(name) = nullAcc.getOrElse(name, 0L) + st.getNumNulls
-            }
-            if (!bad.contains(name)) {
-              val ok = st != null && !st.isEmpty && st.hasNonNullValue
-              val mn = if (ok) canon(st.genericGetMin) else None
-              val mx = if (ok) canon(st.genericGetMax) else None
-              (mn, mx) match {
-                case (Some(a), Some(b)) =>
-                  seen(name) = seen.getOrElse(name, 0) + 1
-                  acc.get(name) match {
-                    case Some((pa, pb)) =>
-                      acc(name) = (if (lt(a, pa)) a else pa, if (lt(pb, b)) b else pb)
-                    case None => acc(name) = (a, b)
-                  }
-                case _ => bad += name; acc.remove(name)
-              }
-            }
-          }
-        }
-      }
-      blocks.size
-    } finally reader.close()
-    // a column missing from some row group (all-null chunk dropped by the
-    // writer) has unknown bounds there: keep it only if every block saw it
-    (acc.filter { case (n, _) => seen.getOrElse(n, 0) == nBlocks }.toMap,
-      nullAcc.filter { case (n, _) => nullSeen.getOrElse(n, 0) == nBlocks }.toMap,
-      rowCount)
-  }
-
-  /** Bucket-partitioned parquet write; when the snapshot declares
-    * `bloomColumns`, each data file gets an adaptively-sized parquet
-    * bloom filter per column (parquet-mr sizes it to the file's actual
-    * NDV up to the 1 MB cap). The parquet reader's row-group filter
-    * consults blooms for `=`/`IN` predicates — [[readKeys]] pushes
-    * exactly those. */
-  private def writeBucketed(df: DataFrame, dir: Path, bloomCols: Seq[String]): Unit = {
-    val base = df.write
-    val w =
-      if (bloomCols.isEmpty) base
-      else bloomCols.foldLeft(
-        base.option("parquet.bloom.filter.adaptive.enabled", "true")) {
-        (b, c) => b.option(s"parquet.bloom.filter.enabled#$c", "true")
-      }
-    // write timestamps as standard INT64 micros, not Spark's default
-    // INT96: INT96 chunks carry no usable footer min/max, so a
-    // timestamp statsColumn would never prune (and micros match the
-    // canonical Long form StatsPruner compares TimestampType literals
-    // in). Session-conf scoped to the write — parquet exposes no
-    // per-write option for this.
-    val key = "spark.sql.parquet.outputTimestampType"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "TIMESTAMP_MICROS")
-    try w.partitionBy("_bucket").parquet(dir.toString)
-    finally spark.conf.set(key, prev)
-  }
-
-  /** Files one commit's write left in its commit dir (seq unset:
-    * [[commit]] stamps it), and how long the write and the listing took. */
-  private case class Staged(files: Seq[DataFile], writeMs: Long = 0L, listMs: Long = 0L)
+  /** Files one commit's write tasks reported (seq unset: [[commit]]
+    * stamps it), and how long the write took. */
+  private case class Staged(files: Seq[DataFile], writeMs: Long = 0L)
 
   /** What a commit does to the head it was planned on: the files it
     * `staged` and `removed`, how it may rebase if it loses the version
@@ -1304,8 +1170,8 @@ class LakeTable(val spark: SparkSession, val root: String) {
     * and [[rebaseCheck]] allow, rebuilds the snapshot on the new head in
     * O(metadata): no data is rewritten. Lineage gets the commit's own
     * fields plus `checkpointId`/`batchId` (with a replay key) and
-    * `durationMs`, `writeMs`, `listMs`, `newFiles`, `removedFiles`,
-    * `reusedManifests`, `newManifests`. */
+    * `durationMs`, `writeMs`, `newFiles`, `removedFiles`,
+    * `reusedManifests`, `newManifests` and `rebaseAttempts`. */
   private def commit(op: String, replayKey: Option[(String, Long)] = None)(
       plan: Snapshot => Either[Snapshot, Change]): Snapshot = {
     val t0 = System.nanoTime()
@@ -1318,8 +1184,9 @@ class LakeTable(val spark: SparkSession, val root: String) {
     }
     val lineage = lineageNode(op, c.lineage ++
       replayKey.toSeq.flatMap { case (id, b) => Seq("checkpointId" -> id, "batchId" -> b) } ++
-      Seq("writeMs" -> c.staged.writeMs, "listMs" -> c.staged.listMs,
-        "newFiles" -> c.staged.files.size, "durationMs" -> (System.nanoTime() - t0) / 1000000))
+      Seq("writeMs" -> c.staged.writeMs, "newFiles" -> c.staged.files.size,
+        "durationMs" -> (System.nanoTime() - t0) / 1000000))
+    var tries = 0
     def build(base: Snapshot): Snapshot = {
       // a fold's rows are the state as of `cur`: anchored at its version,
       // any interim commit surviving the rebase overlays them on read;
@@ -1330,11 +1197,11 @@ class LakeTable(val spark: SparkSession, val root: String) {
       val reused = manifests.count(m => basePaths(m.path))
       lineage.put("removedFiles", base.files.count(c.removed))
       lineage.put("reusedManifests", reused).put("newManifests", manifests.size - reused)
+      lineage.put("rebaseAttempts", tries)
       c.edit(base.copy(version = base.version + 1, manifests = manifests,
         commits = base.commits ++ replayKey, lineage = Some(lineage)))
     }
     var base = cur
-    var tries = 0
     while (true) {
       val attempt = build(base)
       try { writeSnapshot(attempt); return attempt }
@@ -1347,7 +1214,6 @@ class LakeTable(val spark: SparkSession, val root: String) {
             catch { case scala.util.control.NonFatal(_) => throw e }
           if (replayed(head)) return head.copy(lineage = None)
           rebaseCheck(base, head, c.policy)
-          System.err.println(s"[lake-occ] rebasing onto v${head.version} (attempt $tries)")
           base = head
       }
     }
@@ -1357,27 +1223,33 @@ class LakeTable(val spark: SparkSession, val root: String) {
   /** Stage `rows` for a commit on `cur`: hash-bucket them, route each
     * (bucket, salt) slot of `buckets` to its own write task
     * ([[packedByBucket]]; otherwise every task splits into every bucket →
-    * tasks × buckets small files), write and list them. */
+    * tasks × buckets small files) and write them. */
   private def stage(cur: Snapshot, prefix: String, rows: DataFrame, buckets: Seq[Int],
       delta: Boolean = false): Staged =
     stageLaidOut(cur, prefix, packedByBucket(
       rows.withColumn("_bucket", bucketCol(cur.keyColumns, cur.nBuckets)),
       buckets, filesPerBucket(buckets.size), cur.keyColumns), delta)
 
-  /** Write a frame already carrying `_bucket` into a fresh commit dir and
-    * list the files it left. The dir is version-tagged for humans and
-    * uniquified, so two RACING writers staging the same next version
-    * never interleave files in one directory (the loser's staged files
-    * are invisible to snapshots and vacuum-able if its rebase aborts). */
+  /** Write a frame already carrying `_bucket` into a fresh commit dir;
+    * the staged files are the ones its committed write tasks reported
+    * ([[CommitWriter]]), so nothing is listed and no footer is read on
+    * the driver. The dir is version-tagged for humans and uniquified, so
+    * two RACING writers staging the same next version never interleave
+    * files in one directory (the loser's staged files are invisible to
+    * snapshots and vacuum-able if its rebase aborts). When the snapshot
+    * declares `bloomColumns`, each data file gets an adaptively-sized
+    * parquet bloom filter per column (parquet-mr sizes it to the file's
+    * actual NDV up to the 1 MB cap); the parquet reader's row-group
+    * filter consults blooms for `=`/`IN` predicates — [[readKeys]]
+    * pushes exactly those. */
   private def stageLaidOut(cur: Snapshot, prefix: String, laidOut: DataFrame,
       delta: Boolean = false): Staged = {
-    val dir = new Path(root,
-      s"data/$prefix-${cur.version + 1}-${java.util.UUID.randomUUID().toString.take(8)}")
+    val rel = s"data/$prefix-${cur.version + 1}-${java.util.UUID.randomUUID().toString.take(8)}"
     val t0 = System.nanoTime()
-    writeBucketed(laidOut, dir, cur.bloomColumns)
-    val t1 = System.nanoTime()
-    val files = listCommitFiles(dir, delta, cur.statsColumns)
-    Staged(files, (t1 - t0) / 1000000, (System.nanoTime() - t1) / 1000000)
+    val written = CommitWriter.write(laidOut, fs, new Path(root), rel, cur.bloomColumns,
+      cur.statsColumns)
+    Staged(written.map(w => DataFile(w.path, w.bucket, delta = delta, stats = w.stats,
+      nulls = w.nulls, rows = w.rows)), (System.nanoTime() - t0) / 1000000)
   }
 
   /** Removal by PATH of the files a fold read: files an interim commit
@@ -1996,6 +1868,19 @@ class LakeTable(val spark: SparkSession, val root: String) {
         id -> mapper.readTree(readFully(s.getPath)).get("version").asInt()
       }.toMap
   }
+
+  /** `f` over `items` on a bounded pool (≤ 8 threads), for independent
+    * driver-side FS calls that would otherwise run serially; zero or one
+    * item runs inline. */
+  private def onPool[A, B](items: Seq[A])(f: A => B): Seq[B] =
+    if (items.size <= 1) items.map(f)
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(8, items.size))
+      try pool.invokeAll(items.map(a => new java.util.concurrent.Callable[B] {
+          override def call(): B = f(a)
+        }).asJava).asScala.map(_.get()).toSeq
+      finally pool.shutdown()
+    }
 
   /** Delete data files not referenced by any RETAINED snapshot — orphans
     * from failed commits and files only expired snapshots referenced —

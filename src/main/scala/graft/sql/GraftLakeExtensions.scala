@@ -377,9 +377,6 @@ private[sql] object GraftDml {
   def affected(t: LakeTable, before: Option[Int], after: Int,
       counter: String): Any = {
     if (before.contains(after)) return 0L // no-op: nothing committed
-    t.historyDetail().find(_._1 == after).flatMap(_._4).flatMap { js =>
-      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(js)
-      Option(node.get(counter)).map(_.asLong())
-    }.orNull
+    t.snapshot(after).lineage.flatMap(n => Option(n.get(counter))).map(_.asLong()).orNull
   }
 }

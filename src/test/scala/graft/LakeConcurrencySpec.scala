@@ -58,6 +58,8 @@ class LakeConcurrencySpec extends AnyFunSuite with SparkSessionTestWrapper {
     val snap = t.mergeDeltas(deltas(0, 6, "A"), "cp-a", 0L)
     assert(snap.version == 2, "loser must land at head+1 after rebase")
     assert(snap.lineage.isDefined)
+    assert(snap.lineage.get.get("rebaseAttempts").asInt == 1)
+    assert(t.snapshot(1).lineage.get.get("rebaseAttempts").asInt == 0)
     // both batches fully present; overlap keys carry the rebased loser's value
     val got = names(t)
     assert(got.keySet == (0L until 15L).toSet)
