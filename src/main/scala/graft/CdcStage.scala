@@ -3,15 +3,17 @@ package graft
 import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.apply.CdcApply
-import graft.decode.{DecodeOptions, EnvelopeDecoder, MongoDecoder}
+import graft.decode.DecodeOptions
 import graft.model.{ArcSchemaParser, CdcSchema}
+import graft.streaming.CdcPipeline
 
 /** The reference's user-facing stage contract re-expressed as a plain
   * config case class + execute (DebeziumTransform's O1/O2/O18/O19 surface:
-  * inputView → decode → merge (optionally seeded from initialStateView) →
+  * inputView → decode → merge (optionally onto initialStateView) →
   * repartition → outputView, with optional persist). A user of the
   * reference plugin maps its HOCON fields 1:1 onto this class.
   *
@@ -89,6 +91,11 @@ object CdcStage {
     * DataFrame, registered as `outputView`. */
   def execute(cfg: CdcStageConfig)(implicit spark: SparkSession): DataFrame = {
     val raw = spark.table(cfg.inputView)
+    // a strict chain and a state view both need prior state across
+    // micro-batches, which only the lake-backed pipeline carries
+    require(!raw.isStreaming || (!cfg.strict && cfg.initialStateView.isEmpty),
+      s"input view '${cfg.inputView}' is streaming: a strict or initialStateView stage " +
+        "needs state carried across micro-batches; stream through graft.streaming.CdcPipeline")
     val schema = resolveSchema(cfg)
 
     // the reference groups initialStateView by initialStateKey — accepting
@@ -127,25 +134,24 @@ object CdcStage {
     // too — validate stays on; the validate=false fast path is bench-only
     val opts = DecodeOptions(strict = cfg.strict, validate = true,
       connector = Some(connector))
-    val events = connector match {
-      case "mongodb" => MongoDecoder.decode(raw, schema, opts)
-      // per-message routing; applyStrict already dispatches per key on
-      // the event's own connector (Mongo patch chain vs relational)
-      case "mixed" => graft.decode.MixedTopic.decode(raw, schema, opts)
-      case _ => EnvelopeDecoder.decodeRelational(raw, schema, opts)
-    }
+    val keyCols = schema.keyNames
+    val payloadCols = schema.structType.fieldNames.filterNot(keyCols.contains).toSeq
 
-    // initial-state chaining (reference cogroup :660-680)
-    val seeded = cfg.initialStateView match {
-      case Some(view) =>
-        CdcApply.withInitialState(events, spark.table(view), schema)
-      case None =>
-        events.select("key", "offset", "connector", "operation", "before", "after", "keyMask")
+    // prior state is a keyed table the deltas merge onto, like the lake
+    // MERGE's snapshot. A key held twice has no single prior row: the
+    // window count raises on it, and its hash partitioning by key is the
+    // one the merge join needs, so the check adds no exchange.
+    val state = cfg.initialStateView.map { view =>
+      val keyStr = concat_ws("|", keyCols.map(c => col(c).cast("string")): _*)
+      spark.table(view)
+        .withColumn("_n", count(lit(1)).over(Window.partitionBy(keyCols.map(col): _*)))
+        .filter(when(assert_true(col("_n") === 1, concat(
+          lit(s"initialStateView '$view' holds key '"), keyStr, lit("' more than once"))).isNull,
+          lit(true)))
     }
-
-    val merged =
-      if (cfg.strict) CdcApply.applyStrict(seeded, schema)
-      else CdcApply.applyNonStrict(seeded)
+    val merged = CdcApply.applyDeltas(state, CdcPipeline.deltas(raw, schema, opts),
+        keyCols, payloadCols, cfg.strict)
+      .select(schema.structType.fieldNames.map(col).toSeq: _*)
 
     // O18 repartition
     val repartitioned = (cfg.partitionBy, cfg.numPartitions) match {

@@ -5,33 +5,36 @@ import org.apache.spark.sql.functions._
 
 import graft.model.CdcSchema
 
-/** The per-key merge ("apply") stage: reduce all change events per primary
-  * key into the final row state.
+/** The per-key merge ("apply") stage: reduce each key's change events to
+  * ONE delta and apply the deltas onto prior state.
   *
   * Two modes, mirroring the reference:
   *  - non-strict (DebeziumTransform.scala:740-759): last-writer-wins by
   *    offset. Implemented as ONE declarative hash aggregate
-  *    (`max_by(struct(op, after), offset)`): Catalyst plans partial+final
-  *    aggregation, so map-side combine reduces every partition to ≤1 row
-  *    per key before the shuffle — hot keys cannot skew the reducer, and
-  *    the whole stage is codegen'd. This is the 10^10-events hot path.
-  *  - strict (reference :683-739): all events of a key are collected,
-  *    sorted by offset, and the state-transition chain is validated
-  *    (c/r from nothing; u/d from the exact previous after-image; Mongo
-  *    patches applied via keyMask). One `flatMapGroups` pass — a
-  *    deliberate, stronger semantic than the reference's order-agnostic
-  *    `reduceGroups` (which admits non-deterministic merge order,
-  *    reference comment :690-699).
+  *    (`LastByOffset`): Catalyst plans partial+final aggregation, so
+  *    map-side combine reduces every partition to ≤1 row per key before
+  *    the shuffle — hot keys cannot skew the reducer, and the whole stage
+  *    is codegen'd. This is the 10^10-events hot path.
+  *  - strict (reference :683-739): each key's offset-ordered chain is
+  *    validated in-batch and reduced to one delta carrying its first-op
+  *    precondition ([[strictDeltas]]; Mongo patch chains compose in
+  *    [[mongoStrictDeltas]]); [[applyDeltas]] finishes the check against
+  *    the key's prior state row — a deliberate, stronger semantic than the
+  *    reference's order-agnostic `reduceGroups` (which admits
+  *    non-deterministic merge order, reference comment :690-699).
+  *
+  * Prior state is a keyed table each batch is joined against (the lake
+  * snapshot, or a stage's `initialStateView`), not synthetic events
+  * injected into the batch (the reference's cogroup, :660-680).
   */
 object CdcApply {
 
   val OpCreate = "c"; val OpRead = "r"; val OpUpdate = "u"; val OpDelete = "d"
-  val ConnectorState = "state"; val ConnectorMongo = "mongodb"
 
   // event IR field indices (mirror of reference :190-196); IPk = the typed
   // primary-key struct the decoders append after keyMask
-  val IKey = 0; val IOffset = 1; val IConnector = 2; val IOperation = 3
-  val IBefore = 4; val IAfter = 5; val IKeyMask = 6; val IPk = 7
+  val IKey = 0; val IOffset = 1; val IOperation = 3
+  val IAfter = 5; val IKeyMask = 6; val IPk = 7
 
   import graft.functions.LastByOffset.lastByOffset
 
@@ -45,34 +48,6 @@ object CdcApply {
       .filter(col("_last.after").isNotNull)
       .select("_last.after.*")
 
-  /** Reduce events to ≤1 winning event per key (keeps op + after),
-    * without dropping deletes — the delta set fed to the lake MERGE. */
-  def reduceToDeltas(events: DataFrame): DataFrame =
-    events
-      .groupBy(col("key"))
-      .agg(lastByOffset(struct(col("operation"), col("offset"), col("after")),
-        col("offset")).as("_last"))
-      .select(col("key"), col("_last.operation").as("operation"),
-        col("_last.offset").as("offset"), col("_last.after").as("after"))
-
-  /** Inject previous state as synthetic ("state","r") events at offset 0
-    * (reference cogroup, DebeziumTransform.scala:660-680). `snapshot` must
-    * have the enriched schema (user cols + _topic/_offset). */
-  def withInitialState(events: DataFrame, snapshot: DataFrame,
-      schema: CdcSchema): DataFrame = {
-    val keyCol = concat_ws("|", schema.keyNames.map(n => col(n).cast("string")): _*)
-    val stateEvents = snapshot.select(
-      keyCol.as("key"),
-      lit(0L).as("offset"),
-      lit(ConnectorState).as("connector"),
-      lit(OpRead).as("operation"),
-      lit(null).cast(schema.structType).as("before"),
-      struct(schema.structType.fieldNames.map(col).toSeq: _*).as("after"),
-      lit(null).cast("array<string>").as("keyMask"))
-    events.select("key", "offset", "connector", "operation", "before", "after", "keyMask")
-      .unionByName(stateEvents)
-  }
-
   /** Strict MERGE-ready deltas: per key, validate the in-batch transition
     * chain (offset-ordered), then emit ONE delta row carrying
     *  - the winning (last) event's payload + operation + offset, and
@@ -84,7 +59,7 @@ object CdcApply {
     * scala:660-680 + :472-496) through the merge join instead of
     * re-reading the whole table state per batch — the 10^10-row strict
     * path. Relational connectors only (Mongo patch chains need the base
-    * row; use applyStrict + withInitialState for Mongo).
+    * row; see [[mongoStrictDeltas]]).
     */
   def strictDeltas(events: DataFrame, schema: CdcSchema): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -151,9 +126,9 @@ object CdcApply {
     * chain (reference applyMongoPatch semantics, :500-524) into ONE net
     * delta, so the lake MERGE can finish the job against only the
     * affected buckets' snapshot rows — the Mongo analog of
-    * [[strictDeltas]]. Replaces `applyStrict` + `withInitialState`, which
-    * unions the ENTIRE snapshot into every micro-batch's groupByKey —
-    * O(table) per batch at 10^10 rows.
+    * [[strictDeltas]]: no per-batch union of the whole prior state into
+    * the batch's groupByKey, which would cost O(table) per batch at 10^10
+    * rows.
     *
     * The net effect of a chain over an unknown base row B is exactly one
     * of three shapes, and all intra-chain presence checks are decidable
@@ -250,113 +225,78 @@ object CdcApply {
       }
   }
 
-  /** Strict apply: offset-ordered chain validation per key.
-    * Throws on an invalid transition (mirrors validateEvents /
-    * applyMongoPatch, reference :472-524). */
-  def applyStrict(events: DataFrame, schema: CdcSchema): DataFrame = {
-    val outSchema = schema.structType
-    val nFields = outSchema.length
-    implicit val rowEnc = Encoders.row(outSchema)
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-
-    events
-      .groupByKey(_.getString(IKey))(Encoders.STRING)
-      .flatMapGroups { (key: String, it: Iterator[Row]) =>
-        val evs = it.toArray.sortBy(_.getLong(IOffset))
-        val isMongo = evs.head.getString(IConnector) == ConnectorMongo
-        val last = if (isMongo) applyMongoChain(key, evs, outSchema)
-                   else validateChain(key, evs)
-        last match {
-          case Some(row) => Iterator.single(row)
-          case None => Iterator.empty
-        }
-      }
+  /** Apply MERGE-ready deltas (≤1 row per key, from [[strictDeltas]],
+    * [[mongoStrictDeltas]] or `EnvelopeDecoder.toDeltas`) onto prior
+    * `state` (key + payload columns): the one overlay of the lake MERGE
+    * and of a stage's `initialStateView`. State and deltas are
+    * full-outer-joined by key; a full delta replaces the key's row, a
+    * PATCH delta (non-null `_patch_mask`) takes its masked fields from
+    * the delta and the rest from the state row, and a delete drops the
+    * key. With `strict`, every delta must pass its first-op precondition
+    * against the state row ([[strictChecked]]). With no state the deltas
+    * become rows without a join, so a plan over one aggregation stays
+    * one (a streaming stage runs in complete mode). Returns key + payload
+    * columns. */
+  def applyDeltas(state: Option[DataFrame], deltas: DataFrame, keyCols: Seq[String],
+      payloadCols: Seq[String], strict: Boolean): DataFrame = {
+    import org.apache.spark.sql.types.StructType
+    val extraCols = deltas.columns
+      .filter(c => c == "operation" || c == "_patch_mask" || c.startsWith("_first_")).toSeq
+    val hasMask = deltas.columns.contains("_patch_mask")
+    val d = deltas.select(keyCols.map(col) :+
+      struct((payloadCols ++ extraCols).map(col): _*).as("_delta"): _*)
+    val joined = state match {
+      case Some(s) =>
+        s.select(keyCols.map(col) :+ struct(payloadCols.map(col): _*).as("_snap"): _*)
+          .join(d, keyCols, "full_outer")
+      case None =>
+        val snapType = StructType(payloadCols.map(deltas.schema(_).copy(nullable = true)))
+        d.withColumn("_snap", lit(null).cast(snapType))
+    }
+    val validated =
+      if (strict) strictChecked(joined, keyCols, payloadCols, "_delta.",
+        deltas.columns.contains("_first_before"))
+      else joined
+    validated
+      .filter(col("_delta").isNull || col("_delta.operation") =!= OpDelete)
+      .select(keyCols.map(col) ++ payloadCols.map { c =>
+        val fromDelta =
+          if (hasMask)
+            when(col("_delta._patch_mask").isNotNull &&
+                 !array_contains(col("_delta._patch_mask"), c), col(s"_snap.$c"))
+              .otherwise(col(s"_delta.$c"))
+          else col(s"_delta.$c")
+        when(col("_delta").isNotNull, fromDelta).otherwise(col(s"_snap.$c")).as(c)
+      }: _*)
   }
 
-  /** Relational strict chain validation (reference validateEvents
-    * :472-496): adjacent-pair checks, comparing rows on all fields except
-    * the trailing `_offset` (the reference's `dropRight(1)`). Returns the
-    * final after-image, or None for a delete. */
-  private def validateChain(key: String, evs: Array[Row]): Option[Row] = {
-    def img(r: Row, idx: Int): Seq[Any] =
-      if (r.isNullAt(idx)) null else r.getStruct(idx).toSeq.dropRight(1)
-    var i = 0
-    while (i < evs.length) {
-      val next = evs(i)
-      val op = next.getString(IOperation)
-      if (i == 0) {
-        if (op != OpCreate && op != OpRead)
-          throw new IllegalStateException(
-            s"key '$key': expected first operation to be 'c'/'r' but got '$op' at offset ${next.getLong(IOffset)}")
-      } else {
-        val prev = evs(i - 1)
-        op match {
-          case OpCreate | OpRead =>
-            if (!prev.isNullAt(IAfter))
-              throw new IllegalStateException(
-                s"key '$key': expected previous value to be null for operation '$op' at offset ${next.getLong(IOffset)}")
-          case OpUpdate | OpDelete =>
-            if (prev.isNullAt(IAfter) || next.isNullAt(IBefore) ||
-                img(prev, IAfter) != img(next, IBefore))
-              throw new IllegalStateException(
-                s"key '$key': expected previous value to equal next before value for operation '$op' at offset ${next.getLong(IOffset)}")
-          case other =>
-            throw new IllegalStateException(s"key '$key': unknown operation '$other'")
-        }
-      }
-      i += 1
-    }
-    val last = evs.last
-    if (last.getString(IOperation) == OpDelete) None
-    else Option(last.getStruct(IAfter))
-  }
-
-  /** Mongo strict patch application (reference applyMongoPatch :500-524):
-    * c/r replaces, u copies only keyMask fields onto the accumulator,
-    * d empties. */
-  private def applyMongoChain(key: String, evs: Array[Row],
-      outSchema: org.apache.spark.sql.types.StructType): Option[Row] = {
-    val empty: Seq[Any] = Seq.fill(outSchema.length)(null)
-    var acc: Seq[Any] =
-      if (evs.head.isNullAt(IAfter)) empty else evs.head.getStruct(IAfter).toSeq
-    var lastOp = evs.head.getString(IOperation)
-    var lastAfterRowIsDelete = lastOp == OpDelete
-    var i = 1
-    while (i < evs.length) {
-      val next = evs(i)
-      val op = next.getString(IOperation)
-      op match {
-        case OpCreate | OpRead =>
-          if (acc != empty)
-            throw new IllegalStateException(
-              s"key '$key': expected previous value to be null for operation '$op'")
-          acc = next.getStruct(IAfter).toSeq
-        case OpUpdate =>
-          if (acc == empty)
-            throw new IllegalStateException(
-              s"key '$key': expected previous value to not be null for operation 'u'")
-          val mask = next.getSeq[String](IKeyMask)
-          val patch = next.getStruct(IAfter)
-          acc = mask.foldLeft(acc) { (seq, field) =>
-            val idx = outSchema.fieldIndex(field)
-            seq.updated(idx, patch.get(idx))
-          }
-          // lineage columns track the patch event
-          acc = acc
-            .updated(outSchema.fieldIndex("_topic"), patch.get(outSchema.fieldIndex("_topic")))
-            .updated(outSchema.fieldIndex("_offset"), patch.get(outSchema.fieldIndex("_offset")))
-        case OpDelete =>
-          if (acc == empty)
-            throw new IllegalStateException(
-              s"key '$key': expected previous value to not be null for operation 'd'")
-          acc = empty
-        case other =>
-          throw new IllegalStateException(s"key '$key': unknown operation '$other'")
-      }
-      lastOp = op
-      i += 1
-    }
-    if (lastOp == OpDelete || acc == empty) None
-    else Some(Row.fromSeq(acc))
+  /** Rows of `joined` — delta rows beside each key's current row `_snap`
+    * — that pass the batch's strict first-op precondition (reference
+    * validateEvents semantics, distributed through the join: no state
+    * re-read), raising `strict merge violation` on the first that
+    * fails: a create/read needs no current row, an update/delete needs
+    * one equal to its first before-image. Deltas without a before-image
+    * check presence only, which IS the reference's whole Mongo
+    * precondition (:500-524); a PER-ROW null before-image means a Mongo
+    * delta in a mixed commit, sound because relational strict decode
+    * raises on u/d with a null before (EnvelopeDecoder). `delta` prefixes
+    * the delta fields: "_delta." in [[applyDeltas]]' full outer join,
+    * whose state-only rows pass (their null `_first_op` takes the
+    * presence branch), "" in the lake's merge-on-read left join. */
+  private[graft] def strictChecked(joined: DataFrame, keyCols: Seq[String],
+      payloadCols: Seq[String], delta: String, hasBefore: Boolean): DataFrame = {
+    val cmp = payloadCols.filterNot(_ == "_offset")
+    val sameBefore =
+      if (hasBefore)
+        when(col(s"${delta}_first_before").isNull, lit(true))
+          .otherwise(struct(cmp.map(c => col(s"${delta}_first_before.$c")): _*) <=>
+            struct(cmp.map(c => col(s"_snap.$c")): _*))
+      else lit(true)
+    val ok = when(col(s"${delta}_first_op").isin(OpCreate, OpRead), col("_snap").isNull)
+      .otherwise(col("_snap").isNotNull && sameBefore)
+    joined.filter(
+      when(assert_true(ok, concat(lit("strict merge violation: key="),
+        concat_ws("|", keyCols.map(c => col(c).cast("string")): _*),
+        lit(" first_op="), col(s"${delta}_first_op"))).isNull, lit(true)))
   }
 }

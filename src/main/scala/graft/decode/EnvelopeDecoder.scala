@@ -87,38 +87,6 @@ object EnvelopeDecoder {
     StructType(fields)
   }
 
-  private def payloadJsonType1(schema: CdcSchema, jsonName: String => String): StructType =
-    payloadJsonType(schema, n => Seq(jsonName(n)))
-
-  /** Raw JSON shape of the WHOLE envelope for a single from_json (the
-    * pre-slicer decode path, kept for stage-isolation benchmarking in
-    * graft.DecodeBench: in non-strict mode the `before` image is dropped
-    * from the parse schema so Jackson skips those tokens, and the
-    * per-message `schema` section is parsed only when a column needs
-    * per-message dispatch — but Jackson still LEXES every skipped byte,
-    * which is why the production path slices first). */
-  private def valueJsonType(schema: CdcSchema, includeBefore: Boolean,
-      includeMsgSchema: Boolean, jsonName: String => String): StructType = {
-    val payloadType = payloadJsonType1(schema, jsonName)
-    val before =
-      if (includeBefore) Seq(StructField("before", payloadType)) else Nil
-    val msgSchema =
-      if (includeMsgSchema) Seq(StructField("schema", msgSchemaSectionType)) else Nil
-    StructType(msgSchema ++ Seq(
-      StructField("payload", StructType(before ++ Seq(
-        StructField("after", payloadType),
-        StructField("source", StructType(Seq(
-          StructField("connector", StringType),
-          StructField("ts_ms", LongType)))),
-        StructField("op", StringType),
-        StructField("ts_ms", LongType))))))
-  }
-
-  /** The raw envelope parse schema (exposed for stage-isolation
-    * benchmarking in graft.DecodeBench). */
-  def valueParseType(schema: CdcSchema, includeBefore: Boolean): StructType =
-    valueJsonType(schema, includeBefore, needsMsgSchema(schema), n => n)
-
   /** Constant epoch-anchored zone offset: the reference re-anchors
     * io.debezium.time.Timestamp wall-clock millis with the zone offset AT
     * 1970-01-01 (ZonedDateTime.of(1970,...).plusNanos — reference :412),

@@ -13,6 +13,8 @@ import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DateType,
   DoubleType, FloatType, IntegerType, LongType, ShortType, StringType,
   StructField, StructType, TimestampNTZType, TimestampType}
 
+import graft.apply.CdcApply
+
 /** Minimal Iceberg-style snapshot-committed Parquet table.
   *
   * Layout:
@@ -1329,33 +1331,10 @@ class LakeTable(val spark: SparkSession, val root: String) {
         else {
           val affected = stats.map(_.getInt(0)).toSet
           val (affectedFiles, keptFiles) = cur.files.partition(f => affected.contains(f.bucket))
-          // pack both sides; delta wins, op='d' drops the key
-          val s = snapshotRows(cur, affectedFiles)
-            .select(keyCols.map(col) :+ struct(payloadCols.map(col): _*).as("_snap"): _*)
-          val deltaExtraCols = withBucket.columns
-            .filter(c => c == "operation" || c == "_patch_mask" || c.startsWith("_first_")).toSeq
-          val hasMask = withBucket.columns.contains("_patch_mask")
-          val d = withBucket.select(keyCols.map(col) :+
-            struct((payloadCols ++ deltaExtraCols).map(col): _*).as("_delta"): _*)
-          val joined = s.join(d, keyCols, "full_outer")
-          val validated =
-            if (strictValidate) strictChecked(joined, keyCols, payloadCols, "_delta.",
-              withBucket.columns.contains("_first_before"))
-            else joined
-          // per-field merge: full delta rows replace the snapshot row; PATCH
-          // deltas (non-null _patch_mask) take only masked fields from the
-          // delta and the rest from the snapshot row
-          val merged = validated
-            .filter(col("_delta").isNull || col("_delta.operation") =!= "d")
-            .select(keyCols.map(col) ++ payloadCols.map { c =>
-              val fromDelta =
-                if (hasMask)
-                  when(col("_delta._patch_mask").isNotNull &&
-                       !array_contains(col("_delta._patch_mask"), c), col(s"_snap.$c"))
-                    .otherwise(col(s"_delta.$c"))
-                else col(s"_delta.$c")
-              when(col("_delta").isNotNull, fromDelta).otherwise(col(s"_snap.$c")).as(c)
-            }: _*)
+          // delta wins, a PATCH delta overlays its masked fields, op='d'
+          // drops the key
+          val merged = CdcApply.applyDeltas(Some(snapshotRows(cur, affectedFiles)),
+            withBucket, keyCols, payloadCols, strictValidate)
           // in-bucket salt lifts write parallelism above the affected-bucket
           // count when the cluster has idle slots
           val staged = stage(cur, "commit", merged, affected.toSeq)
@@ -1381,36 +1360,6 @@ class LakeTable(val spark: SparkSession, val root: String) {
         }
       } finally withBucket.unpersist()
     }
-
-  /** Rows of `joined` — delta rows beside each key's current row `_snap`
-    * — that pass the batch's strict first-op precondition (reference
-    * validateEvents semantics, distributed through the merge join: no
-    * state re-read), raising `strict merge violation` on the first that
-    * fails: a create/read needs no current row, an update/delete needs
-    * one equal to its first before-image. Deltas without a before-image
-    * check presence only, which IS the reference's whole Mongo
-    * precondition (:500-524); a PER-ROW null before-image means a Mongo
-    * delta in a mixed commit, sound because relational strict decode
-    * raises on u/d with a null before (EnvelopeDecoder). `delta` prefixes
-    * the delta fields: "_delta." in the copy-on-write full outer join,
-    * whose snapshot-only rows pass (their null `_first_op` takes the
-    * presence branch), "" in mergeDeltas' left join. */
-  private def strictChecked(joined: DataFrame, keyCols: Seq[String],
-      payloadCols: Seq[String], delta: String, hasBefore: Boolean): DataFrame = {
-    val cmp = payloadCols.filterNot(_ == "_offset")
-    val sameBefore =
-      if (hasBefore)
-        when(col(s"${delta}_first_before").isNull, lit(true))
-          .otherwise(struct(cmp.map(c => col(s"${delta}_first_before.$c")): _*) <=>
-            struct(cmp.map(c => col(s"_snap.$c")): _*))
-      else lit(true)
-    val ok = when(col(s"${delta}_first_op").isin("c", "r"), col("_snap").isNull)
-      .otherwise(col("_snap").isNotNull && sameBefore)
-    joined.filter(
-      when(assert_true(ok, concat(lit("strict merge violation: key="),
-        concat_ws("|", keyCols.map(c => col(c).cast("string")): _*),
-        lit(" first_op="), col(s"${delta}_first_op"))).isNull, lit(true)))
-  }
 
   /** Current rows of a file subset: plain scan if no delta files are
     * present, LWW reconstruction otherwise (lets copy-on-write `merge`
@@ -1456,7 +1405,7 @@ class LakeTable(val spark: SparkSession, val root: String) {
           val snapDf = snapshotRows(cur, cur.files.filter(f => affected.contains(f.bucket)))
           val s = snapDf.select(keyCols.map(col) :+
             struct(payloadCols.map(col): _*).as("_snap"): _*)
-          strictChecked(persisted.join(s, keyCols, "left_outer"), keyCols, payloadCols, "",
+          CdcApply.strictChecked(persisted.join(s, keyCols, "left_outer"), keyCols, payloadCols, "",
             deltas.columns.contains("_first_before"))
         } else deltas
 
@@ -1900,24 +1849,25 @@ class LakeTable(val spark: SparkSession, val root: String) {
     val dataDir = new Path(root, "data")
     val now = System.currentTimeMillis()
     var deleted = 0
+    // walk with listStatus: `listFiles` builds LocatedFileStatuses, which
+    // load each file's permission — on a `file:` root without the native
+    // Hadoop library that forks one `ls -ld` per file and directory
+    def filesUnder(p: Path): Iterator[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(p).iterator.flatMap(s => if (s.isDirectory) filesUnder(s.getPath) else Iterator(s))
     if (fs.exists(dataDir)) {
-      val it = fs.listFiles(dataDir, true)
-      val toDelete = Seq.newBuilder[Path]
-      while (it.hasNext) {
-        val f = it.next()
+      val toDelete = filesUnder(dataDir).filter { f =>
         val p = f.getPath.toString
         val rel = p.substring(p.indexOf(root) + root.length + 1)
-        if (!referenced.contains(rel) && !f.getPath.getName.startsWith("_") &&
-            (minAgeMs <= 0L || now - f.getModificationTime >= minAgeMs))
-          toDelete += f.getPath
-      }
+        !referenced.contains(rel) && !f.getPath.getName.startsWith("_") &&
+          (minAgeMs <= 0L || now - f.getModificationTime >= minAgeMs)
+      }.map(_.getPath).toSeq
       // deletes are independent driver-side FS calls — run them on a
       // bounded pool (serial deletion of a large vacuum batch is pure
       // driver wall time, guide §5)
-      deleted += onPool(toDelete.result())(p => fs.delete(p, false)).count(identity)
+      deleted += onPool(toDelete)(p => fs.delete(p, false)).count(identity)
       // prune now-empty commit directories
       fs.listStatus(dataDir).foreach { d =>
-        if (d.isDirectory && !fs.listFiles(d.getPath, true).hasNext)
+        if (d.isDirectory && filesUnder(d.getPath).isEmpty)
           fs.delete(d.getPath, true)
       }
     }

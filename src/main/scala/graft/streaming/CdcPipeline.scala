@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.apply.CdcApply
-import graft.decode.{DecodeOptions, EnvelopeDecoder}
+import graft.decode.{DecodeOptions, EnvelopeDecoder, MixedTopic, MongoDecoder}
 import graft.lake.LakeTable
 import graft.model.CdcSchema
 
@@ -93,15 +93,11 @@ class CdcPipeline(
     // would be a trap). Pure-mongo pipelines: the limitation is inherent.
     if (autoEvolve && !mongo) {
       if (mixed) maybeEvolve(raw.filter(
-        !(graft.decode.MixedTopic.connectorOf(org.apache.spark.sql.functions.col("value"))
+        !(MixedTopic.connectorOf(org.apache.spark.sql.functions.col("value"))
           <=> org.apache.spark.sql.functions.lit("mongodb"))))
       else maybeEvolve(raw)
     }
     val schema = curSchema
-    // Mongo: patch chains composed per key in-batch, presence precondition
-    // + masked-field application finished inside the bucket-pruned merge
-    // join — state is never re-read wholesale (the applyStrict +
-    // withInitialState alternative unions the ENTIRE snapshot per batch)
     // mixed routing consumes the raw batch once per connector family —
     // persist it for the duration of this batch so envelope construction
     // and the connector byte-scan don't run twice per branch
@@ -109,19 +105,9 @@ class CdcPipeline(
       if (mixed) raw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
       else raw
     try {
-    val deltas =
-      if (mixed) {
-        // per-message connector routing (relational + Mongo in one topic)
-        graft.decode.MixedTopic.strictDeltas(rawCached, schema, decodeOptions)
-      } else if (mongo) {
-        require(decodeOptions.strict, "connector 'mongodb' requires strict mode")
-        CdcApply.mongoStrictDeltas(
-          graft.decode.MongoDecoder.decode(raw, schema, decodeOptions), schema)
-      } else {
-        val events = EnvelopeDecoder.decodeRelational(raw, schema, decodeOptions)
-        if (decodeOptions.strict) CdcApply.strictDeltas(events, schema)
-        else EnvelopeDecoder.toDeltas(events, schema)
-      }
+    // strict preconditions and Mongo masked fields are finished inside the
+    // bucket-pruned merge join — state is never re-read wholesale
+    val deltas = CdcPipeline.deltas(rawCached, schema, decodeOptions)
     val snap =
       if (mergeOnRead) // Mongo PATCH deltas fold via PatchFoldBySeq on read
         table.mergeDeltas(deltas, checkpointId, batchId,
@@ -166,6 +152,23 @@ class CdcPipeline(
 }
 
 object CdcPipeline {
+  /** The connector → deltas router of every ingest path: decode a raw
+    * batch under `opts` and reduce it to MERGE-ready deltas, ≤1 row per
+    * key — a mixed topic through [[MixedTopic.strictDeltas]], mongodb
+    * through [[CdcApply.mongoStrictDeltas]], relational strict through
+    * [[CdcApply.strictDeltas]] and last-writer-wins through
+    * [[EnvelopeDecoder.toDeltas]]. */
+  def deltas(raw: DataFrame, schema: CdcSchema, opts: DecodeOptions): DataFrame =
+    opts.connector match {
+      case Some("mixed") => MixedTopic.strictDeltas(raw, schema, opts)
+      case Some("mongodb") =>
+        CdcApply.mongoStrictDeltas(MongoDecoder.decode(raw, schema, opts), schema)
+      case _ =>
+        val events = EnvelopeDecoder.decodeRelational(raw, schema, opts)
+        if (opts.strict) CdcApply.strictDeltas(events, schema)
+        else EnvelopeDecoder.toDeltas(events, schema)
+    }
+
   /** Cap on distinct schema headers inspected per trigger by
     * auto-evolution — bounds driver work on pathological batches. */
   val MaxEvolveHeaders = 64

@@ -33,6 +33,16 @@ class CdcRoundTripSpec extends AnyFunSuite with SparkSessionTestWrapper {
         Option(r.getString(4)), r.getTimestamp(5).getTime))
       .toSet
 
+  /** The workload through a strict CdcStage: deltas merged onto no
+    * prior state. */
+  private def staged(wl: EnvelopeGen.Workload, connector: String): DataFrame = {
+    val view = s"roundtrip_$connector"
+    EnvelopeGen.toDataFrame(spark, wl, connector).createOrReplaceTempView(view)
+    CdcStage.execute(CdcStageConfig(name = view, inputView = view,
+      outputView = s"${view}_out", schema = Some(schema),
+      connector = Some(connector), strict = true))(spark)
+  }
+
   private def oracleSet(wl: EnvelopeGen.Workload) =
     EnvelopeGen.expectedRows(wl)
       .map(t => (t._1, t._2, t._3, t._4, t._5, t._6 / 1000)) // micros → ms truncation
@@ -53,15 +63,17 @@ class CdcRoundTripSpec extends AnyFunSuite with SparkSessionTestWrapper {
 
   test("strict chain-validated apply matches oracle (postgresql)") {
     val wl = EnvelopeGen.workload(seed = 3, nConvs = 25, maxTurns = 5, nTxns = 300)
-    val got = asSet(CdcApply.applyStrict(decoded(wl, "postgresql", strict = true), schema))
+    val got = asSet(ChainWalker.applyStrict(decoded(wl, "postgresql", strict = true), schema))
     assert(got == oracleSet(wl))
+    assert(asSet(staged(wl, "postgresql")) == got)
   }
 
   test("strict apply with Zipf-skewed hot conversations") {
     val wl = EnvelopeGen.workload(seed = 4, nConvs = 50, maxTurns = 6, nTxns = 800,
       zipfSkew = 3.0)
-    val got = asSet(CdcApply.applyStrict(decoded(wl, "mysql", strict = true), schema))
+    val got = asSet(ChainWalker.applyStrict(decoded(wl, "mysql", strict = true), schema))
     assert(got == oracleSet(wl))
+    assert(asSet(staged(wl, "mysql")) == got)
   }
 
   test("strict apply rejects a broken chain (update without prior state)") {
@@ -70,10 +82,13 @@ class CdcRoundTripSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val t2 = t.copy(text = "hello2")
     val wl = Workload(IndexedSeq(Update(t, t2)), Map((("conv-x", 0), t2)))
     val ex = intercept[Exception] {
-      CdcApply.applyStrict(decoded(wl, "mysql", strict = true), schema).collect()
+      ChainWalker.applyStrict(decoded(wl, "mysql", strict = true), schema).collect()
     }
     assert(ex.getMessage.contains("expected first operation") ||
       Option(ex.getCause).exists(_.getMessage.contains("expected first operation")))
+    // the stage checks the same first-op precondition the lake MERGE does
+    val stageEx = intercept[Exception](staged(wl, "mysql").collect())
+    assert(msgsOf(stageEx).exists(_.contains("strict merge violation: key=conv-x|0 first_op=u")))
   }
 
   private def msgsOf(t: Throwable): Seq[String] =

@@ -154,27 +154,52 @@ class LakeCommitWriteSpec extends AnyFunSuite with SparkSessionTestWrapper {
     })
   }
 
-  test("commits fork no chmod process") {
-    val t = new LakeTable(spark, tmpDir("lake-procs"))
-    t.create(tsSchema, Seq("id"), nBuckets = 2)
+  /** The command lines of the processes `body` starts (JFR
+    * `jdk.ProcessStart`). */
+  private def processesDuring(body: => Unit): Seq[String] = {
     val rec = new jdk.jfr.Recording()
     rec.enable("jdk.ProcessStart")
     rec.start()
+    try body finally rec.stop()
+    val out = Files.createTempFile("commit-procs", ".jfr")
     try {
+      rec.dump(out)
+      jdk.jfr.consumer.RecordingFile.readAllEvents(out).asScala
+        .map(e => String.valueOf(e.getString("command"))).toSeq
+    } finally { rec.close(); Files.deleteIfExists(out) }
+  }
+
+  test("commits fork no chmod process") {
+    val t = new LakeTable(spark, tmpDir("lake-procs"))
+    t.create(tsSchema, Seq("id"), nBuckets = 2)
+    val chmods = processesDuring {
       t.append(batch(0, 100))
       t.mergeDeltas(deltas(0, 50), "cp", 0L, autoCompact = 2)
       val snap = t.mergeDeltas(deltas(50, 100), "cp", 1L, autoCompact = 2)
       assert(snap.lineage.exists(_.has("autoCompactedBuckets")))
       t.merge(deltas(0, 10), "cow", 0L)
       t.tag("t1")
-    } finally rec.stop()
-    val out = Files.createTempFile("commit-procs", ".jfr")
-    try {
-      rec.dump(out)
-      val chmods = jdk.jfr.consumer.RecordingFile.readAllEvents(out).asScala
-        .map(_.getString("command")).filter(c => c != null && c.contains("chmod"))
-      if (chmods.nonEmpty)
-        fail(s"${chmods.size} chmod processes, e.g. ${chmods.take(3).mkString("; ")}")
-    } finally { rec.close(); Files.deleteIfExists(out) }
+    }.filter(_.contains("chmod"))
+    if (chmods.nonEmpty)
+      fail(s"${chmods.size} chmod processes, e.g. ${chmods.take(3).mkString("; ")}")
+  }
+
+  test("expireSnapshots and vacuum start no process") {
+    val t = new LakeTable(spark, tmpDir("lake-vacuum-procs"))
+    t.create(tsSchema, Seq("id"), nBuckets = 4)
+    (0 until 4).foreach(i => t.append(batch(i * 50L, i * 50L + 50)))
+    // a copy-on-write merge leaves the rewritten files to the expired
+    // snapshots only
+    t.merge(deltas(0, 200), "cow", 0L)
+    var deleted = 0
+    val procs = processesDuring {
+      assert(t.expireSnapshots(keepLast = 1).nonEmpty)
+      deleted = t.vacuum()
+      assert(t.vacuum() == 0)
+    }
+    if (procs.nonEmpty)
+      fail(s"${procs.size} processes, e.g. ${procs.take(3).mkString("; ")}")
+    assert(deleted > 0)
+    assert(t.read().count() == 200)
   }
 }

@@ -195,6 +195,20 @@ class MixedTopicSpec extends AnyFunSuite with SparkSessionTestWrapper {
       name = "mixed-stage", inputView = "mixed_in", outputView = "mixed_out",
       schema = Some(schema), connector = Some("mixed"), strict = true))
     assert(asSet(out) == expected)
+    assert(asSet(out) == asSet(ChainWalker.applyStrict(
+      MixedTopic.decode(batch0.unionByName(batch1), schema, opts), schema)))
+    // chained: batch 1's updates, patches and deletes merge onto batch 0's
+    // stage output
+    batch0.createOrReplaceTempView("mixed_in0")
+    batch1.createOrReplaceTempView("mixed_in1")
+    graft.CdcStage.execute(graft.CdcStageConfig(
+      name = "mixed-0", inputView = "mixed_in0", outputView = "mixed_out0",
+      schema = Some(schema), connector = Some("mixed"), strict = true))
+    val chained = graft.CdcStage.execute(graft.CdcStageConfig(
+      name = "mixed-1", inputView = "mixed_in1", outputView = "mixed_out1",
+      schema = Some(schema), connector = Some("mixed"), strict = true,
+      initialStateView = Some("mixed_out0")))
+    assert(asSet(chained) == expected)
     // strict is mandatory for mixed (Mongo patches are not LWW-mergeable)
     val ex = intercept[IllegalArgumentException] {
       graft.CdcStage.execute(graft.CdcStageConfig(
@@ -219,6 +233,14 @@ class MixedTopicSpec extends AnyFunSuite with SparkSessionTestWrapper {
       MixedTopic.strictDeltas(my.unionByName(mo), schema, opts).collect()
     }
     assert(msgsOf(ex).exists(_.contains("multiple connector families")))
+    // the stage routes through the same deltas, so it rejects the key too
+    my.unionByName(mo).createOrReplaceTempView("mixed_two_families")
+    val stageEx = intercept[Exception] {
+      graft.CdcStage.execute(graft.CdcStageConfig(
+        name = "mixed-two", inputView = "mixed_two_families", outputView = "mixed_two_out",
+        schema = Some(schema), connector = Some("mixed"), strict = true))(spark).collect()
+    }
+    assert(msgsOf(stageEx).exists(_.contains("multiple connector families")))
   }
 
   test("strict decode rejects u/d with a null before-image (reference parity)") {

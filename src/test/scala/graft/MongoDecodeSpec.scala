@@ -14,12 +14,14 @@ class MongoDecodeSpec extends AnyFunSuite with SparkSessionTestWrapper {
   private def applied(wl: MongoGen.Workload) = {
     val events = MongoDecoder.decode(
       MongoGen.toDataFrame(spark, wl), MongoGen.schema, DecodeOptions(strict = true))
-    CdcApply.applyStrict(events, MongoGen.schema)
-      .collect()
+    docSet(ChainWalker.applyStrict(events, MongoGen.schema))
+  }
+
+  private def docSet(df: org.apache.spark.sql.DataFrame) =
+    df.select("_id", "role", "text", "score", "ts").collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2),
         Option(r.getDecimal(3)).map(_.toPlainString), r.getTimestamp(4).getTime))
       .toSet
-  }
 
   private def oracle(wl: MongoGen.Workload) =
     wl.finalState.values.map(d =>
@@ -47,11 +49,7 @@ class MongoDecodeSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(applied(wl) == oracle(wl))
   }
 
-  private def lakeState(t: graft.lake.LakeTable) =
-    t.read().select("_id", "role", "text", "score", "ts").collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2),
-        Option(r.getDecimal(3)).map(_.toPlainString), r.getTimestamp(4).getTime))
-      .toSet
+  private def lakeState(t: graft.lake.LakeTable) = docSet(t.read())
 
   test("mongo batched lake ingest: composed patch deltas reach oracle parity") {
     // the SCALE path: per-batch net deltas merged against only the
@@ -70,6 +68,28 @@ class MongoDecodeSpec extends AnyFunSuite with SparkSessionTestWrapper {
         pipe.processBatch(raw.filter(s"offset >= $lo and offset < $hi"), i.toLong)
     }
     assert(lakeState(table) == oracle(wl))
+    // a later batch patches documents an earlier batch wrote
+    assert(wl.ops.drop(n / 3).exists {
+      case MongoGen.Patch(id, _, _) => wl.ops.take(n / 3).exists(_.id == id)
+      case _ => false
+    })
+    // the same batches through chained CdcStages, each merging onto the
+    // previous stage's output: after batch i the stage holds what the
+    // walker makes of every event up to batch i's end (a state row fed to
+    // the walker as a synthetic event would route the key's chain to the
+    // relational walker, so the walker replays the prefix instead)
+    Seq((0, n / 3), (n / 3, 2 * n / 3), (2 * n / 3, n)).zipWithIndex.foreach {
+      case ((lo, hi), i) =>
+        raw.filter(s"offset >= $lo and offset < $hi").createOrReplaceTempView(s"mongo_chain_in$i")
+        val out = CdcStage.execute(CdcStageConfig(name = s"mc$i", inputView = s"mongo_chain_in$i",
+          outputView = s"mongo_chain_out$i", schema = Some(MongoGen.schema),
+          connector = Some("mongodb"), strict = true,
+          initialStateView = if (i == 0) None else Some(s"mongo_chain_out${i - 1}")))(spark)
+        val prefix = MongoDecoder.decode(raw.filter(s"offset < $hi"), MongoGen.schema,
+          DecodeOptions(strict = true))
+        assert(docSet(out) == docSet(ChainWalker.applyStrict(prefix, MongoGen.schema)), s"batch $i")
+    }
+    assert(docSet(spark.table("mongo_chain_out2")) == oracle(wl))
   }
 
   test("mongo cross-batch patch takes masked fields from delta, rest from snapshot") {
