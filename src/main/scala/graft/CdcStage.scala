@@ -2,8 +2,7 @@ package graft
 
 import org.apache.hadoop.fs.Path
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.apply.CdcApply
@@ -137,21 +136,20 @@ object CdcStage {
     val keyCols = schema.keyNames
     val payloadCols = schema.structType.fieldNames.filterNot(keyCols.contains).toSeq
 
-    // prior state is a keyed table the deltas merge onto, like the lake
-    // MERGE's snapshot. A key held twice has no single prior row: the
-    // window count raises on it, and its hash partitioning by key is the
-    // one the merge join needs, so the check adds no exchange.
-    val state = cfg.initialStateView.map { view =>
-      val keyStr = concat_ws("|", keyCols.map(c => col(c).cast("string")): _*)
-      spark.table(view)
-        .withColumn("_n", count(lit(1)).over(Window.partitionBy(keyCols.map(col): _*)))
-        .filter(when(assert_true(col("_n") === 1, concat(
-          lit(s"initialStateView '$view' holds key '"), keyStr, lit("' more than once"))).isNull,
-          lit(true)))
-    }
-    val merged = CdcApply.applyDeltas(state, CdcPipeline.deltas(raw, schema, opts),
-        keyCols, payloadCols, cfg.strict)
-      .select(schema.structType.fieldNames.map(col).toSeq: _*)
+    // state rows fold at seq 0 under the batch at seq 1, the fold's
+    // aggregate counting each key's state rows. With no state the deltas
+    // are the rows: a strict chain must open with c/r, deletes drop.
+    val deltas = CdcPipeline.deltas(raw, schema, opts)
+    val merged = (cfg.initialStateView match {
+      case Some(view) =>
+        CdcApply.applyBatch(CdcApply.asPrior(spark.table(view), keyCols, payloadCols), deltas, 1L,
+          keyCols, payloadCols, deltas.columns.contains("_patch_mask"), cfg.strict,
+          unique = Some(("_o", (k: Column) => concat(lit(s"initialStateView '$view' holds key '"), k,
+            lit("' more than once")))))
+      case None => (if (!cfg.strict) deltas else CdcApply.strictRows(deltas,
+          col("_first_op").isin(CdcApply.OpCreate, CdcApply.OpRead), keyCols, col("_first_op")))
+        .filter(col("operation") =!= CdcApply.OpDelete)
+    }).select(schema.structType.fieldNames.map(col).toSeq: _*)
 
     // O18 repartition
     val repartitioned = (cfg.partitionBy, cfg.numPartitions) match {

@@ -25,9 +25,6 @@ object Scratch {
       else Paths.get(System.getProperty("java.io.tmpdir"))
   }
 
-  /** tmpfs when available (for Spark spill dirs etc.). */
-  def baseDir: String = base.toString
-
   def dir(prefix: String): String = {
     val d = Files.createTempDirectory(base, prefix)
     Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursive(d)))

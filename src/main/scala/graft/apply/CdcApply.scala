@@ -18,14 +18,15 @@ import graft.model.CdcSchema
   *  - strict (reference :683-739): each key's offset-ordered chain is
   *    validated in-batch and reduced to one delta carrying its first-op
   *    precondition ([[strictDeltas]]; Mongo patch chains compose in
-  *    [[mongoStrictDeltas]]); [[applyDeltas]] finishes the check against
-  *    the key's prior state row — a deliberate, stronger semantic than the
-  *    reference's order-agnostic `reduceGroups` (which admits
-  *    non-deterministic merge order, reference comment :690-699).
+  *    [[mongoStrictDeltas]]); the fold finishes the check against the
+  *    key's prior image ([[applyBatch]]) — a deliberate,
+  *    stronger semantic than the reference's order-agnostic `reduceGroups`
+  *    (which admits non-deterministic merge order, reference comment
+  *    :690-699).
   *
-  * Prior state is a keyed table each batch is joined against (the lake
-  * snapshot, or a stage's `initialStateView`), not synthetic events
-  * injected into the batch (the reference's cogroup, :660-680).
+  * Prior state is keyed rows (lake files, a stage's `initialStateView`)
+  * each batch folds into through [[foldImages]], the fold every lake read
+  * runs — not events injected into the batch (reference cogroup :660-680).
   */
 object CdcApply {
 
@@ -52,14 +53,12 @@ object CdcApply {
     * chain (offset-ordered), then emit ONE delta row carrying
     *  - the winning (last) event's payload + operation + offset, and
     *  - `_first_op` / `_first_before`: the first event's precondition,
-    * so the lake MERGE can finish the validation against the snapshot row
-    * it joins with (c/r requires no snapshot row; u/d requires the
-    * snapshot row to equal the first before-image). This distributes the
-    * reference's initial-state cogroup validation (DebeziumTransform.
-    * scala:660-680 + :472-496) through the merge join instead of
-    * re-reading the whole table state per batch — the 10^10-row strict
-    * path. Relational connectors only (Mongo patch chains need the base
-    * row; see [[mongoStrictDeltas]]).
+    * which [[applyBatch]] checks against the key's prior image. This
+    * distributes the reference's initial-state cogroup validation
+    * (DebeziumTransform.scala:660-680 + :472-496) through the fold of the
+    * affected buckets instead of re-reading the whole table state per
+    * batch — the 10^10-row strict path. Relational connectors only (Mongo
+    * patch chains need the base row; see [[mongoStrictDeltas]]).
     */
   def strictDeltas(events: DataFrame, schema: CdcSchema): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -124,11 +123,9 @@ object CdcApply {
 
   /** Mongo strict MERGE-ready deltas: compose each key's in-batch patch
     * chain (reference applyMongoPatch semantics, :500-524) into ONE net
-    * delta, so the lake MERGE can finish the job against only the
-    * affected buckets' snapshot rows — the Mongo analog of
-    * [[strictDeltas]]: no per-batch union of the whole prior state into
-    * the batch's groupByKey, which would cost O(table) per batch at 10^10
-    * rows.
+    * delta that [[applyBatch]] folds onto the affected buckets' rows —
+    * the Mongo analog of [[strictDeltas]]: no per-batch union of the whole
+    * prior state into the batch's groupByKey (O(table) at 10^10 rows).
     *
     * The net effect of a chain over an unknown base row B is exactly one
     * of three shapes, and all intra-chain presence checks are decidable
@@ -140,10 +137,9 @@ object CdcApply {
     *  - DELETE: absent.
     * What is NOT decidable in-batch is B's presence itself — exported as
     * `_first_op` (c/r ⇒ B absent, u/d ⇒ B present; Mongo events carry no
-    * before-image, so presence is the whole precondition) and enforced
-    * inside the merge join. PATCH deltas carry `_patch_mask` (+ lineage
-    * cols, which the reference stamps on every patch); the merge takes
-    * masked fields from the delta and the rest from the snapshot row.
+    * before-image, so presence is the whole precondition). PATCH deltas
+    * carry `_patch_mask` (+ lineage cols, which the reference stamps on
+    * every patch); the fold takes the rest from the prior image.
     */
   def mongoStrictDeltas(events: DataFrame, schema: CdcSchema): DataFrame = {
     import org.apache.spark.sql.types._
@@ -225,78 +221,112 @@ object CdcApply {
       }
   }
 
-  /** Apply MERGE-ready deltas (≤1 row per key, from [[strictDeltas]],
-    * [[mongoStrictDeltas]] or `EnvelopeDecoder.toDeltas`) onto prior
-    * `state` (key + payload columns): the one overlay of the lake MERGE
-    * and of a stage's `initialStateView`. State and deltas are
-    * full-outer-joined by key; a full delta replaces the key's row, a
-    * PATCH delta (non-null `_patch_mask`) takes its masked fields from
-    * the delta and the rest from the state row, and a delete drops the
-    * key. With `strict`, every delta must pass its first-op precondition
-    * against the state row ([[strictChecked]]). With no state the deltas
-    * become rows without a join, so a plan over one aggregation stays
-    * one (a streaming stage runs in complete mode). Returns key + payload
-    * columns. */
-  def applyDeltas(state: Option[DataFrame], deltas: DataFrame, keyCols: Seq[String],
-      payloadCols: Seq[String], strict: Boolean): DataFrame = {
-    import org.apache.spark.sql.types.StructType
-    val extraCols = deltas.columns
-      .filter(c => c == "operation" || c == "_patch_mask" || c.startsWith("_first_")).toSeq
-    val hasMask = deltas.columns.contains("_patch_mask")
-    val d = deltas.select(keyCols.map(col) :+
-      struct((payloadCols ++ extraCols).map(col): _*).as("_delta"): _*)
-    val joined = state match {
-      case Some(s) =>
-        s.select(keyCols.map(col) :+ struct(payloadCols.map(col): _*).as("_snap"): _*)
-          .join(d, keyCols, "full_outer")
-      case None =>
-        val snapType = StructType(payloadCols.map(deltas.schema(_).copy(nullable = true)))
-        d.withColumn("_snap", lit(null).cast(snapType))
-    }
-    val validated =
-      if (strict) strictChecked(joined, keyCols, payloadCols, "_delta.",
-        deltas.columns.contains("_first_before"))
-      else joined
-    validated
-      .filter(col("_delta").isNull || col("_delta.operation") =!= OpDelete)
-      .select(keyCols.map(col) ++ payloadCols.map { c =>
-        val fromDelta =
-          if (hasMask)
-            when(col("_delta._patch_mask").isNotNull &&
-                 !array_contains(col("_delta._patch_mask"), c), col(s"_snap.$c"))
-              .otherwise(col(s"_delta.$c"))
-          else col(s"_delta.$c")
-        when(col("_delta").isNotNull, fromDelta).otherwise(col(s"_snap.$c")).as(c)
-      }: _*)
+  /** The merge-on-read fold, the one place deltas meet rows: per key,
+    * one image per seq column of `in` (key + payload columns, `operation`,
+    * `_patch_mask`), the payload struct its non-null-seq rows reconstruct,
+    * null where the key is deleted or absent. FULL rows only: the last
+    * writer (greatest seq) wins, one LastByOffset ObjectHashAggregate. Any
+    * PARTIAL (patch-masked) row: the rows fold in seq order
+    * (PatchFoldBySeq). Partial aggregation keeps hot keys combine-side.
+    * `extra` aggregates ride in the same group-by, after the images. */
+  def foldImages(in: DataFrame, keyCols: Seq[String], payloadCols: Seq[String],
+      anyPatch: Boolean, seqCols: Seq[String], extra: Seq[Column] = Nil): DataFrame = {
+    import graft.functions.PatchFoldBySeq.patchFoldBySeq
+    val keys = keyCols.map(col)
+    val fold: Column => Column =
+      if (anyPatch) patchFoldBySeq(
+        struct((payloadCols ++ Seq("operation", "_patch_mask")).map(col): _*), _)
+      else lastByOffset(struct((payloadCols :+ "operation").map(col): _*), _)
+    val folds = seqCols.map(s => fold(col(s)).as(s)) ++ extra
+    val folded = in.groupBy(keys: _*).agg(folds.head, folds.tail: _*)
+    if (anyPatch) folded // the patch fold is already null for a deleted key
+    else folded.select(keys ++ seqCols.map(s => when(col(s"$s.operation") =!= "d",
+      struct(payloadCols.map(c => col(s"$s.$c")): _*)).as(s)) ++
+      folded.columns.drop(keys.size + seqCols.size).map(col): _*)
   }
 
-  /** Rows of `joined` — delta rows beside each key's current row `_snap`
-    * — that pass the batch's strict first-op precondition (reference
-    * validateEvents semantics, distributed through the join: no state
-    * re-read), raising `strict merge violation` on the first that
-    * fails: a create/read needs no current row, an update/delete needs
-    * one equal to its first before-image. Deltas without a before-image
-    * check presence only, which IS the reference's whole Mongo
-    * precondition (:500-524); a PER-ROW null before-image means a Mongo
-    * delta in a mixed commit, sound because relational strict decode
-    * raises on u/d with a null before (EnvelopeDecoder). `delta` prefixes
-    * the delta fields: "_delta." in [[applyDeltas]]' full outer join,
-    * whose state-only rows pass (their null `_first_op` takes the
-    * presence branch), "" in the lake's merge-on-read left join. */
-  private[graft] def strictChecked(joined: DataFrame, keyCols: Seq[String],
-      payloadCols: Seq[String], delta: String, hasBefore: Boolean): DataFrame = {
-    val cmp = payloadCols.filterNot(_ == "_offset")
-    val sameBefore =
-      if (hasBefore)
-        when(col(s"${delta}_first_before").isNull, lit(true))
-          .otherwise(struct(cmp.map(c => col(s"${delta}_first_before.$c")): _*) <=>
-            struct(cmp.map(c => col(s"_snap.$c")): _*))
-      else lit(true)
-    val ok = when(col(s"${delta}_first_op").isin(OpCreate, OpRead), col("_snap").isNull)
-      .otherwise(col("_snap").isNotNull && sameBefore)
-    joined.filter(
-      when(assert_true(ok, concat(lit("strict merge violation: key="),
-        concat_ws("|", keyCols.map(c => col(c).cast("string")): _*),
-        lit(" first_op="), col(s"${delta}_first_op"))).isNull, lit(true)))
+  /** Plain rows (key + payload) as [[applyBatch]]'s prior rows at seq 0. */
+  def asPrior(rows: DataFrame, keyCols: Seq[String], payloadCols: Seq[String]): DataFrame =
+    rows.select((keyCols ++ payloadCols).map(col) ++ Seq(lit(OpRead).as("operation"),
+      lit(null).cast(MaskType).as("_patch_mask"), lit(0L).as("_o")): _*)
+
+  private val MaskType =
+    org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StringType, containsNull = false)
+
+  /** The new rows of `prior` (key + payload, `operation`, `_patch_mask`,
+    * seq `_o`) after a reduced delta batch folds onto them at `batchSeq`,
+    * above every prior seq. `strict` checks [[firstOpHolds]]; `unique` =
+    * (seq column, message of the key) raises on a key with two rows on that
+    * side (`_d` batch, `_o` prior). Both checks read the fold's aggregate. */
+  def applyBatch(prior: DataFrame, deltas: DataFrame, batchSeq: Long, keyCols: Seq[String],
+      payloadCols: Seq[String], anyPatch: Boolean, strict: Boolean,
+      unique: Option[(String, Column => Column)] = None): DataFrame = {
+    val carry = if (strict) deltas.columns.toSeq.filter(_.startsWith("_first_")) else Nil
+    val in = withBatch(prior, deltas, batchSeq, keyCols, payloadCols, carry)
+      .withColumn("_n", coalesce(col("_d"), col("_o")))
+    val folded = foldImages(in, keyCols, payloadCols, anyPatch,
+      Option.when(strict)("_o").toSeq :+ "_n",
+      Option.when(strict)(lastByOffset(col("_b"), col("_d")).as("_b")).toSeq ++
+        unique.map { case (seq, _) => count(col(seq)).as("_k") })
+    val once = unique.fold(folded) { case (_, msg) =>
+      holding(folded, col("_k") <= 1, msg(keyString(keyCols))) }
+    val checked = if (!strict) once else strictRows(once,
+      firstOpHolds(payloadCols, deltas.columns.contains("_first_before")), keyCols, col("_b._first_op"))
+    checked.filter(col("_n").isNotNull)
+      .select(keyCols.map(col) ++ payloadCols.map(c => col(s"_n.$c").as(c)): _*)
   }
+
+  /** The rows of a reduced strict delta batch, unchanged, once each has
+    * passed [[firstOpHolds]] against its key's image in `prior` (as in
+    * [[applyBatch]]): the merge-on-read check, which writes the batch. */
+  def strictBatch(prior: DataFrame, deltas: DataFrame, batchSeq: Long, keyCols: Seq[String],
+      payloadCols: Seq[String], anyPatch: Boolean): DataFrame = {
+    val carry = deltas.columns.toSeq.filterNot(keyCols.contains)
+    val folded = foldImages(withBatch(prior, deltas, batchSeq, keyCols, payloadCols, carry),
+      keyCols, payloadCols, anyPatch, Seq("_o"), Seq(lastByOffset(col("_b"), col("_d")).as("_b")))
+    strictRows(folded, firstOpHolds(payloadCols, deltas.columns.contains("_first_before")),
+        keyCols, col("_b._first_op"))
+      .filter(col("_b").isNotNull)
+      .select(keyCols.map(col) ++ carry.map(c => col(s"_b.$c").as(c)): _*)
+  }
+
+  /** `prior` rows (seq `_o`) ∪ the batch rows (seq `_d` = `batchSeq`),
+    * the batch's `carry` columns packed in `_b` for the fold to return. */
+  private def withBatch(prior: DataFrame, deltas: DataFrame, batchSeq: Long,
+      keyCols: Seq[String], payloadCols: Seq[String], carry: Seq[String]): DataFrame = {
+    val common = (keyCols ++ payloadCols :+ "operation").map(col)
+    val mask = if (deltas.columns.contains("_patch_mask")) col("_patch_mask") else lit(null)
+    val batch = deltas.select(common ++ Seq(mask.cast(MaskType).as("_patch_mask"),
+      lit(null).cast("long").as("_o"), lit(batchSeq).as("_d")) ++
+      Option.when(carry.nonEmpty)(struct(carry.map(col): _*).as("_b")): _*)
+    prior.select(common ++ Seq(col("_patch_mask"), col("_o"), lit(null).cast("long").as("_d")) ++
+        Option.when(carry.nonEmpty)(lit(null).cast(batch.schema("_b").dataType).as("_b")): _*)
+      .unionByName(batch)
+  }
+
+  /** First-op precondition of a key's batch row `_b` against its prior
+    * image `_o` (reference validateEvents): c/r needs none, u/d one equal
+    * to its first before-image (ignoring `_offset`) or, with a null
+    * before-image (Mongo, :500-524; relational strict decode raises on
+    * one), any. */
+  private def firstOpHolds(payloadCols: Seq[String], hasBefore: Boolean): Column = {
+    val cmp = payloadCols.filterNot(_ == "_offset")
+    val sameBefore = if (!hasBefore) lit(true) else col("_b._first_before").isNull ||
+      (struct(cmp.map(c => col(s"_b._first_before.$c")): _*) <=> struct(cmp.map(c => col(s"_o.$c")): _*))
+    when(col("_b").isNull, lit(true))
+      .when(col("_b._first_op").isin(OpCreate, OpRead), col("_o").isNull)
+      .otherwise(col("_o").isNotNull && sameBefore)
+  }
+
+  /** Rows of `df` for which `ok` holds; the first that fails raises
+    * `strict merge violation: key=<key> first_op=<firstOp>`. */
+  def strictRows(df: DataFrame, ok: Column, keyCols: Seq[String], firstOp: Column): DataFrame =
+    holding(df, ok, concat(lit("strict merge violation: key="), keyString(keyCols),
+      lit(" first_op="), firstOp))
+
+  private def keyString(keyCols: Seq[String]): Column =
+    concat_ws("|", keyCols.map(c => col(c).cast("string")): _*)
+
+  private def holding(df: DataFrame, ok: Column, msg: Column): DataFrame =
+    df.filter(when(assert_true(ok, msg).isNull, lit(true)))
 }

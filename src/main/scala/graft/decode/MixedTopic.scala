@@ -40,20 +40,6 @@ object MixedTopic {
   private def isMongo(value: Column): Column =
     connectorOf(value) <=> lit("mongodb")
 
-  /** Decode a mixed topic into the unified event IR (key, offset,
-    * connector, operation, before, after, keyMask, pk). Strict mode is
-    * required: Mongo patches are not last-writer-wins mergeable
-    * (reference :561). */
-  def decode(raw: DataFrame, schema: CdcSchema, opts: DecodeOptions): DataFrame = {
-    require(opts.strict, "mixed-topic decode requires strict mode (Mongo patches are not LWW-mergeable)")
-    val live = raw.filter(col("value").isNotNull)
-    EnvelopeDecoder.decodeRelational(
-        live.filter(!isMongo(col("value"))), schema, opts.copy(connector = None))
-      .unionByName(MongoDecoder.decode(
-        live.filter(isMongo(col("value"))), schema,
-        opts.copy(connector = Some("mongodb"))))
-  }
-
   /** Strict MERGE-ready deltas for a mixed topic, in ONE commit: the
     * relational family through [[CdcApply.strictDeltas]] (declarative
     * chain validation, `_first_before` precondition) and the Mongo family
@@ -65,12 +51,11 @@ object MixedTopic {
     *
     * A key must be fed by ONE connector family within a batch (two delta
     * rows for one key would race in the merge); multiplexed topics carry
-    * disjoint tables/keys in practice, and `checkDisjoint` (default on)
-    * enforces it with a window count over the DELTA set — one row per
-    * touched key, negligible next to the event shuffle.
+    * disjoint tables/keys in practice, and a window count over the DELTA
+    * set enforces it — one row per touched key, negligible next to the
+    * event shuffle.
     */
-  def strictDeltas(raw: DataFrame, schema: CdcSchema, opts: DecodeOptions,
-      checkDisjoint: Boolean = true): DataFrame = {
+  def strictDeltas(raw: DataFrame, schema: CdcSchema, opts: DecodeOptions): DataFrame = {
     require(opts.strict, "mixed-topic decode requires strict mode (Mongo patches are not LWW-mergeable)")
     val live = raw.filter(col("value").isNotNull)
     val maskType = ArrayType(StringType, containsNull = false)
@@ -85,17 +70,12 @@ object MixedTopic {
           opts.copy(connector = Some("mongodb"))),
         schema)
       .withColumn("_first_before", lit(null).cast(schema.structType))
-    val unioned = rel.unionByName(mon)
-    if (!checkDisjoint) unioned
-    else {
-      val w = Window.partitionBy(schema.keyNames.map(col): _*)
-      unioned
-        .withColumn("_fam", count(lit(1)).over(w))
-        .filter(when(assert_true(col("_fam") === 1,
-          concat(lit("key fed by multiple connector families in one batch: "),
-            concat_ws("|", schema.keyNames.map(n => col(n).cast("string")): _*))).isNull,
-          lit(true)))
-        .drop("_fam")
-    }
+    rel.unionByName(mon)
+      .withColumn("_fam", count(lit(1)).over(Window.partitionBy(schema.keyNames.map(col): _*)))
+      .filter(when(assert_true(col("_fam") === 1,
+        concat(lit("key fed by multiple connector families in one batch: "),
+          concat_ws("|", schema.keyNames.map(n => col(n).cast("string")): _*))).isNull,
+        lit(true)))
+      .drop("_fam")
   }
 }

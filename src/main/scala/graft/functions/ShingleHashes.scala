@@ -74,11 +74,4 @@ object ShingleHashes {
 
   def shingleHashes(text: Column, n: Int): Column =
     toColumn(ShingleHashes(toExpression(text), n))
-
-  /** Per-seed re-mix for MinHash signatures: xxhash64 of the window hash
-    * with the seed (8-byte input — far cheaper than re-hashing the
-    * shingle text per seed, and overflow-safe under ANSI mode). */
-  def seedMix(h: Column, seed: Int): Column =
-    org.apache.spark.sql.functions.xxhash64(h,
-      org.apache.spark.sql.functions.lit(seed))
 }

@@ -724,7 +724,8 @@ class LakeTable(val spark: SparkSession, val root: String) {
       in.join(manifestParquetDf(keySchema, cand.map(_.path)), keyCols, "left_semi")
     }
     val (o, n) = (col("_o"), col("_n"))
-    foldImages(keyed, keyCols, payloadCols, (fromFiles ++ toFiles).exists(_.patch), Seq("_o", "_n"))
+    CdcApply.foldImages(keyed, keyCols, payloadCols, (fromFiles ++ toFiles).exists(_.patch),
+        Seq("_o", "_n"))
       .withColumn("_change_type", when(o <=> n, lit(null))
         .when(o.isNull, lit("insert")).when(n.isNull, lit("delete")).otherwise(lit("update")))
       .filter(col("_change_type").isNotNull)
@@ -1106,38 +1107,14 @@ class LakeTable(val spark: SparkSession, val root: String) {
     }.drop("_file")
   }
 
-  /** Merge-on-read fold of [[foldInput]] rows: per key, one image column
-    * per seq column (same name) — the payload struct the rows with a
-    * non-null seq there reconstruct, null where the key is deleted or
-    * absent. When every delta row is a FULL row the last writer
-    * (greatest seq) wins — one LastByOffset ObjectHashAggregate. When any
-    * file carries PARTIAL (patch-masked) rows the key's rows fold in seq
-    * order instead (PatchFoldBySeq — LWW would drop the unmasked fields
-    * of the last patch). Partial aggregation keeps hot keys combine-side;
-    * the per-key buffer is bounded by the compaction threshold. */
-  private def foldImages(in: DataFrame, keyCols: Seq[String], payloadCols: Seq[String],
-      anyPatch: Boolean, seqCols: Seq[String]): DataFrame = {
-    import graft.functions.{LastByOffset, PatchFoldBySeq}
-    val keys = keyCols.map(col)
-    val fold: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-      if (anyPatch) PatchFoldBySeq.patchFoldBySeq(
-        struct((payloadCols ++ Seq("operation", "_patch_mask")).map(col): _*), _)
-      else LastByOffset.lastByOffset(struct((payloadCols :+ "operation").map(col): _*), _)
-    val folds = seqCols.map(s => fold(col(s)).as(s))
-    val folded = in.groupBy(keys: _*).agg(folds.head, folds.tail: _*)
-    if (anyPatch) folded // the patch fold is already null for a deleted key
-    else folded.select(keys ++ seqCols.map(s => when(col(s"$s.operation") =!= "d",
-      struct(payloadCols.map(c => col(s"$s.$c")): _*)).as(s)): _*)
-  }
-
   /** Current rows of the given (delta-carrying) buckets' files: the
-    * [[foldImages]] reconstruction over one scan. */
+    * `CdcApply.foldImages` reconstruction over one scan. */
   private def reconstructRows(snap: Snapshot, files: Seq[DataFile],
       payloadSubset: Option[Seq[String]] = None): DataFrame = {
     val keyCols = snap.keyColumns
     val payloadCols = payloadSubset.getOrElse(
       snap.schema.fieldNames.filterNot(keyCols.contains).toSeq)
-    foldImages(foldInput(snap.schema, Seq("_seq" -> files)), keyCols, payloadCols,
+    CdcApply.foldImages(foldInput(snap.schema, Seq("_seq" -> files)), keyCols, payloadCols,
         files.exists(_.patch), Seq("_seq"))
       .filter(col("_seq").isNotNull)
       .select(keyCols.map(col) ++ payloadCols.map(c => col(s"_seq.$c").as(c)): _*)
@@ -1293,7 +1270,12 @@ class LakeTable(val spark: SparkSession, val root: String) {
 
   /** MERGE a reduced delta batch (output of EnvelopeDecoder.toDeltas:
     * key cols + payload cols + `operation` + `offset`, ≤1 row per key)
-    * into the table. Copy-on-write limited to affected buckets.
+    * into the table. Copy-on-write limited to affected buckets: their
+    * files and the batch fold through `CdcApply.applyBatch`, whose
+    * images replace the buckets; `strictValidate` checks the deltas'
+    * first-op preconditions in that fold. A batch holding a key twice
+    * raises (`mergeDeltas` folds it to its last row per key, as a read
+    * does); prior rows an un-reduced `append` holds twice fold to one.
     *
     * Idempotent on (checkpointId, batchId): replaying a batch that a
     * committed snapshot already records is a no-op — the exactly-once
@@ -1307,7 +1289,7 @@ class LakeTable(val spark: SparkSession, val root: String) {
     commit("merge", Some((checkpointId, batchId))) { cur =>
       val keyCols = cur.keyColumns
       val payloadCols = cur.schema.fieldNames.filterNot(keyCols.contains).toSeq
-      // deltas are consumed twice (stats pass + merge join): persist the
+      // deltas are consumed twice (stats pass + merge fold): persist the
       // reduced batch rather than re-running decode+reduce upstream
       val withBucket = deltas.withColumn("_bucket", bucketCol(keyCols, cur.nBuckets))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
@@ -1331,10 +1313,13 @@ class LakeTable(val spark: SparkSession, val root: String) {
         else {
           val affected = stats.map(_.getInt(0)).toSet
           val (affectedFiles, keptFiles) = cur.files.partition(f => affected.contains(f.bucket))
-          // delta wins, a PATCH delta overlays its masked fields, op='d'
-          // drops the key
-          val merged = CdcApply.applyDeltas(Some(snapshotRows(cur, affectedFiles)),
-            withBucket, keyCols, payloadCols, strictValidate)
+          // the batch folds above every file's seq (a Fold commit stamps
+          // cur.version)
+          val merged = CdcApply.applyBatch(foldInput(cur.schema, Seq("_o" -> affectedFiles)),
+            withBucket, cur.version + 1L, keyCols, payloadCols,
+            affectedFiles.exists(_.patch) || deltas.columns.contains("_patch_mask"),
+            strictValidate, unique = Some(("_d", (k: org.apache.spark.sql.Column) =>
+              concat(lit("merge batch holds duplicate key '"), k, lit("'")))))
           // in-bucket salt lifts write parallelism above the affected-bucket
           // count when the cluster has idle slots
           val staged = stage(cur, "commit", merged, affected.toSeq)
@@ -1362,8 +1347,8 @@ class LakeTable(val spark: SparkSession, val root: String) {
     }
 
   /** Current rows of a file subset: plain scan if no delta files are
-    * present, LWW reconstruction otherwise (lets copy-on-write `merge`
-    * and strict validation run on a table with outstanding deltas). */
+    * present, LWW reconstruction otherwise (lets `cluster` and `zorder`
+    * run on a table with outstanding deltas). */
   private def snapshotRows(snap: Snapshot, files: Seq[DataFile]): DataFrame =
     if (files.exists(_.delta)) reconstructRows(snap, files)
     else readFiles(snap, files)
@@ -1375,13 +1360,14 @@ class LakeTable(val spark: SparkSession, val root: String) {
     * aggregates are collected by `Dataset.observe` DURING the write job:
     * the batch is consumed exactly once, no persist, no stats pre-pass.
     *
-    * Same idempotence contract as `merge`. With `strictValidate`, the
-    * batch's first-op preconditions are checked against the CURRENT state
-    * of the affected buckets through a left join (read amplification but
-    * still no rewrite). A lost version race ALWAYS rebases (except over
-    * layout changes): the staged delta files are re-stamped with the
-    * final commit seq, which serializes this batch after the interim
-    * commits in the reconstruction order.
+    * Same idempotence contract as `merge`, but a batch holding a key
+    * twice is not checked: reads fold it to its last row per key. With
+    * `strictValidate`, the batch folds onto the affected buckets' files
+    * (`CdcApply.strictBatch`; read amplification but still no rewrite),
+    * which check its first-op preconditions. A lost version race ALWAYS
+    * rebases (except over layout changes): the staged delta files are
+    * re-stamped with the final commit seq, which serializes this batch
+    * after the interim commits in the reconstruction order.
     *
     * `autoCompact` > 0 folds a bucket's deltas into a base file once it
     * accumulates that many delta commits, bounding the read tax. */
@@ -1402,11 +1388,9 @@ class LakeTable(val spark: SparkSession, val root: String) {
             org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
           val affected = persisted.select(col("_bucket")).distinct()
             .collect().map(_.getInt(0)).toSet
-          val snapDf = snapshotRows(cur, cur.files.filter(f => affected.contains(f.bucket)))
-          val s = snapDf.select(keyCols.map(col) :+
-            struct(payloadCols.map(col): _*).as("_snap"): _*)
-          CdcApply.strictChecked(persisted.join(s, keyCols, "left_outer"), keyCols, payloadCols, "",
-            deltas.columns.contains("_first_before"))
+          val files = cur.files.filter(f => affected.contains(f.bucket))
+          CdcApply.strictBatch(foldInput(cur.schema, Seq("_o" -> files)), persisted,
+            cur.version + 1L, keyCols, payloadCols, files.exists(_.patch))
         } else deltas
 
         val obs = Observation()

@@ -112,14 +112,6 @@ case class CdcSchema(columns: Seq[CdcColumn]) {
       StructField("_topic", StringType, nullable = false, internalMeta),
       StructField("_offset", LongType, nullable = false, internalMeta)))
 
-  /** Raw JSON shape of payload.before / payload.after for from_json. */
-  def rawPayloadType: StructType =
-    StructType(columns.map(c => StructField(c.name, c.rawJsonType, nullable = true)))
-
-  /** Raw JSON shape of the Kafka key payload (key columns only). */
-  def rawKeyType: StructType =
-    StructType(keyColumns.map(c => StructField(c.name, c.rawJsonType, nullable = true)))
-
   /** Additive evolution: append new (nullable) columns. Widening/renames
     * are rejected — matches the lake's evolution rules. */
   def evolve(newColumns: Seq[CdcColumn]): CdcSchema = {

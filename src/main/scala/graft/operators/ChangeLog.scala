@@ -68,28 +68,31 @@ object ChangeLog {
       .select(keyCols.map(col) ++ payloadCols.map(c => col(s"_w.$c").as(c)): _*)
   }
 
-  /** Merge a reduced delta set into a snapshot: full-outer join on the key;
-    * when a delta row exists it wins, and if `isDelete(deltaStruct)` holds
-    * the key is dropped entirely (reference: cogroup state-injection
-    * DebeziumTransform.scala:660-680 + delete filter :716-717,757-758 —
-    * generalized to MERGE INTO semantics).
+  /** Merge a reduced delta set into a snapshot (MERGE INTO semantics)
+    * through the merge-on-read fold, `CdcApply.applyBatch`: a delta row
+    * wins, and where `isDelete(deltaStruct)` holds (or is null) the key is
+    * dropped (reference: cogroup state-injection
+    * DebeziumTransform.scala:660-680 + delete filter :716-717,757-758).
     *
     * Both inputs must already be ≤1 row per key (run [[latestByKey]]
     * first). `snapshot`'s payload columns must be a subset of `delta`'s.
+    * Any column name is allowed: the fold runs over positional aliases,
+    * so a payload column named like one of its own (`operation`, ...)
+    * cannot clash.
     */
   def mergeSnapshot(
       snapshot: DataFrame,
       delta: DataFrame,
       keyCols: Seq[String])(isDelete: Column => Column): DataFrame = {
+    import graft.apply.CdcApply
     val payloadCols = snapshot.columns.filterNot(keyCols.contains).toSeq
-    val snap = snapshot.select(
-      keyCols.map(col) :+ struct(payloadCols.map(col): _*).as("_snap"): _*)
-    val dlt = delta.select(
-      keyCols.map(col) :+ struct(delta.columns.filterNot(keyCols.contains).map(col).toSeq: _*).as("_delta"): _*)
-    snap.join(dlt, keyCols, "full_outer")
-      .filter(col("_delta").isNull || !isDelete(col("_delta")))
-      .select(keyCols.map(col) ++ payloadCols.map { c =>
-        when(col("_delta").isNotNull, col(s"_delta.$c")).otherwise(col(s"_snap.$c")).as(c)
-      }: _*)
+    val (ks, ps) = (keyCols.indices.map(i => s"k$i"), payloadCols.indices.map(i => s"p$i"))
+    val aliased = (keyCols ++ payloadCols).zip(ks ++ ps).map { case (c, a) => col(c).as(a) }
+    val dlt = struct(delta.columns.filterNot(keyCols.contains).map(col).toSeq: _*)
+    CdcApply.applyBatch(CdcApply.asPrior(snapshot.select(aliased: _*), ks, ps),
+      delta.select(aliased :+ when(!isDelete(dlt), lit(CdcApply.OpUpdate))
+        .otherwise(lit(CdcApply.OpDelete)).as("operation"): _*),
+      1L, ks, ps, anyPatch = false, strict = false)
+      .select((ks ++ ps).zip(keyCols ++ payloadCols).map { case (a, c) => col(a).as(c) }: _*)
   }
 }

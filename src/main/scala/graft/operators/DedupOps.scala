@@ -45,44 +45,6 @@ object DedupOps {
       explode(graft.functions.ShingleHashes.shingleHashes(
         TextOps.normalize(col(textCol)), shingleN)).as("hh"))
 
-  /** MinHash+LSH near-duplicate pairs (id_a < id_b) with an estimated
-    * Jaccard (fraction of agreeing minhash components) ≥ `threshold`.
-    *
-    * Pipeline: explode shingle hashes → one hash-agg builds the
-    * `numHashes` signature minima per doc (seed-mixed from the window
-    * hash, no per-seed re-hash of text) → explode band keys → equi
-    * self-join carrying IDS ONLY → distinct pairs → signatures re-joined
-    * (broadcast) for the agreement estimate. Candidate pairs never drag
-    * the signature arrays through the band-join shuffle.
-    */
-  def minHashLshPairs(
-      df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 5, numHashes: Int = 32, rowsPerBand: Int = 4,
-      threshold: Double = 0.8): DataFrame = {
-    import graft.functions.ShingleHashes.seedMix
-    val ex = explodedShingleHashes(df, idCol, textCol, shingleN)
-    val sigs = ex.groupBy(col("id")).agg(
-      array((0 until numHashes).map(seed => min(seedMix(col("hh"), seed))): _*).as("sig"))
-    val bands = numHashes / rowsPerBand
-    val banded = sigs.select(col("id"),
-      explode(array((0 until bands).map { b =>
-        struct(lit(b).as("band"),
-          xxhash64(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)).as("h"))
-      }: _*)).as("bk"))
-    val a = banded.select(col("id").as("id_a"), col("bk"))
-    val b = banded.select(col("id").as("id_b"), col("bk"))
-    val pairs = a.join(b, Seq("bk"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    val sa = sigs.select(col("id").as("id_a"), col("sig").as("sig_a"))
-    val sb = sigs.select(col("id").as("id_b"), col("sig").as("sig_b"))
-    pairs.join(sa, "id_a").join(sb, "id_b")
-      .select(col("id_a"), col("id_b"),
-        (size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y), v => v))
-          .cast("double") / numHashes).as("jaccard_est"))
-      .filter(col("jaccard_est") >= threshold)
-  }
-
   /** 64-bit SimHash per document: per-bit majority vote over shingle
     * hashes, ONE aggregation pass with 32 packed counters (2×31-bit
     * counts per long — no overflow below 2^31 shingles per doc; the old
@@ -493,34 +455,6 @@ object DedupOps {
         size(array_intersect(col("wa"), col("wb"))).as("n_inter"),
         size(array_union(col("wa"), col("wb"))).as("n_union"))
       .filter(col("n_inter") * 2 >= col("n_union"))
-  }
-
-  /** DuckDB oracle for [[jaccardBandedPairs]]: identical md5+affine
-    * signatures; candidates via OR of per-band component conjunctions. */
-  def jaccardBandedOracleSql(table: String, idCol: String,
-      numHashes: Int = 16, rowsPerBand: Int = 4): String = {
-    val sigCols = (0 until numHashes).map(s =>
-      s"MIN((h32*${affineA(s)} + ${affineB(s)}) % $MinHashP) AS m$s").mkString(",\n    ")
-    val bandCond = (0 until numHashes / rowsPerBand).map { b =>
-      (0 until rowsPerBand).map(r => s"a.m${b * rowsPerBand + r} = b.m${b * rowsPerBand + r}")
-        .mkString("(", " AND ", ")")
-    }.mkString("\n       OR ")
-    s"""WITH d AS (
-       |  SELECT $idCol AS id,
-       |         list_distinct(string_split_regex(trim(text), '\\s+')) AS words
-       |  FROM $table),
-       |hv AS (SELECT id, CAST(('0x' || substr(md5(w),1,8)) AS BIGINT) AS h32
-       |       FROM (SELECT id, unnest(words) AS w FROM d)),
-       |sig AS (SELECT id, $sigCols FROM hv GROUP BY id),
-       |cand AS (
-       |  SELECT a.id AS id_a, b.id AS id_b FROM sig a JOIN sig b
-       |  ON a.id < b.id AND ($bandCond))
-       |SELECT c.id_a, c.id_b,
-       |  CAST(len(list_intersect(da.words, db.words)) AS INT) AS n_inter,
-       |  CAST(len(list_distinct(list_concat(da.words, db.words))) AS INT) AS n_union
-       |FROM cand c JOIN d da ON da.id = c.id_a JOIN d db ON db.id = c.id_b
-       |WHERE len(list_intersect(da.words, db.words)) * 2
-       |      >= len(list_distinct(list_concat(da.words, db.words)))""".stripMargin
   }
 
   /** Near-duplicate DEDUP DECISIONS via minhash bucketing + exact Jaccard

@@ -320,17 +320,4 @@ object VectorOps {
         (dot(col("_vl"), col("_vr")) / (col("_nl") * col("_nr"))).as("sim"))
       .filter(col("sim") >= threshold)
   }
-
-  /** Embedding-cosine near-duplicate pairs above `threshold` (id_a<id_b),
-    * LSH-blocked on the RHP signature to avoid the O(n²) cross join. */
-  def cosineDupPairs(df: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, bits: Int = 6): DataFrame = {
-    val sig = df.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("bucket", rhpSignature(col("v"), bits))
-    val a = sig.select(col("id").as("id_a"), col("v").as("_va"), col("bucket"))
-    val b = sig.select(col("id").as("id_b"), col("v").as("_vb"), col("bucket"))
-    a.join(b, Seq("bucket")).filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), cosine(col("_va"), col("_vb")).as("sim"))
-      .filter(col("sim") >= threshold)
-  }
 }

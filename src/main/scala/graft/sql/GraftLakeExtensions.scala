@@ -325,16 +325,18 @@ case class GraftMergeCommand(root: String, source: LogicalPlan, op: String)
       src.columns.exists(_.equalsIgnoreCase(n)))
     require(missing.isEmpty, s"graft-lake MERGE: source is missing table " +
       s"columns ${missing.mkString(", ")} (SET * / INSERT * need them all)")
-    // SQL standard: each target row may match at most one source row
-    val dup = src.groupBy(snap.keyColumns.map(col): _*)
-      .agg(count(lit(1)).as("n")).filter(col("n") > 1).limit(1).collect()
-    if (dup.nonEmpty) sys.error(
-      s"graft-lake MERGE: source has duplicate key ${dup.head.toSeq.init.mkString("|")}")
     val aligned = src.select(snap.schema.fields
       .map(f => GraftDml.storeAs(GraftDml.field(src, f.name), f)).toSeq: _*)
     val commitId = s"sql-merge-${java.util.UUID.randomUUID().toString.take(8)}"
     val before = t.currentSnapshot.map(_.version)
+    // SQL standard: each target row may match at most one source row.
+    // `merge` raises on a duplicate key inside its fold; the full sync
+    // overwrites, so it checks here
     if (op == "sync") { // full sync: the final state IS the source
+      val dup = src.groupBy(snap.keyColumns.map(col): _*)
+        .agg(count(lit(1)).as("n")).filter(col("n") > 1).limit(1).collect()
+      if (dup.nonEmpty) sys.error(
+        s"graft-lake MERGE: source has duplicate key ${dup.head.toSeq.init.mkString("|")}")
       t.overwrite(aligned, commitId)
       return Seq(Row(null))
     }

@@ -105,8 +105,8 @@ class CdcPipeline(
       if (mixed) raw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
       else raw
     try {
-    // strict preconditions and Mongo masked fields are finished inside the
-    // bucket-pruned merge join — state is never re-read wholesale
+    // strict preconditions and Mongo masked fields are finished in the
+    // fold over the affected buckets — state is never re-read wholesale
     val deltas = CdcPipeline.deltas(rawCached, schema, decodeOptions)
     val snap =
       if (mergeOnRead) // Mongo PATCH deltas fold via PatchFoldBySeq on read

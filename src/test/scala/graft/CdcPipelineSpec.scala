@@ -91,7 +91,7 @@ class CdcPipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val pipe = new CdcPipeline(spark, schema, table,
       DecodeOptions(strict = true, validate = true), "cp-strict")
     // batch boundaries at arbitrary points: cross-batch chains validated
-    // against the snapshot inside the merge join
+    // against the prior images inside the merge fold
     val rows = rawRows(wl)
     rows.grouped(77).zipWithIndex.foreach { case (g, i) =>
       pipe.processBatch(g.toDF(), i.toLong)

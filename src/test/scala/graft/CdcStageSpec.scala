@@ -188,10 +188,10 @@ class CdcStageSpec extends AnyFunSuite with SparkSessionTestWrapper {
         case _ => false
       }, s"strict=$strict: ${msgsOf(ex).headOption}")
     }
-    // the check's window shares the merge join's partitioning by key: the
-    // state side shuffles once
+    // the check counts inside the fold's aggregate: the state side
+    // shuffles once, into that aggregate
+    import org.apache.spark.sql.execution.LocalTableScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
     spark.createDataFrame(once.collect().toSeq.asJava, once.schema)
       .createOrReplaceTempView("stage_dup_local_state")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -200,8 +200,10 @@ class CdcStageSpec extends AnyFunSuite with SparkSessionTestWrapper {
         name = "d2", inputView = "stage_dup_in", outputView = "stage_dup_plan",
         schema = Some(schema), connector = Some("mysql"), strict = true,
         initialStateView = Some("stage_dup_local_state")))(spark).queryExecution.executedPlan
-      val join = plan.collectFirst { case j: SortMergeJoinExec => j }
-      assert(join.exists(_.left.collect { case e: ShuffleExchangeExec => e }.size == 1), plan)
+      val overState = plan.collect { case e: ShuffleExchangeExec if e.collectFirst {
+        case s: LocalTableScanExec if once.columns.forall(s.output.map(_.name).contains) => s
+      }.nonEmpty => e }
+      assert(overState.size == 1, plan)
     } finally spark.conf.unset("spark.sql.adaptive.enabled")
   }
 

@@ -4,11 +4,12 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 
 import graft.apply.CdcApply._
+import graft.decode.{DecodeOptions, EnvelopeDecoder, MixedTopic, MongoDecoder}
 import graft.model.CdcSchema
 
 /** The reference-shaped strict apply, kept as the differential oracle for
-  * the engine's one strict path (per-key deltas merged onto prior state,
-  * `CdcApply.applyDeltas`): prior state rows enter the batch as synthetic
+  * the engine's one strict path (per-key deltas folded onto prior rows,
+  * `CdcApply.applyBatch`): prior state rows enter the batch as synthetic
   * ("state","r") events at offset 0 (reference cogroup,
   * DebeziumTransform.scala:660-680), and one `flatMapGroups` walks each
   * key's offset-ordered chain (reference validateEvents /
@@ -18,6 +19,20 @@ object ChainWalker {
   val ConnectorState = "state"; val ConnectorMongo = "mongodb"
   // event IR field indices the walkers read beyond CdcApply's
   val IConnector = 2; val IBefore = 4
+
+  /** Decode a mixed topic into the walker's event IR (key, offset,
+    * connector, operation, before, after, keyMask, pk): each message
+    * routes by its own `payload.source.connector` — Mongo messages to
+    * `MongoDecoder`, the rest to the relational decoder in per-message
+    * dispatch mode. Strict only: Mongo patches are not LWW-mergeable. */
+  def decodeMixed(raw: DataFrame, schema: CdcSchema, opts: DecodeOptions): DataFrame = {
+    require(opts.strict, "mixed-topic decode requires strict mode (Mongo patches are not LWW-mergeable)")
+    val live = raw.filter(col("value").isNotNull)
+    val isMongo = MixedTopic.connectorOf(col("value")) <=> lit("mongodb")
+    EnvelopeDecoder.decodeRelational(live.filter(!isMongo), schema, opts.copy(connector = None))
+      .unionByName(MongoDecoder.decode(live.filter(isMongo), schema,
+        opts.copy(connector = Some("mongodb"))))
+  }
 
   /** Inject previous state as synthetic ("state","r") events at offset 0
     * (reference cogroup, DebeziumTransform.scala:660-680). `snapshot` must

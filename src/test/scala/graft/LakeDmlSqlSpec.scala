@@ -156,6 +156,17 @@ class LakeDmlSqlSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(t.read().agg(min("id"), max("id")).head.toSeq == Seq(500L, 1199L))
     assert(t.read().filter(col("id") === 600L).head.getLong(2) == 600 * 7 + 1)
     assert(t.read(Some(preVer)).count() == 1000)
+    // a source holding a key twice: rejected, nothing commits
+    spark.range(0, 10).select((col("id") % 5).as("id"), lit(0L).as("grp"), lit(0L).as("v"))
+      .createOrReplaceTempView("dml_src_sync_dup")
+    val dup = intercept[Exception] {
+      spark.sql(s"""MERGE INTO $v t USING dml_src_sync_dup s ON t.id = s.id
+        WHEN MATCHED THEN UPDATE SET *
+        WHEN NOT MATCHED THEN INSERT *
+        WHEN NOT MATCHED BY SOURCE THEN DELETE""")
+    }
+    assert(dup.getMessage.contains("graft-lake MERGE: source has duplicate key"), dup.getMessage)
+    assert(t.currentVersion.get == preVer + 1)
     // conditional NOT MATCHED BY SOURCE: rejected
     val ex = intercept[Exception] {
       spark.sql(s"""MERGE INTO $v t USING dml_src_sync s ON t.id = s.id

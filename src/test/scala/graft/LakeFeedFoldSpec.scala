@@ -15,7 +15,8 @@ import graft.lake.LakeTable
   * fold with each row's commit seq looked up by file path, so generated
   * code is reused from commit to commit; file paths that need escaping
   * still map; and `changes()` and `read()` agree with a plain-Scala model
-  * of the table over a history mixing every kind of commit. */
+  * of the table over a history mixing every kind of commit, strict
+  * copy-on-write and merge-on-read batches of PATCH deltas among them. */
 class LakeFeedFoldSpec extends AnyFunSuite with SparkSessionTestWrapper {
 
   private val schema = StructType(Seq(
@@ -171,6 +172,51 @@ class LakeFeedFoldSpec extends AnyFunSuite with SparkSessionTestWrapper {
     t.evolveSchema(StructType(schema.fields :+ StructField("extra", StringType)))
     extra = true
     mergeDeltas(lwwBatch("l6", 20)); check("rebucket, evolveSchema, then deltas with the new column", back = 3)
+
+    // Strict batches: PATCH updates (only `name` set) carrying their key's
+    // prior image as `_first_before`, presence-only (null before) deletes
+    // and creates of new keys; a violating batch raises and commits nothing.
+    val beforeType = StructType(schema.fields :+ StructField("extra", StringType))
+    def strictFrame(rs: Seq[Row]): DataFrame = spark.createDataFrame(
+      spark.sparkContext.parallelize(rs, 1), StructType(beforeType.fields ++ Seq(
+        StructField("operation", StringType), StructField("offset", LongType),
+        StructField("_patch_mask", ArrayType(StringType, containsNull = false)),
+        StructField("_first_op", StringType), StructField("_first_before", beforeType))))
+    def strictBatch(tag: String): DataFrame = {
+      val live = rnd.shuffle(model.keys.toSeq).take(12)
+      val (del, upd) = live.splitAt(4)
+      val ins = (1000L until 1004L).map(_ + 10 * batch)
+      val rs = upd.map(id => Row(id, s"$tag-$id", null, null, "u", id, Seq("name"), "u",
+          Row.fromSeq(id +: model(id)))) ++
+        del.map(id => Row(id, null, null, null, "d", id, null, "d", null)) ++
+        ins.map { id => val img = image(id, tag); Row.fromSeq((id +: img) ++
+          Seq("c", id, null, "c", null)) }
+      upd.foreach(id => model = model.updated(id, model(id).updated(0, s"$tag-$id")))
+      model = model -- del ++ ins.map(id => id -> rs.find(_.getLong(0) == id).get.toSeq.slice(1, 4))
+      strictFrame(rs)
+    }
+    def violates(expected: String)(commit: => Unit): Unit = {
+      val at = head
+      val ex = intercept[Exception](commit)
+      def msgs(x: Throwable): Seq[String] =
+        if (x == null) Nil else Option(x.getMessage).toSeq ++ msgs(x.getCause)
+      assert(msgs(ex).exists(_.contains(expected)), msgs(ex).headOption)
+      assert(head == at, s"$expected: nothing commits")
+    }
+    t.merge(strictBatch("sc"), "cow-strict", 0L, strictValidate = true)
+    check("strict copy-on-write merge with PATCH deltas")
+    batch += 1; t.mergeDeltas(strictBatch("sm"), "cp", batch, strictValidate = true)
+    check("strict merge-on-read deltas with PATCH deltas")
+    val live = model.keys.min
+    violates(s"strict merge violation: key=$live first_op=c") {
+      t.merge(strictFrame(Seq(Row.fromSeq((live +: image(live, "v")) ++
+        Seq("c", live, null, "c", null)))), "cow-strict", 1L, strictValidate = true)
+    }
+    val absent = 5000L
+    violates(s"strict merge violation: key=$absent first_op=u") {
+      t.mergeDeltas(strictFrame(Seq(Row(absent, "v", null, null, "u", absent, Seq("name"), "u",
+        null))), "cp", batch + 1, strictValidate = true)
+    }
     check("the whole history", back = head)
   }
 }

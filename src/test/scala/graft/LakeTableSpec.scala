@@ -11,6 +11,7 @@ import graft.lake.LakeTable
 import graft.model.CdcSchema
 
 class LakeTableSpec extends AnyFunSuite with SparkSessionTestWrapper {
+  import spark.implicits._
 
   val schema = CdcSchema.transcripts
 
@@ -211,6 +212,34 @@ class LakeTableSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // rewritten buckets must no longer carry delta files
     val rewritten = snap.lineage.get.get("affectedBuckets").asInt()
     assert(rewritten > 0)
+  }
+
+  test("copy-on-write merge rejects a batch holding a key twice; prior duplicates fold") {
+    import org.apache.spark.sql.types._
+    val t = new LakeTable(spark, Files.createTempDirectory("lake").toString)
+    t.create(StructType(Seq(StructField("id", LongType, nullable = false),
+      StructField("name", StringType))), Seq("id"), nBuckets = 4)
+    def named(ids: Seq[Long], tag: String) =
+      ids.map(i => (i, s"$tag-$i")).toDF("id", "name")
+    def batch(rs: (Long, String, String)*) = rs.toDF("id", "name", "operation")
+      .withColumn("offset", col("id"))
+    def state() = t.read().collect().map(r => r.getLong(0) -> r.getString(1)).sorted.toSeq
+    t.append(named(0L until 10L, "a"), "seed", 0L)
+    val before = state()
+    val ex = intercept[Exception] {
+      t.merge(batch((3L, "x-3", "u"), (3L, "y-3", "u"), (20L, "p-20", "c"), (20L, "q-20", "c")),
+        "cp", 0L)
+    }
+    def msgs(x: Throwable): Seq[String] =
+      if (x == null) Nil else Option(x.getMessage).toSeq ++ msgs(x.getCause)
+    assert(msgs(ex).exists(_.matches("(?s).*merge batch holds duplicate key '(3|20)'.*")),
+      msgs(ex).headOption)
+    assert(state() == before)
+    // an un-reduced append may hold a key twice: the merge folds the
+    // key's rows to one, as compact does
+    t.append(named(Seq(5L), "b"), "dup", 0L)
+    t.merge(batch((3L, "x-3", "u"), (5L, "c-5", "u"), (20L, "p-20", "c")), "cp", 0L)
+    assert(state() == (before.toMap ++ Seq(3L -> "x-3", 5L -> "c-5", 20L -> "p-20")).toSeq.sorted)
   }
 
   test("merge-on-read strict validation: cross-batch chains pass, forged before-image fails") {

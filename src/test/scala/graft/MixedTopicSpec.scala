@@ -123,7 +123,7 @@ class MixedTopicSpec extends AnyFunSuite with SparkSessionTestWrapper {
         Option(r.getString(3)), r.getLong(4))).toSet
 
   test("decode routes each message by its own connector") {
-    val events = MixedTopic.decode(batch0, schema, opts)
+    val events = ChainWalker.decodeMixed(batch0, schema, opts)
     val byConn = events.groupBy(col("connector")).count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(byConn == Map("mysql" -> 20L, "postgresql" -> 20L, "mongodb" -> 20L))
@@ -184,7 +184,7 @@ class MixedTopicSpec extends AnyFunSuite with SparkSessionTestWrapper {
         strictOpts.copy(connector = Some("mysql")))))
     // mixed routing over a uniform relational topic degenerates to
     // decodeRelational exactly
-    assert(rows(MixedTopic.decode(my, schema, opts)) ==
+    assert(rows(ChainWalker.decodeMixed(my, schema, opts)) ==
       rows(EnvelopeDecoder.decodeRelational(my, schema, strictOpts)))
   }
 
@@ -196,7 +196,7 @@ class MixedTopicSpec extends AnyFunSuite with SparkSessionTestWrapper {
       schema = Some(schema), connector = Some("mixed"), strict = true))
     assert(asSet(out) == expected)
     assert(asSet(out) == asSet(ChainWalker.applyStrict(
-      MixedTopic.decode(batch0.unionByName(batch1), schema, opts), schema)))
+      ChainWalker.decodeMixed(batch0.unionByName(batch1), schema, opts), schema)))
     // chained: batch 1's updates, patches and deletes merge onto batch 0's
     // stage output
     batch0.createOrReplaceTempView("mixed_in0")

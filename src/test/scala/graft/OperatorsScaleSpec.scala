@@ -22,6 +22,25 @@ class OperatorsScaleSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(!plan.contains("SortAggregate"), s"plan was:\n$plan")
   }
 
+  test("ChangeLog.mergeSnapshot equals a plain-Scala fold of the delta onto the snapshot") {
+    // payload columns named like the fold's own columns must not clash
+    val ev = spark.read.parquet(s"$sf/events.parquet")
+      .select(col("user_id"), col("event_id"), col("event_type").as("operation"), col("value").as("_o"))
+    val snap = ChangeLog.latestByKey(ev.filter(col("event_id") % 2 === 0), Seq("user_id"), "event_id")
+    val delta = ChangeLog.latestByKey(ev.filter(col("event_id") % 2 === 1), Seq("user_id"), "event_id")
+    def byKey(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
+    // a delta row wins its key; an "error" (or null) event type drops it
+    val want = byKey(delta).foldLeft(byKey(snap)) { case (m, (k, row)) =>
+      if (row(1) != null && row(1) != "error") m.updated(k, row) else m - k
+    }
+    val merged = ChangeLog.mergeSnapshot(snap, delta, Seq("user_id"))(
+      d => d.getField("operation") === "error")
+    assert(merged.columns.toSeq == snap.columns.toSeq)
+    val got = byKey(merged)
+    assert(want.size > 0 && got == want)
+  }
+
   test("latestByKey/earliestByKey values match the window-function reference") {
     import org.apache.spark.sql.expressions.Window
     val ev = spark.read.parquet(s"$sf/events.parquet")
