@@ -10,7 +10,9 @@ import org.apache.spark.sql.SparkSession
   *    its final DataFrame's `.explain("formatted")` to
   *    `<outDir>/<name>_<suffix>.txt` (default suffix "before"). For
   *    pipeline-style gates the commits run as construction side effects;
-  *    the captured plan is the judged final read.
+  *    the captured plan is the judged final read. What differs from run
+  *    to run is masked ([[maskPlan]]), so the plans of two checkouts
+  *    compare with a plain `diff`.
   *  - `prof [q1,q2,...] [reps]` — run each query (count() action, same as
   *    Bench) under a job listener; print per-query wall time plus a
   *    breakdown of every Spark job (description, duration) so multi-action
@@ -34,6 +36,21 @@ object BenchExtra {
       jobs.clear(); out
     }
   }
+
+  /** `plan` with expression, plan and RDD ids, source line numbers,
+    * scratch table roots (a prefix plus random digits), commit-dir ids,
+    * data file names and the commit-seq maps keyed by them replaced by
+    * fixed tokens. */
+  def maskPlan(plan: String): String = Seq(
+    "#\\d+" -> "#N",
+    "plan_id=\\d+" -> "plan_id=N",
+    "RDD\\[\\d+\\]" -> "RDD[N]",
+    "\\.scala:\\d+" -> ".scala:N",
+    "(/[A-Za-z_-]+)\\d{6,}" -> "$1N",
+    "(/[a-z]+-\\d+)-[0-9a-f]{8}" -> "$1-C",
+    "part-[^/\\s,\\]\\)}=]+" -> "part-F",
+    "\\{[^{}]*part-F[^{}]*\\}" -> "{seqs}"
+  ).foldLeft(plan) { case (s, (re, to)) => s.replaceAll(re, to) }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -66,8 +83,8 @@ object BenchExtra {
           val t0 = System.nanoTime()
           try {
             val df = SparkEntry.queries(name)(spark, sfDir)
-            val plan = df.queryExecution.explainString(
-              org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+            val plan = maskPlan(df.queryExecution.explainString(
+              org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
             val w = new java.io.PrintWriter(s"$outDir/${name}_$suffix.txt", "UTF-8")
             try w.write(plan) finally w.close()
             System.err.println(f"[explain] $name%-28s ${(System.nanoTime() - t0) / 1e9}%.2fs")

@@ -554,8 +554,8 @@ object SparkEntry {
       table.rebucket(8)
       table.expireSnapshots(keepLast = 1)
       table.vacuum()
-      table.readColumns(Seq(
-        "c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment", "_offset"))
+      table.read(columns = Some(Seq(
+        "c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment", "_offset")))
     }),
     "cdc_strict_roundtrip" -> ((s, dir) => {
       // STRICT path inside the gate: decode with before-images + null-shape
@@ -600,7 +600,7 @@ object SparkEntry {
       // manifest-stats data skipping on the realistic CDC shape: two
       // time-windowed ingest commits (each commit's files carry a narrow
       // event-time range in their footer-harvested manifest stats), then
-      // a time-bounded readWhere that PRUNES the first commit's files
+      // a time-bounded read `where` that PRUNES the first commit's files
       // from the scan — at 10^10 rows this is the difference between
       // reading one commit and the whole table. (Two commits, not more:
       // the pruning logic is per-file, so extra commits only add judged
@@ -619,16 +619,16 @@ object SparkEntry {
       val t3 = 1706140800000000L // 2024-01-25
       table.append(ev.filter(col("ts_us") < t2), "w", 0L)
       table.append(ev.filter(col("ts_us") >= t2), "w", 1L)
-      table.readWhere(col("ts_us") >= t3)
+      table.read(where = Some(col("ts_us") >= t3))
         .select("event_id", "user_id", "event_type", "value", "ts")
     }),
     "cdc_lake_cluster" -> ((s, dir) => {
       // CLUSTER maintenance commit: the ingested subset is hash-bucketed,
       // so every data file spans ~the full `value` domain and a range
       // predicate prunes nothing; cluster(value) range-lays-out each
-      // bucket, after which the same readWhere keeps only the files
-      // whose [min,max] overlaps the range (the [lake-cluster] stderr
-      // line + kept-file fraction — at 10^10 rows this is the difference
+      // bucket, after which the same read `where` keeps only the files
+      // whose [min,max] overlaps the range (the kept-file fraction —
+      // at 10^10 rows this is the difference
       // between reading a bucket and reading the 2 files of it that
       // overlap the window).
       val ev = t(s, dir, "events").filter(col("event_id") % 4 === 0)
@@ -639,7 +639,7 @@ object SparkEntry {
         statsColumns = Seq("value"))
       table.append(ev, "a", 0L)
       table.cluster(Seq("value"))
-      table.readWhere(col("value") >= 100.0)
+      table.read(where = Some(col("value") >= 100.0))
         .select("event_id", "user_id", "event_type", "value")
     }),
     "cdc_lake_zorder" -> ((s, dir) => {
@@ -649,7 +649,7 @@ object SparkEntry {
       // column); the second commit exercises the INCREMENTAL path —
       // re-zorder under the cuts stored by the first pass (zorder.spec
       // table property), no fresh quantile sketch. The gate reads a
-      // two-sided slab back through readWhere, so pruning soundness is
+      // two-sided slab back through read `where`, so pruning soundness is
       // value-judged against the plain-SQL oracle.
       val cols = Seq("event_id", "user_id", "value")
       // %16 slices + 6-bit curve: the mod-class structure and the
@@ -666,7 +666,7 @@ object SparkEntry {
       table.zorder(Seq("user_id", "value"), bits = 6)
       table.append(slice(2), "b", 0L)
       table.zorder(Seq("user_id", "value"), bits = 6, reuseCuts = true)
-      table.readWhere(col("value") >= 50.0 && col("user_id") <= 100L)
+      table.read(where = Some(col("value") >= 50.0 && col("user_id") <= 100L))
         .select(cols.map(col): _*)
     }),
     "cdc_lake_delete" -> ((s, dir) => {
@@ -797,8 +797,8 @@ object SparkEntry {
       // manifest-backed FileIndex — snapshot isolation + StatsPruner
       // file skipping INSIDE Spark's scan planning, vectorized reader
       // and codegen untouched), queried in pure SQL. The value-range
-      // predicate prunes files via manifest stats ([lake-sql] stderr
-      // line) before pushing into the parquet scan.
+      // predicate prunes files via manifest stats (the scan's file
+      // count) before pushing into the parquet scan.
       val ev = t(s, dir, "events").filter(col("event_id") % 8 === 0)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       val tmp = graft.Scratch.dir("lake-sql-gate")
@@ -818,7 +818,7 @@ object SparkEntry {
       // REAL-TIME SQL view over an uncompacted merge-on-read snapshot:
       // the graft-lake relation detects outstanding deltas and plans
       // the reconstruction fold (LakeMorRelation: PrunedFilteredScan →
-      // readWhere) instead of a file scan — pushed columns and the
+      // LakeTable.read) instead of a file scan — pushed columns and the
       // value-range predicate reach BELOW the fold, so only the
       // requested columns of stats-surviving files are read. The
       // oracle recomputes the post-delta state by formula.
@@ -920,8 +920,8 @@ object SparkEntry {
       // bucket-pruned point lookup: hash the requested keys driver-side
       // with the writers' bucketing expression, scan ONLY those buckets,
       // broadcast-semi-join to the exact keys. At 10^10 rows this is the
-      // row-lookup primitive (the [lake-lookup] stderr line shows the
-      // bucket fraction scanned).
+      // row-lookup primitive (the plan's input files show the bucket
+      // fraction scanned).
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       val tmp = graft.Scratch.dir("lake-lookup-gate").toString

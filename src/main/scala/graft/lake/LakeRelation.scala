@@ -17,7 +17,7 @@ import org.apache.spark.sql.sources
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, Filter, PrunedFilteredScan, RelationProvider, StreamSinkProvider, StreamSourceProvider, TableScan}
 import org.apache.spark.sql.streaming.OutputMode
-import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType, TimestampType}
+import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StringType, StructField, StructType, TimestampType}
 
 import graft.decode.DecodeOptions
 import graft.model.ArcSchemaParser
@@ -52,8 +52,8 @@ import graft.streaming.CdcPipeline
   *  - REAL-TIME (outstanding merge-on-read deltas): reconstruction is
   *    a shuffle+aggregate plan a file scan cannot express, so the
   *    relation falls back to [[LakeMorRelation]] — a
-  *    PrunedFilteredScan that plans `LakeTable.readWhere` /
-  *    `readColumns`, keeping manifest stats pruning and column
+  *    PrunedFilteredScan that plans `LakeTable.read` with the pushed
+  *    columns and filters, keeping manifest stats pruning and column
   *    pruning PAST the fold (the scan reads only the requested +
   *    predicate columns), at the cost of a non-codegen Row boundary
   *    at the relation edge.
@@ -78,10 +78,11 @@ class LakeDataSource extends RelationProvider with CreatableRelationProvider
       parameters: Map[String, String]): BaseRelation = {
     val spark = ctx.sparkSession
     val table = tableFor(ctx, parameters)
-    if (opt(parameters, "history").exists(_.toBoolean))
-      // DESCRIBE HISTORY analog: commit audit log as a relation
-      return new LakeHistoryRelation(ctx, table)
-    if (opt(parameters, "readChangeFeed").exists(_.toBoolean)) {
+    def flag(name: String) = opt(parameters, name).exists(_.toBoolean)
+    val meta = LakeMetaRelation.selected(ctx, table, flag,
+      opt(parameters, "versionAsOf").map(_.toInt))
+    if (meta.isDefined) return meta.get
+    if (flag("readChangeFeed")) {
       // batch SQL view of the change feed (Delta's readChangeFeed
       // shape): the interval diff as a relation, for pure-SQL consumers
       val from = opt(parameters, "startingVersion").map(_.toInt).getOrElse(
@@ -90,18 +91,10 @@ class LakeDataSource extends RelationProvider with CreatableRelationProvider
       return new LakeChangesRelation(ctx, table, from,
         opt(parameters, "endingVersion").map(_.toInt))
     }
-    if (opt(parameters, "files").exists(_.toBoolean))
-      // Iceberg `table$files` analog: the manifest file inventory
-      return new LakeFilesRelation(ctx, table,
-        opt(parameters, "versionAsOf").map(_.toInt))
-    if (opt(parameters, "tags").exists(_.toBoolean))
-      // Iceberg `table$refs` analog: named refs and what they pin
-      return new LakeTagsRelation(ctx, table)
     // time travel by version number or by named tag ref
     val version = opt(parameters, "versionAsOf").map(_.toInt)
       .orElse(opt(parameters, "tagAsOf").map(table.resolveTag))
-    val snap = version.map(table.snapshot).orElse(table.currentSnapshot)
-      .getOrElse(sys.error(s"graft-lake: no table at ${table.root}"))
+    val snap = table.snapshotAt(version)
     val hasDeltas = snap.files.exists(_.delta)
     def fileRelation = {
       val index = new LakeFileIndex(spark, table, version)
@@ -214,7 +207,7 @@ class LakeDataSource extends RelationProvider with CreatableRelationProvider
 
   override def sourceSchema(ctx: SQLContext, schema: Option[StructType],
       providerName: String, parameters: Map[String, String]): (String, StructType) =
-    (shortName(), LakeChangeSource.feedSchema(tableFor(ctx, parameters)))
+    (shortName(), tableFor(ctx, parameters).snapshotAt(None).feedSchema)
 
   override def createSource(ctx: SQLContext, metadataPath: String,
       schema: Option[StructType], providerName: String,
@@ -294,7 +287,7 @@ class LakeChangeSource(ctx: SQLContext, table: LakeTable,
     startingVersion: Option[Int],
     maxVersionsPerBatch: Option[Int] = None) extends Source {
 
-  private val declared = LakeChangeSource.feedSchema(table)
+  private val declared = table.snapshotAt(None).feedSchema
 
   /** Highest version this source has offered or served — the base for
     * `maxVersionsPerBatch` rate limiting (Delta's maxFilesPerTrigger
@@ -329,16 +322,8 @@ class LakeChangeSource(ctx: SQLContext, table: LakeTable,
   override def getBatch(start: Option[V1Offset], end: V1Offset): DataFrame = {
     val to = versionOf(end)
     lastOffered = Some(math.max(lastOffered.getOrElse(-1), to))
-    val feed = start.map(versionOf).orElse(startingVersion) match {
-      case Some(from) => table.changes(from, Some(to))
-      case None => // bootstrap: current state as inserts, no diff join
-        val snap = table.snapshot(to)
-        val keyCols = snap.keyColumns
-        val payload = snap.schema.fieldNames.filterNot(keyCols.contains).toSeq
-        table.read(Some(to))
-          .select((keyCols ++ payload).map(col): _*)
-          .withColumn("_change_type", lit("insert"))
-    }
+    val feed = start.map(versionOf).orElse(startingVersion)
+      .fold(table.insertFeed(to))(table.changes(_, Some(to)))
     // pin the stream's declared projection (pre-evolution streams keep
     // their columns; the feed's to-schema may have grown)
     val projected = feed.select(declared.fieldNames.map(col).toSeq: _*)
@@ -349,108 +334,40 @@ class LakeChangeSource(ctx: SQLContext, table: LakeTable,
   override def stop(): Unit = ()
 }
 
-object LakeChangeSource {
-  /** key columns ++ payload columns ++ `_change_type` — the
-    * [[LakeTable.changes]] output shape. */
-  def feedSchema(table: LakeTable): StructType = {
-    val snap = table.currentSnapshot
-      .getOrElse(sys.error(s"graft-lake: no table at ${table.root}"))
-    val keyCols = snap.keyColumns
-    val payload = snap.schema.fields.filterNot(f => keyCols.contains(f.name))
-    StructType(
-      keyCols.map(n => snap.schema(snap.schema.fieldIndex(n))) ++
-        payload :+ StructField("_change_type", StringType, nullable = true))
-  }
+/** The table's metadata as relations — one row per entry, built on the
+  * driver from snapshot metadata, no data read (Iceberg's metadata
+  * tables) — chosen by an option set to 'true':
+  * {{{
+  *   CREATE TEMPORARY VIEW h USING `graft-lake` OPTIONS (path '<root>', history 'true')
+  * }}}
+  *  - `history` (`DESCRIBE HISTORY`): version | committed_at | operation
+  *    | details — one row per retained snapshot; `details` is the full
+  *    commit lineage (op counts, offset ranges, per-bucket breakdowns)
+  *    as JSON for ad-hoc SQL extraction;
+  *  - `tags` (Iceberg `table$refs`): tag | version | committed_at, the
+  *    PINNED snapshot's commit time (what the tag preserves);
+  *  - `files` (Iceberg `table$files`, `versionAsOf` honored): path |
+  *    bucket | seq | delta | patch | records | stats | null_counts, the
+  *    manifest inventory; `stats`/`null_counts` carry the per-column
+  *    footer-harvested min/max and null counts as JSON — the inputs
+  *    StatsPruner skips files by, so layout quality (clustering ranges,
+  *    file sizing, delta backlog per bucket) is auditable in plain SQL. */
+class LakeMetaRelation(ctx: SQLContext, name: String, override val schema: StructType,
+    rows: () => Seq[Row]) extends BaseRelation with TableScan {
+  override def sqlContext: SQLContext = ctx
+  override def buildScan(): RDD[Row] = ctx.sparkContext.parallelize(rows(), 1)
+  override def toString: String = name
 }
 
-/** `DESCRIBE HISTORY` analog — the commit audit log as a relation:
-  * {{{
-  *   CREATE TEMPORARY VIEW h USING `graft-lake` OPTIONS (
-  *     path '<root>', history 'true')
-  *   -- version | committed_at | operation | details (lineage JSON)
-  * }}}
-  * Metadata-only (one row per retained snapshot, built on the driver);
-  * `details` carries the full per-commit lineage — op counts, offset
-  * ranges, per-bucket breakdowns — as JSON for ad-hoc SQL extraction. */
-class LakeHistoryRelation(ctx: SQLContext, table: LakeTable)
-    extends BaseRelation with TableScan {
-
-  override def sqlContext: SQLContext = ctx
-
-  override val schema: StructType = StructType(Seq(
-    StructField("version", IntegerType, nullable = false),
-    StructField("committed_at", TimestampType, nullable = true),
-    StructField("operation", StringType, nullable = true),
-    StructField("details", StringType, nullable = true)))
-
-  override def buildScan(): RDD[Row] = {
-    val rows = table.historyDetail().map { case (v, ts, op, det) =>
-      Row(v, if (ts < 0) null else new java.sql.Timestamp(ts),
-        op.orNull, det.orNull)
-    }
-    ctx.sparkContext.parallelize(rows, 1)
-  }
-
-  override def toString: String = s"LakeHistoryRelation[${table.root}]"
-}
-
-/** Iceberg `table$refs` analog — the tag refs as a relation:
-  * {{{
-  *   CREATE TEMPORARY VIEW r USING `graft-lake` OPTIONS (
-  *     path '<root>', tags 'true')   -- tag | version | committed_at
-  * }}}
-  * `committed_at` is the PINNED SNAPSHOT's commit time (what the tag
-  * preserves), not the tag's creation time. */
-class LakeTagsRelation(ctx: SQLContext, table: LakeTable)
-    extends BaseRelation with TableScan {
-
-  override def sqlContext: SQLContext = ctx
-
-  override val schema: StructType = StructType(Seq(
-    StructField("tag", StringType, nullable = false),
-    StructField("version", IntegerType, nullable = false),
-    StructField("committed_at", TimestampType, nullable = true)))
-
-  override def buildScan(): RDD[Row] = {
-    val rows = table.tags().toSeq.sortBy(_._1).map { case (name, v) =>
-      val ts = table.snapshot(v).committedAtMs
-      Row(name, v, if (ts < 0) null else new java.sql.Timestamp(ts))
-    }
-    ctx.sparkContext.parallelize(rows, 1)
-  }
-
-  override def toString: String = s"LakeTagsRelation[${table.root}]"
-}
-
-/** Iceberg `table$files` analog — a snapshot's data-file inventory as
-  * a relation, straight from the manifests (no filesystem listing):
-  * {{{
-  *   CREATE TEMPORARY VIEW f USING `graft-lake` OPTIONS (
-  *     path '<root>', files 'true' [, versionAsOf '3'])
-  *   -- path | bucket | seq | delta | patch | records | stats | null_counts
-  * }}}
-  * `stats`/`null_counts` carry the per-column footer-harvested min/max
-  * and null counts as JSON — the inputs StatsPruner skips files by, so
-  * layout quality (clustering ranges, file sizing, delta backlog per
-  * bucket) is auditable in plain SQL. */
-class LakeFilesRelation(ctx: SQLContext, table: LakeTable,
-    version: Option[Int]) extends BaseRelation with TableScan {
-
-  override def sqlContext: SQLContext = ctx
-
-  override val schema: StructType = StructType(Seq(
-    StructField("path", StringType, nullable = false),
-    StructField("bucket", IntegerType, nullable = false),
-    StructField("seq", IntegerType, nullable = false),
-    StructField("delta", org.apache.spark.sql.types.BooleanType, nullable = false),
-    StructField("patch", org.apache.spark.sql.types.BooleanType, nullable = false),
-    StructField("records", org.apache.spark.sql.types.LongType, nullable = true),
-    StructField("stats", StringType, nullable = true),
-    StructField("null_counts", StringType, nullable = true)))
-
-  override def buildScan(): RDD[Row] = {
-    val snap = version.map(table.snapshot).orElse(table.currentSnapshot)
-      .getOrElse(sys.error(s"graft-lake: no table at ${table.root}"))
+object LakeMetaRelation {
+  /** The view whose option is on (`isOn`), if any; `files` lists `version`. */
+  def selected(ctx: SQLContext, table: LakeTable, isOn: String => Boolean,
+      version: Option[Int]): Option[LakeMetaRelation] = {
+    def view(name: String, fields: StructField*)(rows: => Seq[Row]) =
+      if (!isOn(name)) None
+      else Some(new LakeMetaRelation(ctx, s"LakeMetaRelation[$name ${table.root}]",
+        StructType(fields), () => rows))
+    def ts(ms: Long) = if (ms < 0) null else new java.sql.Timestamp(ms)
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     def json(m: Map[String, _]): String =
       if (m.isEmpty) null
@@ -462,12 +379,24 @@ class LakeFilesRelation(ctx: SQLContext, table: LakeTable,
         }
         mapper.writeValueAsString(node)
       }
-    val rows = snap.files.map(f => Row(f.path, f.bucket, f.seq, f.delta,
-      f.patch, if (f.rows < 0) null else f.rows, json(f.stats), json(f.nulls)))
-    ctx.sparkContext.parallelize(rows, 1)
+    view("history", StructField("version", IntegerType, false),
+        StructField("committed_at", TimestampType), StructField("operation", StringType),
+        StructField("details", StringType)) {
+      table.historyDetail().map { case (v, at, op, det) => Row(v, ts(at), op.orNull, det.orNull) }
+    } orElse view("tags", StructField("tag", StringType, false),
+        StructField("version", IntegerType, false), StructField("committed_at", TimestampType)) {
+      table.tags().toSeq.sortBy(_._1).map { case (tag, v) =>
+        Row(tag, v, ts(table.snapshot(v).committedAtMs))
+      }
+    } orElse view("files", StructField("path", StringType, false),
+        StructField("bucket", IntegerType, false), StructField("seq", IntegerType, false),
+        StructField("delta", BooleanType, false), StructField("patch", BooleanType, false),
+        StructField("records", LongType), StructField("stats", StringType),
+        StructField("null_counts", StringType)) {
+      table.snapshotAt(version).files.map(f => Row(f.path, f.bucket, f.seq, f.delta, f.patch,
+        if (f.rows < 0) null else f.rows, json(f.stats), json(f.nulls)))
+    }
   }
-
-  override def toString: String = s"LakeFilesRelation[${table.root}]"
 }
 
 /** Batch SQL view of the change feed between two committed versions:
@@ -490,14 +419,7 @@ class LakeChangesRelation(ctx: SQLContext, table: LakeTable,
 
   override def sqlContext: SQLContext = ctx
 
-  override val schema: StructType = {
-    val snap = table.snapshot(resolvedTo)
-    val keyCols = snap.keyColumns
-    val payload = snap.schema.fields.filterNot(f => keyCols.contains(f.name))
-    StructType(
-      keyCols.map(n => snap.schema(snap.schema.fieldIndex(n))) ++
-        payload :+ StructField("_change_type", StringType, nullable = true))
-  }
+  override val schema: StructType = table.snapshot(resolvedTo).feedSchema
 
   override def buildScan(): RDD[Row] =
     table.changes(fromVersion, Some(resolvedTo)).rdd
@@ -509,8 +431,8 @@ class LakeChangesRelation(ctx: SQLContext, table: LakeTable,
 /** REAL-TIME view of a merge-on-read snapshot: a V1
   * [[PrunedFilteredScan]] whose buildScan plans the lake's own
   * reconstruction read. The scan's pushed columns and filters reach
-  * BELOW the fold — `readColumns`/`readWhere` scan only the requested
-  * + predicate + key columns and StatsPruner-skip files/buckets the
+  * BELOW the fold — `LakeTable.read` scans only the requested +
+  * predicate + key columns and StatsPruner-skips files/buckets the
   * predicate cannot match — so SQL over an uncompacted table pays the
   * fold only for the data it actually touches. All filters are
   * re-applied by Spark above the relation (default unhandledFilters),
@@ -536,10 +458,7 @@ class LakeMorRelation(ctx: SQLContext, val table: LakeTable, snapVersion: Int)
     val cols =
       if (requiredColumns.nonEmpty) requiredColumns.toSeq
       else snap.keyColumns.take(1)
-    val df = pred match {
-      case Some(p) => table.readWhere(p, Some(snapVersion), Some(cols))
-      case None => table.readColumns(cols, Some(snapVersion))
-    }
+    val df = table.read(Some(snapVersion), Some(cols), pred)
     if (requiredColumns.nonEmpty) df.rdd else df.rdd.map(_ => Row.empty)
   }
 
@@ -583,8 +502,7 @@ class LakeMorRelation(ctx: SQLContext, val table: LakeTable, snapVersion: Int)
 class LakeFileIndex(spark: SparkSession, val table: LakeTable,
     version: Option[Int]) extends FileIndex {
 
-  private val snap = version.map(table.snapshot).orElse(table.currentSnapshot)
-    .getOrElse(sys.error(s"graft-lake: no table at ${table.root}"))
+  private val snap = table.snapshotAt(version)
   require(!snap.files.exists(_.delta),
     s"graft-lake: v${snap.version} at ${table.root} has outstanding " +
       "merge-on-read deltas; the SQL relation serves the read-optimized " +
@@ -604,14 +522,8 @@ class LakeFileIndex(spark: SparkSession, val table: LakeTable,
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val kept = dataFilters.reduceOption(And) match {
-      case None => snap.files
-      case Some(pred) =>
-        val (base, mor, total) = table.pruneForPredicate(snap, pred)
-        val k = base ++ mor // mor is empty: delta-free by construction
-        System.err.println(s"[lake-sql] kept=${k.size}/$total files")
-        k
-    }
+    // delta-free by construction: every kept file is a final-row file
+    val (kept, _) = table.pruneForPredicate(snap, snap.files, dataFilters.reduceOption(And))
     Seq(PartitionDirectory(InternalRow.empty,
       kept.map(f => statuses(f.path)).toArray))
   }

@@ -7,8 +7,10 @@ import com.fasterxml.jackson.databind.node.ObjectNode
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.graftshim.toCatalyst
 import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DateType,
   DoubleType, FloatType, IntegerType, LongType, ShortType, StringType,
   StructField, StructType, TimestampNTZType, TimestampType}
@@ -95,7 +97,7 @@ class LakeTable(val spark: SparkSession, val root: String) {
     * (min, max) in canonical form (Long / Double / String), harvested
     * from the parquet FOOTER at commit time for the table's
     * `statsColumns` — the basis for manifest-level data skipping
-    * ([[readWhere]]). Absent = unknown, never prunes. */
+    * ([[read]] with `where`). Absent = unknown, never prunes. */
   case class DataFile(path: String, bucket: Int, seq: Int = 0,
       delta: Boolean = false, patch: Boolean = false,
       stats: Map[String, (Any, Any)] = Map.empty,
@@ -123,6 +125,10 @@ class LakeTable(val spark: SparkSession, val root: String) {
         * stored z-order cut points enabling incremental re-zorder). */
       properties: Map[String, String] = Map.empty) {
     def files: Seq[DataFile] = manifests.flatMap(_.files)
+    def payloadColumns: Seq[String] = schema.fieldNames.filterNot(keyColumns.contains).toSeq
+    /** Change-feed rows: key columns ++ payload columns ++ `_change_type`. */
+    def feedSchema: StructType = StructType((keyColumns ++ payloadColumns).map(schema(_)) :+
+      StructField("_change_type", StringType, nullable = true))
   }
 
   /** Manifests are immutable once written — cache their parsed contents
@@ -210,6 +216,10 @@ class LakeTable(val spark: SparkSession, val root: String) {
   }
 
   def currentSnapshot: Option[Snapshot] = currentVersion.map(snapshot)
+
+  /** `version`'s snapshot, or the current one; raises when there is no table. */
+  def snapshotAt(version: Option[Int]): Snapshot =
+    version.map(snapshot).orElse(currentSnapshot).getOrElse(sys.error(s"no table at $root"))
 
   private def readFully(p: Path): String = {
     val in = fs.open(p)
@@ -395,7 +405,7 @@ class LakeTable(val spark: SparkSession, val root: String) {
 
   /** `statsColumns`: columns whose per-file min/max are harvested from
     * parquet footers at commit time and recorded in manifests, enabling
-    * [[readWhere]] data skipping. Supported types: integral, float
+    * data skipping in [[read]] with `where`. Supported types: integral, float
     * family, string, date, timestamp (others are rejected — no sound
     * ordering is recorded for them). Empty (the default) = zero
     * overhead.
@@ -516,7 +526,7 @@ class LakeTable(val spark: SparkSession, val root: String) {
     val expr = Pmod(new Murmur3Hash(refs.toSeq), CatLit(nBuckets))
     val conv = CatalystTypeConverters.createToCatalystConverter(keySchema)
     keys.map { k =>
-      expr.eval(conv(org.apache.spark.sql.Row.fromSeq(k)).asInstanceOf[InternalRow])
+      expr.eval(conv(Row.fromSeq(k)).asInstanceOf[InternalRow])
         .asInstanceOf[Int]
     }.toSet
   }
@@ -554,7 +564,7 @@ class LakeTable(val spark: SparkSession, val root: String) {
     val sorted = buckets.sorted
     val nParts = math.max(1, sorted.size * fpb)
     val inv = LakeTable.partitionPreimages(nParts)
-    val dense: org.apache.spark.sql.Column =
+    val dense: Column =
       if (sorted == (0 until sorted.size)) col("_bucket")
       else element_at(
         map(sorted.zipWithIndex.flatMap { case (b, i) => Seq(lit(b), lit(i)) }: _*),
@@ -563,87 +573,17 @@ class LakeTable(val spark: SparkSession, val root: String) {
     df.repartition(nParts, element_at(typedlit(inv.toSeq), slot + 1))
   }
 
-  /** Read a snapshot (current by default). Missing columns in old files
-    * surface as null through the declared schema. Buckets carrying delta
-    * files are LWW-reconstructed; delta-free buckets are plain scans. */
-  def read(version: Option[Int] = None): DataFrame = {
-    val snap = version.map(snapshot).orElse(currentSnapshot)
-      .getOrElse(sys.error(s"no table at $root"))
-    val (morFiles, pureBase) = splitMor(snap.files)
-    if (morFiles.isEmpty) readFiles(snap, pureBase)
-    else readFiles(snap, pureBase).unionByName(reconstructRows(snap, morFiles))
-  }
-
-  /** Column-pruned read: only `columns` (plus, internally, the key
-    * columns and `operation`) flow through the merge-on-read LWW
-    * aggregate, so the parquet scans read just those columns — `read()`
-    * followed by `.select` cannot prune past the reconstruction
-    * aggregate, whose buffer carries the full payload struct. At a
-    * 100-column table scanned for 2 columns this is the difference
-    * between reading 2% and 100% of the bytes. */
-  def readColumns(columns: Seq[String], version: Option[Int] = None): DataFrame = {
-    val snap = version.map(snapshot).orElse(currentSnapshot)
-      .getOrElse(sys.error(s"no table at $root"))
-    val bad = columns.filterNot(snap.schema.fieldNames.contains)
-    require(bad.isEmpty, s"unknown columns: ${bad.mkString(", ")}")
-    val (morFiles, pureBase) = splitMor(snap.files)
-    if (morFiles.isEmpty)
-      return readFiles(snap, pureBase).select(columns.map(col): _*)
-    val payload = columns.filterNot(snap.keyColumns.contains)
-    readFiles(snap, pureBase).select(columns.map(col): _*)
-      .unionByName(reconstructRows(snap, morFiles, Some(payload))
-        .select(columns.map(col): _*))
-  }
-
-  /** Predicate-pruned read: equivalent to `read().filter(pred)` but
-    * skips every data file whose manifest min/max stats prove it cannot
-    * contain a matching row — at 10^10 rows with a selective predicate
-    * on a stats column this reads a handful of files instead of the
-    * table. Soundness split:
-    *  - buckets WITHOUT deltas hold final rows → per-FILE pruning;
-    *  - buckets WITH deltas are LWW/patch-fold reconstructed, where a
-    *    final row can combine column values from several files → the
-    *    bucket is pruned only when the predicate cannot match the UNION
-    *    of all its files' ranges (drop-all-or-keep-all per bucket).
-    * Unknown stats / unsupported predicate shapes never prune; the
-    * surviving scan re-applies the full predicate. */
-  def readWhere(pred: org.apache.spark.sql.Column,
-      version: Option[Int] = None,
-      columns: Option[Seq[String]] = None): DataFrame = {
-    val snap = version.map(snapshot).orElse(currentSnapshot)
-      .getOrElse(sys.error(s"no table at $root"))
-    val e = org.apache.spark.sql.graftshim.toCatalyst(pred)
-    val (keptBase, keptMor, total) = pruneForPredicate(snap, e)
-    System.err.println(s"[lake-skip] kept=${keptBase.size + keptMor.size}/$total files")
-    // column pruning must reach PAST the MoR reconstruction aggregate
-    // (see readColumns): scan the requested columns plus whatever the
-    // predicate itself reads, project the requested set at the end
-    val outCols = columns.map { cs =>
-      val bad = cs.filterNot(snap.schema.fieldNames.contains)
-      require(bad.isEmpty, s"unknown columns: ${bad.mkString(", ")}")
-      cs
-    }
-    // scan set = requested ∪ predicate-read ∪ key columns (keys keep the
-    // two sides aligned and cost nothing extra in the MoR aggregate,
-    // which groups by them anyway), in schema order
-    val scanCols = outCols.map { cs =>
-      val want = (cs ++ predAttrs(e) ++ snap.keyColumns).toSet
-      snap.schema.fieldNames.toSeq.filter(want.contains)
-    }
-    val baseDf = {
-      val df = readFiles(snap, keptBase)
-      scanCols.map(cs => df.select(cs.map(col): _*)).getOrElse(df)
-    }
-    val morDf =
-      if (keptMor.isEmpty) {
-        val sch = StructType(scanCols
-          .map(cs => snap.schema.fields.filter(f => cs.contains(f.name)))
-          .getOrElse(snap.schema.fields))
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
-      } else reconstructRows(snap, keptMor,
-        scanCols.map(_.filterNot(snap.keyColumns.contains))).filter(pred)
-    val unioned = baseDf.filter(pred).unionByName(morDf)
-    outCols.map(cs => unioned.select(cs.map(col): _*)).getOrElse(unioned)
+  /** Read a snapshot (current by default): its rows, or just `columns`
+    * of the rows matching `where` — the same rows as
+    * `read().filter(where).select(columns)`, but both reach below the
+    * merge-on-read fold ([[scanOrFold]]): manifest stats skip the files
+    * that cannot match, and only the requested, predicate and key
+    * columns are read. Missing columns in old files surface as null
+    * through the declared schema. */
+  def read(version: Option[Int] = None, columns: Option[Seq[String]] = None,
+      where: Option[Column] = None): DataFrame = {
+    val snap = snapshotAt(version)
+    scanOrFold(snap, snap.files, columns, where)
   }
 
   /** Change-data-feed between two committed snapshots: one row per key
@@ -689,23 +629,19 @@ class LakeTable(val spark: SparkSession, val root: String) {
             s"(retained: ${listVersions.mkString("[", ",", "]")}); a stale " +
             "consumer/stream must re-bootstrap, or raise expireSnapshots retention")
       }
-    val to = toVersion.map(snapshot).orElse(currentSnapshot)
-      .getOrElse(sys.error(s"no table at $root"))
+    val to = snapshotAt(toVersion)
     require(from.version <= to.version,
       s"changes: from v${from.version} is newer than to v${to.version}")
     require(from.keyColumns == to.keyColumns,
       s"changes: key columns differ (${from.keyColumns} vs ${to.keyColumns})")
     val keyCols = to.keyColumns
-    val payloadCols = to.schema.fieldNames.filterNot(keyCols.contains).toSeq
+    val payloadCols = to.payloadColumns
     val sameLayout = from.nBuckets == to.nBuckets
     val fastFiles = if (sameLayout) intervalChangeFiles(from, to) else None
     if (fastFiles.exists(_.isEmpty)) {
       // layout/meta-only interval (compaction, clustering, evolution,
       // stats changes): no key can differ — empty feed, zero data read
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType((keyCols ++ payloadCols).map(n => to.schema(to.schema.fieldIndex(n))) :+
-          StructField("_change_type", StringType, nullable = true)))
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], to.feedSchema)
     }
     val buckets: Option[Set[Int]] =
       if (!sameLayout) None
@@ -746,9 +682,7 @@ class LakeTable(val spark: SparkSession, val root: String) {
   /** Incremental change-feed consumption: everything that changed since
     * `consumerId`'s last acknowledged version, plus the version the feed
     * runs to. First call (no position) BOOTSTRAPS: the full current
-    * state as `insert` rows — reading the snapshot directly instead of
-    * diffing against the empty v0 (same result, no join, and v0 may
-    * already be expired).
+    * state as `insert` rows ([[insertFeed]]).
     *
     * At-least-once by construction: process the feed durably, then
     * [[ackChanges]](consumerId, toVersion). A crash before the ack
@@ -764,14 +698,18 @@ class LakeTable(val spark: SparkSession, val root: String) {
           s"consumer '$consumerId' position v$from is expired; " +
             "re-bootstrap (delete the consumer) or raise expireSnapshots retention")
         (changes(from, Some(to)), to)
-      case None =>
-        val snap = snapshot(to)
-        val keyCols = snap.keyColumns
-        val payloadCols = snap.schema.fieldNames.filterNot(keyCols.contains).toSeq
-        (read(Some(to))
-          .select((keyCols ++ payloadCols).map(col): _*)
-          .withColumn("_change_type", lit("insert")), to)
+      case None => (insertFeed(to), to)
     }
+  }
+
+  /** Version `v`'s full state as `insert` rows, the change feed's
+    * bootstrap ([[changesSince]], the streaming source): read directly
+    * instead of diffed against the empty v0 (same result, no fold of two
+    * sides, and v0 may already be expired). */
+  private[lake] def insertFeed(v: Int): DataFrame = {
+    val snap = snapshot(v)
+    scanOrFold(snap, snap.files, Some(snap.keyColumns ++ snap.payloadColumns), None)
+      .withColumn("_change_type", lit("insert"))
   }
 
   /** Advance a consumer's acknowledged position (monotone; regressions
@@ -915,12 +853,10 @@ class LakeTable(val spark: SparkSession, val root: String) {
     * merge-on-read reconstruction, which then aggregates only those
     * buckets' files. `keys` are in declared key-column order. */
   def readKeys(keys: Seq[Seq[Any]], version: Option[Int] = None): DataFrame = {
-    val snap = version.map(snapshot).orElse(currentSnapshot)
-      .getOrElse(sys.error(s"no table at $root"))
+    val snap = snapshotAt(version)
     require(keys.nonEmpty, "readKeys: empty key set")
     require(keys.forall(_.length == snap.keyColumns.length),
       s"readKeys: each key must have ${snap.keyColumns.length} parts")
-    import org.apache.spark.sql.Row
     // key schema in DECLARED key-column order (schema field order would
     // silently hash swapped parts for a multi-part key declared out of
     // schema order — wrong buckets, empty or wrong lookups)
@@ -933,13 +869,7 @@ class LakeTable(val spark: SparkSession, val root: String) {
     // LocalRelation (no RDD job) — only used as the broadcast semi-join side
     val keyDf = spark.createDataFrame(
       keys.map(Row.fromSeq).asJava, keySchema)
-    val files = snap.files.filter(f => buckets.contains(f.bucket))
-    System.err.println(s"[lake-lookup] buckets=${buckets.size}/${snap.nBuckets} files=${files.size}/${snap.files.size}")
-    val (morFiles, pureBase) = splitMor(files)
-    val rows =
-      if (morFiles.isEmpty) readFiles(snap, pureBase)
-      else readFiles(snap, pureBase)
-        .unionByName(reconstructRows(snap, morFiles))
+    val rows = scanOrFold(snap, snap.files.filter(f => buckets.contains(f.bucket)), None, None)
     // Per-column IN filters push into the parquet scan: within the
     // chosen buckets the reader's row-group filter checks each file's
     // min/max, dictionary and bloom filter (bloomColumns) against the
@@ -956,8 +886,7 @@ class LakeTable(val spark: SparkSession, val root: String) {
   }
 
   /** Top-level column names a predicate reads. */
-  private def predAttrs(
-      e: org.apache.spark.sql.catalyst.expressions.Expression): Seq[String] = {
+  private def predAttrs(e: Expression): Seq[String] = {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.catalyst.expressions.AttributeReference
     val buf = Seq.newBuilder[String]
@@ -973,20 +902,26 @@ class LakeTable(val spark: SparkSession, val root: String) {
   private def colTypeOf(snap: Snapshot)(c: String): Option[DataType] =
     snap.schema.fields.find(_.name == c).map(_.dataType)
 
-  /** (kept final-row files, kept MoR files, total) for `pred`. */
-  private[graft] def pruneForPredicate(snap: Snapshot,
-      e: org.apache.spark.sql.catalyst.expressions.Expression)
-      : (Seq[DataFile], Seq[DataFile], Int) = {
-    val (morFiles, pureBase) = splitMor(snap.files)
-    val keptBase = pureBase.filter { f =>
-      StatsPruner.mayMatch(e, StatsPruner.FileStats(
-        f.stats.get, f.nulls.get,
-        if (f.rows >= 0) Some(f.rows) else None, colTypeOf(snap)))
+  /** `files` split into (files of delta-free buckets, files of
+    * delta-carrying buckets), less those manifest stats prove cannot
+    * hold a row matching `pred`. Delta-free buckets hold final rows and
+    * prune per FILE. A delta-carrying bucket's rows are folded, and a
+    * folded row can combine column values from several files, so the
+    * bucket is dropped only when `pred` cannot match the UNION of its
+    * files' ranges (all or none of its files). Unknown stats and
+    * unsupported predicate shapes never prune. */
+  private[graft] def pruneForPredicate(snap: Snapshot, files: Seq[DataFile],
+      pred: Option[Expression]): (Seq[DataFile], Seq[DataFile]) = {
+    val (base, mor) = splitMor(files)
+    pred.fold((base, mor)) { e =>
+      (base.filter { f =>
+        StatsPruner.mayMatch(e, StatsPruner.FileStats(
+          f.stats.get, f.nulls.get,
+          if (f.rows >= 0) Some(f.rows) else None, colTypeOf(snap)))
+      }, mor.groupBy(_.bucket).values.filter { fs =>
+        StatsPruner.mayMatch(e, mergedStats(fs, colTypeOf(snap)))
+      }.flatten.toSeq)
     }
-    val keptMor = morFiles.groupBy(_.bucket).values.filter { fs =>
-      StatsPruner.mayMatch(e, mergedStats(fs, colTypeOf(snap)))
-    }.flatten.toSeq
-    (keptBase, keptMor, snap.files.size)
   }
 
   /** Union of the files' statistics for bucket-granularity MoR pruning; a
@@ -1041,8 +976,8 @@ class LakeTable(val spark: SparkSession, val root: String) {
     val index = new FileIndex {
       override def rootPaths: Seq[Path] = Seq(new Path(root))
       override def listFiles(
-          partitionFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-          dataFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
+          partitionFilters: Seq[Expression],
+          dataFilters: Seq[Expression])
           : Seq[PartitionDirectory] =
         Seq(PartitionDirectory(InternalRow.empty, statuses))
       override def inputFiles: Array[String] = statuses.map(_.getPath.toString)
@@ -1059,17 +994,41 @@ class LakeTable(val spark: SparkSession, val root: String) {
     org.apache.spark.sql.graftshim.ofRows(spark, LogicalRelation(rel))
   }
 
-  private def readFiles(snap: Snapshot, files: Seq[DataFile]): DataFrame =
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snap.schema)
-    else
-      manifestParquetDf(snap.schema, files.map(_.path))
-
-  /** Buckets with deltas must be reconstructed; the rest hold final
-    * rows: (files of delta-carrying buckets, files of the others). */
+  /** Buckets with deltas must be folded; the rest hold final rows:
+    * (files of delta-free buckets, files of delta-carrying buckets). */
   private def splitMor(files: Seq[DataFile]): (Seq[DataFile], Seq[DataFile]) = {
     val deltaBuckets = files.filter(_.delta).map(_.bucket).toSet
-    files.partition(f => deltaBuckets.contains(f.bucket))
+    files.partition(f => !deltaBuckets.contains(f.bucket))
+  }
+
+  /** The one read path: the current rows of `files` (whole buckets of
+    * `snap`), or `columns` of those matching `where`. Files are pruned
+    * by manifest stats and split into delta-free and delta-carrying
+    * buckets ([[pruneForPredicate]]); the first are scanned, the second
+    * folded ([[reconstructRows]]), and a side without files is left
+    * out. Both sides read only the requested, predicate and key columns
+    * (keys align the sides and cost the fold nothing, as it groups by
+    * them): a `.select` above the fold cannot prune past its aggregate,
+    * whose buffer carries every payload column it is given — for 2
+    * columns of a 100-column table, 2% of the bytes instead of all of
+    * them. Columns come in the requested order, or the schema's. */
+  private def scanOrFold(snap: Snapshot, files: Seq[DataFile], columns: Option[Seq[String]],
+      where: Option[Column]): DataFrame = {
+    val out = columns.getOrElse(snap.schema.fieldNames.toSeq)
+    val bad = out.filterNot(snap.schema.fieldNames.contains)
+    require(bad.isEmpty, s"unknown columns: ${bad.mkString(", ")}")
+    val pred = where.map(toCatalyst)
+    val (base, mor) = pruneForPredicate(snap, files, pred)
+    val want = (out ++ pred.toSeq.flatMap(predAttrs) ++ snap.keyColumns).toSet
+    val scanCols = snap.schema.fieldNames.toSeq.filter(want.contains)
+    val sides =
+      (if (base.isEmpty) Nil
+      else Seq(manifestParquetDf(snap.schema, base.map(_.path)).select(scanCols.map(col): _*))) ++
+        (if (mor.isEmpty) Nil
+        else Seq(reconstructRows(snap, mor, scanCols.filterNot(snap.keyColumns.contains))))
+    sides.map(d => where.fold(d)(d.filter)).reduceOption(_ unionByName _)
+      .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], snap.schema))
+      .select(out.map(col): _*)
   }
 
   /** Input of the merge-on-read fold: every file of `sides` — base,
@@ -1107,13 +1066,12 @@ class LakeTable(val spark: SparkSession, val root: String) {
     }.drop("_file")
   }
 
-  /** Current rows of the given (delta-carrying) buckets' files: the
-    * `CdcApply.foldImages` reconstruction over one scan. */
+  /** Key and `payloadCols` columns of the current rows of the given
+    * (delta-carrying) buckets' files: the `CdcApply.foldImages`
+    * reconstruction over one scan. */
   private def reconstructRows(snap: Snapshot, files: Seq[DataFile],
-      payloadSubset: Option[Seq[String]] = None): DataFrame = {
+      payloadCols: Seq[String]): DataFrame = {
     val keyCols = snap.keyColumns
-    val payloadCols = payloadSubset.getOrElse(
-      snap.schema.fieldNames.filterNot(keyCols.contains).toSeq)
     CdcApply.foldImages(foldInput(snap.schema, Seq("_seq" -> files)), keyCols, payloadCols,
         files.exists(_.patch), Seq("_seq"))
       .filter(col("_seq").isNotNull)
@@ -1154,7 +1112,7 @@ class LakeTable(val spark: SparkSession, val root: String) {
   private def commit(op: String, replayKey: Option[(String, Long)] = None)(
       plan: Snapshot => Either[Snapshot, Change]): Snapshot = {
     val t0 = System.nanoTime()
-    val cur = currentSnapshot.getOrElse(sys.error(s"no table at $root"))
+    val cur = snapshotAt(None)
     def replayed(s: Snapshot) = replayKey.exists { case (id, b) => s.commits.get(id).exists(_ >= b) }
     if (replayed(cur)) return cur.copy(lineage = None)
     val c = plan(cur) match {
@@ -1288,14 +1246,14 @@ class LakeTable(val spark: SparkSession, val root: String) {
       strictValidate: Boolean = false): Snapshot =
     commit("merge", Some((checkpointId, batchId))) { cur =>
       val keyCols = cur.keyColumns
-      val payloadCols = cur.schema.fieldNames.filterNot(keyCols.contains).toSeq
+      val payloadCols = cur.payloadColumns
       // deltas are consumed twice (stats pass + merge fold): persist the
       // reduced batch rather than re-running decode+reduce upstream
       val withBucket = deltas.withColumn("_bucket", bucketCol(keyCols, cur.nBuckets))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
       try {
         // lineage aggregates + affected buckets in ONE pass over the deltas
-        val eventsCol: org.apache.spark.sql.Column =
+        val eventsCol: Column =
           if (deltas.columns.contains("n_events")) sum(col("n_events")).cast("long")
           else count(lit(1))
         val tStats0 = System.nanoTime()
@@ -1318,7 +1276,7 @@ class LakeTable(val spark: SparkSession, val root: String) {
           val merged = CdcApply.applyBatch(foldInput(cur.schema, Seq("_o" -> affectedFiles)),
             withBucket, cur.version + 1L, keyCols, payloadCols,
             affectedFiles.exists(_.patch) || deltas.columns.contains("_patch_mask"),
-            strictValidate, unique = Some(("_d", (k: org.apache.spark.sql.Column) =>
+            strictValidate, unique = Some(("_d", (k: Column) =>
               concat(lit("merge batch holds duplicate key '"), k, lit("'")))))
           // in-bucket salt lifts write parallelism above the affected-bucket
           // count when the cluster has idle slots
@@ -1346,13 +1304,6 @@ class LakeTable(val spark: SparkSession, val root: String) {
       } finally withBucket.unpersist()
     }
 
-  /** Current rows of a file subset: plain scan if no delta files are
-    * present, LWW reconstruction otherwise (lets `cluster` and `zorder`
-    * run on a table with outstanding deltas). */
-  private def snapshotRows(snap: Snapshot, files: Seq[DataFile]): DataFrame =
-    if (files.exists(_.delta)) reconstructRows(snap, files)
-    else readFiles(snap, files)
-
   /** MERGE-ON-READ commit: write the reduced delta batch as bucket-
     * partitioned delta files and append them to the snapshot — nothing is
     * read or rewritten, so commit cost is O(batch) in table size (the
@@ -1376,8 +1327,8 @@ class LakeTable(val spark: SparkSession, val root: String) {
     val next = commit("mergeDeltas", Some((checkpointId, batchId))) { cur =>
       val hasPatch = deltas.columns.contains("_patch_mask")
       val keyCols = cur.keyColumns
-      val payloadCols = cur.schema.fieldNames.filterNot(keyCols.contains).toSeq
-      val eventsCol: org.apache.spark.sql.Column =
+      val payloadCols = cur.payloadColumns
+      val eventsCol: Column =
         if (deltas.columns.contains("n_events")) sum(col("n_events")).cast("long")
         else count(lit(1)).cast("long")
       val withBucket = deltas.withColumn("_bucket", bucketCol(keyCols, cur.nBuckets))
@@ -1448,7 +1399,7 @@ class LakeTable(val spark: SparkSession, val root: String) {
     else {
       val targetFiles = cur.files.filter(f => target.contains(f.bucket))
       Right(Change(Fold,
-        stage(cur, "compact", reconstructRows(cur, targetFiles), target.toSeq),
+        stage(cur, "compact", scanOrFold(cur, targetFiles, None, None), target.toSeq),
         pathsOf(targetFiles), Seq("buckets" -> target.size)))
     }
   }
@@ -1459,7 +1410,7 @@ class LakeTable(val spark: SparkSession, val root: String) {
     * range-partitioned and sorted by `columns`, so sibling files inside
     * a bucket carry narrow, near-disjoint min/max ranges on those
     * columns instead of each spanning the whole domain. Manifest stats
-    * ([[readWhere]] / StatsPruner) then prune range predicates down to
+    * ([[read]] with `where`, StatsPruner) then prune range predicates down to
     * the few files whose range overlaps — the difference between
     * "bucket pruning only" and "bucket × range pruning" at 10^10 rows
     * is the fraction of each bucket read by a time-windowed query.
@@ -1478,7 +1429,7 @@ class LakeTable(val spark: SparkSession, val root: String) {
       if (targetFiles.isEmpty) Left(cur.copy(lineage = None))
       else {
         val layout = col("_bucket") +: columns.map(col)
-        val rows = snapshotRows(cur, targetFiles)
+        val rows = scanOrFold(cur, targetFiles, None, None)
           .withColumn("_bucket", bucketCol(cur.keyColumns, cur.nBuckets))
           .repartitionByRange(target.size * filesPerBucket(target.size), layout: _*)
           .sortWithinPartitions(layout: _*)
@@ -1515,7 +1466,7 @@ class LakeTable(val spark: SparkSession, val root: String) {
     require(columns.size >= 2 && columns.size <= 6,
       "zorder: 2-6 columns (one column: use cluster())")
     validateStatsColumns(cur.schema, columns)
-    def asDouble(c: String): org.apache.spark.sql.Column = {
+    def asDouble(c: String): Column = {
       val dt = cur.schema(cur.schema.fieldIndex(c)).dataType
       require(dt != StringType,
         s"zorder column '$c': strings have no order-preserving double mapping; use cluster()")
@@ -1531,7 +1482,7 @@ class LakeTable(val spark: SparkSession, val root: String) {
       // the persist pays for the quantile-sketch + write double pass; under
       // reuseCuts there is only the write pass — persisting would only add
       // a materialization
-      val rows0 = snapshotRows(cur, targetFiles)
+      val rows0 = scanOrFold(cur, targetFiles, None, None)
       val rows =
         if (reuseCuts) rows0
         else rows0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
@@ -1609,7 +1560,7 @@ class LakeTable(val spark: SparkSession, val root: String) {
     * commits touched disjoint buckets (write-serializable isolation —
     * the predicate applies to the BASE version's state, concurrent
     * inserts elsewhere survive); an overlap aborts. */
-  def deleteWhere(pred: org.apache.spark.sql.Column): Snapshot =
+  def deleteWhere(pred: Column): Snapshot =
     rewriteWhere(pred, None)
 
   /** `UPDATE ... SET col = expr WHERE pred`: same stats-bounded
@@ -1618,14 +1569,14 @@ class LakeTable(val spark: SparkSession, val root: String) {
     * the CDC merge path, where bucket routing follows the key).
     * Assignment expressions are cast to the column's declared type;
     * they may reference any table column (the pre-update row's values). */
-  def updateWhere(pred: org.apache.spark.sql.Column,
-      set: Map[String, org.apache.spark.sql.Column]): Snapshot = {
+  def updateWhere(pred: Column,
+      set: Map[String, Column]): Snapshot = {
     require(set.nonEmpty, "updateWhere: no assignments")
     rewriteWhere(pred, Some(set))
   }
 
-  private def rewriteWhere(pred: org.apache.spark.sql.Column,
-      set: Option[Map[String, org.apache.spark.sql.Column]]): Snapshot = {
+  private def rewriteWhere(pred: Column,
+      set: Option[Map[String, Column]]): Snapshot = {
     val opName = if (set.isEmpty) "deleteWhere" else "updateWhere"
     commit(opName) { cur =>
       set.foreach { assign =>
@@ -1634,29 +1585,25 @@ class LakeTable(val spark: SparkSession, val root: String) {
         val keyed = assign.keys.filter(cur.keyColumns.contains)
         require(keyed.isEmpty, s"updateWhere: cannot assign key columns ${keyed.mkString(", ")}")
       }
-      val e = org.apache.spark.sql.graftshim.toCatalyst(pred)
+      val e = toCatalyst(pred)
       val unknownAttrs = predAttrs(e).filterNot(cur.schema.fieldNames.contains)
       require(unknownAttrs.isEmpty,
         s"predicate references unknown columns: ${unknownAttrs.mkString(", ")}")
-      val (keptBase, keptMor, total) = pruneForPredicate(cur, e)
+      val (keptBase, keptMor) = pruneForPredicate(cur, cur.files, Some(e))
+      val kept = keptBase ++ keptMor
       // stats prove no row matches: a clean no-op, nothing committed
-      if (keptBase.isEmpty && keptMor.isEmpty) Left(cur.copy(lineage = None))
+      if (kept.isEmpty) Left(cur.copy(lineage = None))
       else {
         // MoR candidate buckets rewrite whole (reconstruction needs the
-        // bucket); delta-free candidates rewrite at file granularity —
-        // base files within a bucket are key-disjoint, so siblings keep
-        val morBuckets = keptMor.map(_.bucket).toSet
-        val morFiles = cur.files.filter(f => morBuckets.contains(f.bucket))
-        val basePaths = keptBase.map(_.path).toSet
-        val rewriteBuckets = morBuckets ++ keptBase.map(_.bucket)
-        val parts =
-          (if (morFiles.isEmpty) Nil else Seq(reconstructRows(cur, morFiles))) ++
-            (if (keptBase.isEmpty) Nil else Seq(readFiles(cur, keptBase)))
+        // bucket: the pruner keeps all of its files or none); delta-free
+        // candidates rewrite at file granularity — base files within a
+        // bucket are key-disjoint, so siblings keep
+        val rewriteBuckets = kept.map(_.bucket).toSet
         val obs = Observation()
-        val observed = parts.reduce(_ unionByName _).observe(obs,
+        val observed = scanOrFold(cur, kept, None, None).observe(obs,
           sum(when(pred, 1L).otherwise(0L)).as("matched"),
           count(lit(1)).cast("long").as("scanned"))
-        val out = (set match {
+        val out = set match {
           case None =>
             // keep rows where pred is false OR null (SQL DELETE semantics)
             observed.filter(!coalesce(pred, lit(false)))
@@ -1668,12 +1615,11 @@ class LakeTable(val spark: SparkSession, val root: String) {
                 case None => col(c)
               }
             }: _*)
-        }).select(cur.schema.fieldNames.toSeq.map(col): _*)
+        }
         val staged = stage(cur, opName, out, rewriteBuckets.toSeq)
         val m = obs.get
         def longOf(k: String): Long =
           Option(m.getOrElse(k, null)).map(_.asInstanceOf[Number].longValue).getOrElse(0L)
-        val rewrittenCount = morFiles.size + keptBase.size
         // Isolation is write-serializable, the Delta-lake default for
         // this race: the predicate applies to the table state as of this
         // commit's BASE version, so rows a racing writer inserted into
@@ -1682,14 +1628,13 @@ class LakeTable(val spark: SparkSession, val root: String) {
         // insert. The removal predicate stays sound on the new head
         // because the rebase check guarantees no interim commit touched
         // `rewriteBuckets`.
-        Right(Change(Rewrites(rewriteBuckets), staged,
-          f => morBuckets.contains(f.bucket) || basePaths.contains(f.path), Seq(
+        Right(Change(Rewrites(rewriteBuckets), staged, pathsOf(kept), Seq(
             "predicate" -> pred.toString,
             "matchedRows" -> longOf("matched"),
             "scannedRows" -> longOf("scanned"),
             "candidateBuckets" -> rewriteBuckets.size,
-            "prunedFiles" -> (total - rewrittenCount),
-            "rewrittenFiles" -> rewrittenCount)))
+            "prunedFiles" -> (cur.files.size - kept.size),
+            "rewrittenFiles" -> kept.size)))
       }
     }
   }
@@ -1707,7 +1652,7 @@ class LakeTable(val spark: SparkSession, val root: String) {
     require(newBuckets >= 1, s"invalid bucket count $newBuckets")
     if (newBuckets == cur.nBuckets) Left(cur.copy(lineage = None))
     else Right(Change(Exclusive,
-      stage(cur.copy(nBuckets = newBuckets), "rebucket", read(Some(cur.version)),
+      stage(cur.copy(nBuckets = newBuckets), "rebucket", scanOrFold(cur, cur.files, None, None),
         0 until newBuckets),
       removed = _ => true,
       lineage = Seq("fromBuckets" -> cur.nBuckets, "toBuckets" -> newBuckets),
@@ -1738,7 +1683,7 @@ class LakeTable(val spark: SparkSession, val root: String) {
     * commits' checkpoint entries are removed so the source batches can
     * be replayed. The recovery path for a bad batch. */
   def rollback(toVersion: Int): Snapshot = {
-    val cur = currentSnapshot.getOrElse(sys.error(s"no table at $root"))
+    val cur = snapshotAt(None)
     require(toVersion < cur.version, s"cannot roll back to $toVersion from ${cur.version}")
     require(listVersions.contains(toVersion),
       s"version $toVersion is expired or unknown; retained versions: " +

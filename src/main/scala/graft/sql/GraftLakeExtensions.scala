@@ -140,8 +140,7 @@ case class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
       fail("WITH SCHEMA EVOLUTION is not supported here — evolve the " +
         "table first (LakeTable.evolveSchema, or autoEvolve on the " +
         "ingest pipeline)")
-    val mergeSnap = new LakeTable(spark, root).currentSnapshot
-      .getOrElse(sys.error(s"graft-lake MERGE: no table at $root"))
+    val mergeSnap = new LakeTable(spark, root).snapshotAt(None)
     val keyCols = mergeSnap.keyColumns
     // ON: a conjunction of name-equal column equalities covering the keys
     def attrName(e: Expression): Option[String] = e match {
@@ -285,7 +284,7 @@ case class GraftInsertCommand(root: String, query: LogicalPlan,
     overwrite: Boolean, byName: Boolean) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
     val t = new LakeTable(spark, root)
-    val snap = t.currentSnapshot.getOrElse(sys.error(s"no table at $root"))
+    val snap = t.snapshotAt(None)
     val src = graftshim.ofRows(spark, query)
     val fields = snap.schema.fields
     val aligned =
@@ -319,7 +318,7 @@ case class GraftMergeCommand(root: String, source: LogicalPlan, op: String)
   override val output: Seq[Attribute] = GraftDml.affectedOutput
   override def run(spark: SparkSession): Seq[Row] = {
     val t = new LakeTable(spark, root)
-    val snap = t.currentSnapshot.getOrElse(sys.error(s"no table at $root"))
+    val snap = t.snapshotAt(None)
     val src = graftshim.ofRows(spark, source)
     val missing = snap.schema.fieldNames.filterNot(n =>
       src.columns.exists(_.equalsIgnoreCase(n)))

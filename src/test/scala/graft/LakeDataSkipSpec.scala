@@ -9,7 +9,7 @@ import graft.lake.{LakeTable, StatsPruner}
 import org.apache.spark.sql.graftshim.toCatalyst
 
 /** Manifest-stats data skipping: per-file min/max harvested from parquet
-  * footers at commit time; readWhere prunes files (final-row buckets) or
+  * footers at commit time; read `where` prunes files (final-row buckets) or
   * whole buckets (merge-on-read buckets, union-of-ranges) that cannot
   * match the predicate. The realistic CDC shape — each commit carries a
   * narrow event-time/offset window — is what makes this powerful: a
@@ -37,8 +37,8 @@ class LakeDataSkipSpec extends AnyFunSuite with SparkSessionTestWrapper {
 
   private def kept(t: LakeTable, pred: org.apache.spark.sql.Column): (Int, Int) = {
     val snap = t.currentSnapshot.get
-    val (a, b, total) = t.pruneForPredicate(snap, toCatalyst(pred))
-    (a.size + b.size, total)
+    val (a, b) = t.pruneForPredicate(snap, snap.files, Some(toCatalyst(pred)))
+    (a.size + b.size, snap.files.size)
   }
 
   test("footer stats record true per-file min/max (long + string)") {
@@ -65,7 +65,7 @@ class LakeDataSkipSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(tot == total)
     assert(k <= total / 3) // only the last commit's files survive
     // parity with the unpruned read
-    assert(t.readWhere(pred).collect().toSet ==
+    assert(t.read(where = Some(pred)).collect().toSet ==
       t.read().filter(pred).collect().toSet)
     // string predicate prunes too (names are zero-padded → ordered)
     val (ks, _) = kept(t, col("name") >= "n-000250")
@@ -81,13 +81,13 @@ class LakeDataSkipSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val opaque = expr("ts % 7 = 0")
     val (k, tot) = kept(t, opaque)
     assert(k == tot)
-    assert(t.readWhere(opaque).collect().toSet ==
+    assert(t.read(where = Some(opaque)).collect().toSet ==
       t.read().filter(opaque).collect().toSet)
     // stats column never configured → unknown → kept
     val t2 = newTable(Nil)
     t2.append(rows(0, 100), "a", 0L)
     val (k2, tot2) = kept(t2, col("ts") > 1000L)
-    assert(k2 == tot2 && t2.readWhere(col("ts") > 1000L).count() == 0)
+    assert(k2 == tot2 && t2.read(where = Some(col("ts") > 1000L)).count() == 0)
   }
 
   test("merge-on-read buckets prune at BUCKET granularity (union of ranges)") {
@@ -103,12 +103,12 @@ class LakeDataSkipSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // ALL files of delta buckets kept (base rows are needed to
     // reconstruct), nothing dropped incorrectly
     val inWindow = col("ts") >= 120L
-    assert(t.readWhere(inWindow).collect().toSet ==
+    assert(t.read(where = Some(inWindow)).collect().toSet ==
       t.read().filter(inWindow).collect().toSet)
     // predicate beyond every window: whole buckets pruned
     val (k, tot) = kept(t, col("ts") >= 1000L)
     assert(k == 0 && tot == snap.files.size)
-    assert(t.readWhere(col("ts") >= 1000L).count() == 0)
+    assert(t.read(where = Some(col("ts") >= 1000L)).count() == 0)
   }
 
   test("setStatsColumns mid-life: old files unknown (kept), new files prune") {
@@ -125,7 +125,7 @@ class LakeDataSkipSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // old files kept (unknown), some new files pruned is not guaranteed
     // per-file — but none of the OLD files may be dropped
     assert(k >= old.size && k < tot + 1)
-    assert(t.readWhere(pred).collect().toSet ==
+    assert(t.read(where = Some(pred)).collect().toSet ==
       t.read().filter(pred).collect().toSet)
   }
 
@@ -137,16 +137,16 @@ class LakeDataSkipSpec extends AnyFunSuite with SparkSessionTestWrapper {
     t.mergeDeltas(deltas, "mor", 1L) // all buckets now MoR
     val pred = col("ts") >= 40L && col("ts") < 130L
     val expect = t.read().filter(pred).select("id", "name").collect().toSet
-    val got = t.readWhere(pred, columns = Some(Seq("id", "name"))).collect().toSet
+    val got = t.read(columns = Some(Seq("id", "name")), where = Some(pred)).collect().toSet
     assert(got == expect)
     // predicate column (ts) not in the projection: still filters correctly
     val t2 = newTable(Seq("ts"))
     t2.append(rows(0, 100), "a", 0L) // pure base buckets
-    val got2 = t2.readWhere(col("ts") >= 90L, columns = Some(Seq("name"))).collect()
+    val got2 = t2.read(columns = Some(Seq("name")), where = Some(col("ts") >= 90L)).collect()
       .map(_.getString(0)).toSet
     assert(got2 == (90L until 100L).map(i => f"n-$i%06d").toSet)
     intercept[IllegalArgumentException] {
-      t2.readWhere(col("ts") >= 0L, columns = Some(Seq("nope")))
+      t2.read(columns = Some(Seq("nope")), where = Some(col("ts") >= 0L))
     }
   }
 
@@ -164,6 +164,78 @@ class LakeDataSkipSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(t.readKeys(Seq(Seq(5L))).select("name").head.getString(0) == "n-000005")
     intercept[IllegalArgumentException] { t.readKeys(Nil) }
     intercept[IllegalArgumentException] { t.readKeys(Seq(Seq(1L, 2L))) }
+  }
+
+  /** A 8-bucket table at two versions: buckets 0-2 carry LWW deltas
+    * (updates moving `ts` past 1000, deletes), bucket 3 a patch delta
+    * (only `name` set) at the second version, buckets 4-7 stay delta-free. */
+  private def mixedTable(): (LakeTable, Seq[Int]) = {
+    val tmp = java.nio.file.Files.createTempDirectory("lake-one-path").toString
+    val t = new LakeTable(spark, tmp)
+    t.create(schema, Seq("id"), nBuckets = 8, statsColumns = Seq("ts"))
+    t.append(rows(0, 400), "a", 0L)
+    val bucketed = rows(0, 400).withColumn("b", pmod(hash(col("id")), lit(8)))
+    t.mergeDeltas(bucketed.filter(col("b") < 3 && col("id") % 3 === 0)
+      .select(col("id"), concat(lit("u-"), col("name")).as("name"), (col("ts") + 1000L).as("ts"),
+        when(col("id") % 2 === 0, lit("d")).otherwise(lit("u")).as("operation"),
+        col("id").as("offset")), "m", 1L)
+    val vLww = t.currentVersion.get
+    t.mergeDeltas(bucketed.filter(col("b") === 3 && col("id") % 2 === 0)
+      .select(col("id"), concat(lit("p-"), col("name")).as("name"), lit(null).cast("long").as("ts"),
+        lit("u").as("operation"), col("id").as("offset"), array(lit("name")).as("_patch_mask")),
+      "m", 2L)
+    val files = t.currentSnapshot.get.files
+    assert(files.exists(_.patch) && files.filterNot(_.delta).map(_.bucket).toSet.size > 1)
+    (t, Seq(vLww, t.currentVersion.get))
+  }
+
+  test("one read path: read(columns, where), readKeys and the SQL views equal read() filtered") {
+    val (t, versions) = mixedTable()
+    def same(got: DataFrame, want: DataFrame, what: String): Unit =
+      assert(got.collect().toSet == want.collect().toSet, what)
+    val preds = Seq("ts >= 150", "ts < 50 OR ts >= 1100", "name LIKE 'u-%'", "ts IS NULL")
+    val projections = Seq(None, Some(Seq("name")), Some(Seq("ts", "id")))
+    versions.foreach { v =>
+      val all = t.read(Some(v))
+      for (p <- preds; cols <- projections) {
+        val want = all.filter(expr(p)).select(cols.getOrElse(all.columns.toSeq).map(col): _*)
+        same(t.read(Some(v), cols, Some(expr(p))), want, s"v$v read($cols, $p)")
+        for (view <- Seq("auto", "realtime")) {
+          val rel = spark.read.format("graft-lake").option("versionAsOf", v.toLong)
+            .option("view", view).load(t.root)
+          same(rel.where(p).select(cols.getOrElse(rel.columns.toSeq).map(col): _*), want,
+            s"v$v $view view ($cols, $p)")
+        }
+      }
+      // no predicate, columns only, in the requested order
+      assert(t.read(Some(v), Some(Seq("ts", "name"))).columns.toSeq == Seq("ts", "name"))
+      same(t.read(Some(v), Some(Seq("ts", "name"))), all.select("ts", "name"), s"v$v columns")
+      val keys = Seq(0L, 3L, 7L, 12L, 150L, 399L, 4000L)
+      same(t.readKeys(keys.map(Seq(_)), Some(v)), all.filter(col("id").isin(keys: _*)),
+        s"v$v readKeys")
+      // zero-column scan through the fold
+      val rt = spark.read.format("graft-lake").option("versionAsOf", v.toLong)
+        .option("view", "realtime").load(t.root)
+      assert(rt.count() == all.count())
+    }
+    val e = intercept[IllegalArgumentException](t.read(columns = Some(Seq("id", "nope"))))
+    assert(e.getMessage.contains("unknown columns: nope"))
+  }
+
+  test("read() of a table whose every bucket carries deltas plans one file scan and no union") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec, UnionExec}
+    val t = newTable(Seq("ts"))
+    t.append(rows(0, 100), "a", 0L)
+    t.mergeDeltas(rows(0, 100).withColumn("operation", lit("u"))
+      .withColumn("offset", col("id")), "m", 1L)
+    assert(t.currentSnapshot.get.files.filter(_.delta).map(_.bucket).toSet.size == 4)
+    for (df <- Seq(t.read(), t.read(where = Some(col("ts") >= 50L)))) {
+      val plan = df.queryExecution.sparkPlan
+      assert(plan.collect { case s: FileSourceScanExec => s }.size == 1, plan.treeString)
+      assert(plan.collect { case s: RDDScanExec => s }.isEmpty, plan.treeString)
+      assert(plan.collect { case u: UnionExec => u }.isEmpty, plan.treeString)
+      assert(df.columns.toSeq == Seq("id", "name", "ts"))
+    }
   }
 
   test("cross-file column combination cannot be pruned by per-file logic (union semantics)") {
@@ -198,7 +270,7 @@ class LakeDataSkipSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(kNotNull == c0.size)
     // results match the unpruned read on all three shapes
     for (p <- Seq(col("name").isNull, col("name").isNotNull, !(col("ts") >= 100L)))
-      assert(t.readWhere(p).collect().toSet == t.read().filter(p).collect().toSet)
+      assert(t.read(where = Some(p)).collect().toSet == t.read().filter(p).collect().toSet)
     // NOT over a comparison prunes via the complement (ts >= 100 → ts < 100)
     val (kNot, _) = kept(t, !(col("ts") >= 100L))
     assert(kNot == c0.size)
@@ -221,11 +293,11 @@ class LakeDataSkipSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val pred = col("d").cast("int") === 6
     val (k, tot) = kept(t, pred)
     assert(k == tot, "narrowing cast must be opaque (kept), not pruned")
-    assert(t.readWhere(pred).count() == 50)
+    assert(t.read(where = Some(pred)).count() == 50)
     // a lossless widening cast (long id → double) still prunes
     val (kw, _) = kept(t, col("id").cast("double") >= 1000.0)
     assert(kw == 0)
-    assert(t.readWhere(col("id").cast("double") >= 1000.0).count() == 0)
+    assert(t.read(where = Some(col("id").cast("double") >= 1000.0)).count() == 0)
   }
 
   test("readKeys multi-part key: declared key order differing from schema order (ADVICE regression)") {
@@ -285,9 +357,9 @@ class LakeDataSkipSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val (k, total) = kept(t, pred)
     assert(k < total, s"timestamp range predicate kept $k/$total files")
     // and the answer matches the unpruned filter
-    assert(t.readWhere(pred).count() ==
+    assert(t.read(where = Some(pred)).count() ==
       t.read().filter(pred).count())
-    assert(t.readWhere(pred).count() == 900)
+    assert(t.read(where = Some(pred)).count() == 900)
   }
 
   test("pruner leaf coverage: IN, STARTSWITH, flipped operands, OR") {

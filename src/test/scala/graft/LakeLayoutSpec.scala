@@ -127,14 +127,14 @@ class LakeLayoutSpec extends AnyFunSuite with SparkSessionTestWrapper {
       val v1 = t.currentVersion.get
       val pred = col("v") >= 9000 && col("v") < 9500
       val filesBefore = t.currentSnapshot.get.files.size
-      val keptBefore = t.readWhere(pred).inputFiles.length
+      val keptBefore = t.read(where = Some(pred)).inputFiles.length
       assert(keptBefore == filesBefore, "pre-cluster: nothing should prune")
       val sortedBefore = t.read().collect().map(r => (r.getLong(0), r.getLong(1))).sorted
 
       t.cluster(Seq("v"))
       val v2 = t.currentVersion.get
       val filesAfter = t.currentSnapshot.get.files.size
-      val keptAfter = t.readWhere(pred).inputFiles.length
+      val keptAfter = t.read(where = Some(pred)).inputFiles.length
       assert(keptAfter * 2 <= filesAfter,
         s"post-cluster: kept $keptAfter of $filesAfter files for a 5% range")
       // logical state identical; the change feed across a cluster commit is empty
@@ -142,7 +142,7 @@ class LakeLayoutSpec extends AnyFunSuite with SparkSessionTestWrapper {
         .sameElements(sortedBefore))
       assert(t.changes(v1, Some(v2)).count() == 0)
       // answers match a plain filter
-      assert(t.readWhere(pred).count() ==
+      assert(t.read(where = Some(pred)).count() ==
         rows.filter(pred).count())
     } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
   }
@@ -188,8 +188,8 @@ class LakeLayoutSpec extends AnyFunSuite with SparkSessionTestWrapper {
       // lexicographic cluster on (x, y): only the LEADING column prunes
       t.cluster(Seq("x", "y"))
       val files = t.currentSnapshot.get.files.size
-      val lexX = t.readWhere(predX).inputFiles.length
-      val lexY = t.readWhere(predY).inputFiles.length
+      val lexX = t.read(where = Some(predX)).inputFiles.length
+      val lexY = t.read(where = Some(predY)).inputFiles.length
       assert(lexX * 2 <= files, s"leading column should prune ($lexX/$files)")
       assert(lexY * 2 > files,
         s"trailing column barely prunes lexicographically ($lexY/$files)")
@@ -198,14 +198,14 @@ class LakeLayoutSpec extends AnyFunSuite with SparkSessionTestWrapper {
       t.zorder(Seq("x", "y"))
       val v2 = t.currentVersion.get
       val filesZ = t.currentSnapshot.get.files.size
-      val zX = t.readWhere(predX).inputFiles.length
-      val zY = t.readWhere(predY).inputFiles.length
+      val zX = t.read(where = Some(predX)).inputFiles.length
+      val zY = t.read(where = Some(predY)).inputFiles.length
       assert(zX * 2 <= filesZ, s"x under z-order: kept $zX of $filesZ")
       assert(zY * 2 <= filesZ, s"y under z-order: kept $zY of $filesZ")
       // logical state unchanged: empty feed, parity answers
       assert(t.changes(v1, Some(v2)).count() == 0)
-      assert(t.readWhere(predY).count() == rows.filter(predY).count())
-      assert(t.readWhere(predX).count() == rows.filter(predX).count())
+      assert(t.read(where = Some(predY)).count() == rows.filter(predY).count())
+      assert(t.read(where = Some(predX)).count() == rows.filter(predX).count())
       assert(t.read().count() == 40000)
     } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
   }
@@ -247,7 +247,7 @@ class LakeLayoutSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(snap.properties.get("zorder.spec") == spec, "stored cuts unchanged by reuse")
     assert(t.read().count() == 12000)
     val pred = col("y") >= 4000L && col("y") < 4500L
-    assert(t.readWhere(pred).count() == mkRows(0, 12000).filter(pred).count())
+    assert(t.read(where = Some(pred)).count() == mkRows(0, 12000).filter(pred).count())
 
     // a mismatched request must not silently mix curve geometries
     val bad = intercept[IllegalArgumentException] {

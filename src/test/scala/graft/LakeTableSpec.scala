@@ -272,7 +272,7 @@ class LakeTableSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val t = tmpTable()
     t.mergeDeltas(deltasOf(wl, i => i < n / 2), "cp", 0L)
     t.mergeDeltas(deltasOf(wl, i => i >= n / 2), "cp", 1L)
-    val pruned = t.readColumns(Seq("conv_id", "turn_idx", "text"))
+    val pruned = t.read(columns = Some(Seq("conv_id", "turn_idx", "text")))
     // values identical to the unpruned read
     val full = t.read().select("conv_id", "turn_idx", "text")
     assert(stateSet(pruned) == stateSet(full))
